@@ -282,6 +282,18 @@ def bucketed_exact_quantiles(df: DataFrame, part_cols: list[str],
     return out.select(*part_cols, F.col("_n").alias("n"), *qcols)
 
 
+#: Most band-stats rows ``state_exact_quantiles`` collects to the
+#: driver. The value domain bounds the band count (``double_value_bucket``
+#: contract); a relation past this cap means the bucket no longer
+#: coarsens the domain, and collecting it would move data-sized rows.
+STATE_BAND_CAP = 65_536
+
+
+class BandStateTooLargeError(RuntimeError):
+    """The band-stats relation handed to ``state_exact_quantiles`` has
+    more than ``STATE_BAND_CAP`` rows."""
+
+
 def state_exact_quantiles(stats: DataFrame, store_reader,
                           value: str,
                           probs: list[float]) -> DataFrame:
@@ -327,13 +339,21 @@ def state_exact_quantiles(stats: DataFrame, store_reader,
     tests/test_physical_layout.py::
     test_streaming_staircase_matches_batch_and_is_bucket_partitioned.
 
+    The collect reads at most ``STATE_BAND_CAP + 1`` rows and raises
+    ``BandStateTooLargeError`` when there are more than
+    ``STATE_BAND_CAP``.
+
     Returns one row: ``n`` (long) + ``q0, q1, ...`` (double)."""
     import math
 
     spark = stats.sparkSession
-    rows = sorted(stats.select("_qb", "_bn", "_bmin", "_bmax")
-                       .collect(),
-                  key=lambda r: r["_qb"])
+    rows = (stats.select("_qb", "_bn", "_bmin", "_bmax")
+                 .limit(STATE_BAND_CAP + 1).collect())
+    if len(rows) > STATE_BAND_CAP:
+        raise BandStateTooLargeError(
+            f"band-stats relation has more than {STATE_BAND_CAP} "
+            "bands; coarsen the value bucket")
+    rows.sort(key=lambda r: r["_qb"])
     n = int(sum(int(r["_bn"]) for r in rows))
     if n == 0:
         # empty state: the old plan's inner rank joins matched nothing

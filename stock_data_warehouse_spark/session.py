@@ -23,6 +23,33 @@ The defaults encode the 100 TB posture from SURVEY.md §6/§7:
   cluster, where losing any executor discards local blocks whose
   lineage was just truncated and kills a long trainer run). Both are
   plain session confs, settable at runtime per job.
+
+Memory
+------
+
+- **Tungsten pages off the JVM heap.** ``spark.memory.offHeap.enabled``
+  with a 4g pool moves the execution memory of hash aggregation, sort
+  and shuffle write into native pages. With an 8g heap, Spark sizes
+  each on-heap page at 64 MB of ``long[]``; G1 stores every such page
+  as a humongous object and zeroes it on allocation. The last five
+  young GCs of a ``corpus_curation`` benchmark run at sf0.01 left
+  225–241 humongous regions (~0.9 GB) in place, against 1–10 with
+  native pages (``tools/gc_probe.py``). A native page is freed when its
+  task ends, only the bytes a task touches become resident, and G1
+  neither zeroes nor collects it.
+  4g is close to the execution budget the heap gives Tungsten on its
+  own (0.6 × (8g − 300m) ≈ 4.6g).
+- **Process ceiling.** The driver JVM may therefore grow to 8 GB of
+  heap plus 4 GB of off-heap pages, plus its own metaspace, code cache
+  and thread stacks. In ``local[N]`` that is the whole engine.
+- **Clusters.** On YARN and Kubernetes ``spark.memory.offHeap.size``
+  counts toward each executor container's memory request, on top of
+  ``spark.executor.memory`` and its overhead; size containers for the
+  sum.
+- **A leak is permanent.** Native pages are released only by the
+  memory manager; no GC ever reclaims one. tests/test_session_memory.py
+  checks that execution memory reads 0 after an aggregation and a
+  sort.
 """
 
 from __future__ import annotations
@@ -64,6 +91,19 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.parquet.filterPushdown": "true",
     "spark.ui.enabled": "false",
     "spark.driver.memory": "8g",
+    # Tungsten execution pages in native memory (module docstring,
+    # "Memory").
+    "spark.memory.offHeap.enabled": "true",
+    "spark.memory.offHeap.size": "4g",
+    # One corpus_curation pass generates ~180 distinct sources (first-
+    # pass Janino compiles: x3 80, x2 52–57, x1 16–18, x4 13–17, x9
+    # 15–17), more than Spark's default LRU of 100 entries, which then
+    # misses almost every time: a repeated pass recompiled 177–181
+    # sources at sf0.001 and sf0.01 (CodegenMetrics). With 1000 entries
+    # a repeated pass recompiles 0–4, and a warehouse_queries pass
+    # (102 first-pass compiles) recompiles none. Static conf: it takes
+    # effect only when this factory creates the session.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -87,6 +127,16 @@ def get_spark(app_name: str = "stock-data-warehouse-spark",
     spark = builder.getOrCreate()
     _quiet_windowexec_warning(spark)
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles this JVM has run so far (``CodegenMetrics``).
+
+    A compile is a codegen-cache miss. The cache is keyed by class
+    loader as well as by source, so in ``local[N]`` a source can
+    compile twice: once on the driver and once in a task thread."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    return int(metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def _quiet_windowexec_warning(spark: SparkSession) -> None:

@@ -1724,6 +1724,11 @@ def _par_actions(*thunks) -> list:
         return [f.result() for f in [pool.submit(t) for t in thunks]]
 
 
+class RefereeSchemaError(ValueError):
+    """``_multiset_eq`` was handed two relations whose column sets
+    differ."""
+
+
 def _multiset_eq(a: DataFrame, b: DataFrame, name: str) -> DataFrame:
     """1-row boolean ``name``: multiset equality of two same-schema
     relations in ONE pass over each side. The r12–r15 form ran
@@ -1739,8 +1744,16 @@ def _multiset_eq(a: DataFrame, b: DataFrame, name: str) -> DataFrame:
     aggregation). NULLs and NaNs group exactly as exceptAll compares
     them (NULL == NULL, normalized NaN), so the boolean matches the
     old form on ANY input, including the failure cases the referee
-    exists to catch."""
+    exists to catch.
+
+    Raises ``RefereeSchemaError`` when the two column sets differ: a
+    referee that compared only ``a``'s columns of a wider ``b`` would
+    pass on a projection in silence."""
     cols = a.columns
+    if set(cols) != set(b.columns):
+        raise RefereeSchemaError(
+            f"{name}: column sets differ: {sorted(cols)} vs "
+            f"{sorted(b.columns)}")
     per = (a.select(*cols, F.lit(1).alias("_w"))
             .unionByName(b.select(*cols, F.lit(-1).alias("_w")))
             .groupBy(*cols).agg(F.sum("_w").alias("_s")))

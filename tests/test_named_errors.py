@@ -1,0 +1,54 @@
+"""Conventions that are enforced as named errors, one trigger each
+(ROADMAP aim 3: fail loudly and early)."""
+
+import pytest
+from pyspark.sql import functions as F
+
+from stock_data_warehouse_spark.operators import staircase
+from stock_data_warehouse_spark.operators.staircase import (
+    STATE_BAND_CAP, BandStateTooLargeError, state_exact_quantiles,
+)
+from stock_data_warehouse_spark.streaming.jobs import (
+    RefereeSchemaError, _multiset_eq,
+)
+
+
+def _band_stats(spark, n_bands):
+    return spark.range(n_bands).select(
+        F.col("id").alias("_qb"), F.lit(1).cast("long").alias("_bn"),
+        F.col("id").cast("double").alias("_bmin"),
+        F.col("id").cast("double").alias("_bmax"))
+
+
+def _no_store(band_ids):
+    raise AssertionError("single-valued bands need no store read")
+
+
+def test_state_quantiles_collect_is_capped(spark):
+    """One band past the cap raises instead of collecting a
+    data-sized relation to the driver."""
+    with pytest.raises(BandStateTooLargeError):
+        state_exact_quantiles(_band_stats(spark, STATE_BAND_CAP + 1),
+                              _no_store, "value", [0.5])
+
+
+def test_state_quantiles_at_the_cap_still_answers(spark, monkeypatch):
+    monkeypatch.setattr(staircase, "STATE_BAND_CAP", 8)
+    row = state_exact_quantiles(_band_stats(spark, 8), _no_store,
+                                "value", [0.0, 0.5, 1.0]).collect()[0]
+    assert (row["n"], row["q0"], row["q1"], row["q2"]) == (
+        8, 0.0, 3.5, 7.0)
+    with pytest.raises(BandStateTooLargeError):
+        state_exact_quantiles(_band_stats(spark, 9), _no_store,
+                              "value", [0.5])
+
+
+def test_referee_rejects_unequal_column_sets(spark):
+    """Comparing a relation with a projection of it would check only
+    the shared columns and pass in silence."""
+    a = spark.range(5).select("id", (F.col("id") * 2).alias("v"))
+    with pytest.raises(RefereeSchemaError):
+        _multiset_eq(a, a.select("id"), "same")
+    # column order does not matter, only the set
+    assert _multiset_eq(a, a.select("v", "id"), "same").first()["same"]
+    assert not _multiset_eq(a, a.filter("id > 0"), "same").first()["same"]

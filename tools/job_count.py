@@ -12,6 +12,12 @@ taken as the distance between two single-job markers run in the
 default (group-less) job group — this also counts jobs the streaming
 engine launches under its own job groups, which
 ``getJobIdsForGroup(None)`` alone would miss.
+
+Each line also gives the query's codegen compile count (Janino compiles,
+i.e. codegen-cache misses, ``session.codegen_compiles``) and the jobs
+and compiles of an immediate second run. A second run that still
+compiles most of what the first did means the codegen cache is too
+small for the query (session.py, ``spark.sql.codegen.cache.maxEntries``).
 """
 
 from __future__ import annotations
@@ -27,7 +33,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def main() -> int:
     names = sys.argv[1:]
-    from stock_data_warehouse_spark.session import get_spark
+    from stock_data_warehouse_spark.session import (codegen_compiles,
+                                                   get_spark)
     import __spark_entry__ as entry_mod
 
     spark = get_spark("job-count")
@@ -38,13 +45,19 @@ def main() -> int:
         sc.range(1).count()
         return max(sc.statusTracker().getJobIdsForGroup(None))
 
-    spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()  # warm
-    for name in names:
-        lo = marker_id()
+    def run(name: str) -> tuple[int, int]:
+        lo, c0 = marker_id(), codegen_compiles(spark)
         df = qs[name](spark, SF_DIR)
         df.write.format("noop").mode("overwrite").save()
-        hi = marker_id()
-        print(f"{name}: {hi - lo - 1} jobs")
+        c1 = codegen_compiles(spark)  # before the marker's own codegen
+        return marker_id() - lo - 1, c1 - c0
+
+    spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()  # warm
+    for name in names:
+        jobs, compiles = run(name)
+        jobs2, compiles2 = run(name)
+        print(f"{name}: {jobs} jobs, {compiles} compiles "
+              f"(second run: {jobs2} jobs, {compiles2} compiles)")
     spark.stop()
     return 0
 
