@@ -48,9 +48,10 @@ def oracle_map() -> dict[str, str]:
 _LOADED = False
 
 
-#: Every module that registers queries. Imported lazily by name so a
-#: module that fails to import (e.g. mid-development) degrades to "its
-#: queries are absent" instead of taking the whole catalog down.
+#: Every module that registers queries, imported lazily by name. A
+#: module that fails to import raises ``CatalogImportError``: a
+#: catalog that silently lost a module's queries would still pass
+#: every check of the queries it kept.
 _PLAN_MODULES = (
     "relational", "scalar", "windows", "extensions",
     "timeseries", "reference_pipeline", "sampling", "analytics",
@@ -65,22 +66,28 @@ _EXTRA_MODULES = (
 )
 
 
+class CatalogImportError(ImportError):
+    """A query-registering module (``name``) failed to import; the
+    cause is chained. Any exception counts (e.g. a Column built at
+    import time raises AssertionError when no SparkContext exists
+    yet)."""
+
+    def __init__(self, mod: str):
+        super().__init__(f"query module {mod} failed to import",
+                         name=mod)
+
+
 def _load_all() -> None:
     """Import every query-registering module so side-effects run."""
     global _LOADED
     if _LOADED:
         return
     import importlib
-    import sys
     mods = [f"{__package__}.{m}" for m in _PLAN_MODULES]
     mods += list(_EXTRA_MODULES)
     for mod in mods:
         try:
             importlib.import_module(mod)
-        except Exception as exc:  # pragma: no cover — dev-time guard
-            # Broad on purpose: one broken module must degrade to "its
-            # queries are absent", never take down the whole catalog
-            # (e.g. a Column built at import time raises AssertionError,
-            # not ImportError, when no SparkContext exists yet).
-            print(f"[registry] skipping {mod}: {exc!r}", file=sys.stderr)
+        except Exception as exc:
+            raise CatalogImportError(mod) from exc
     _LOADED = True

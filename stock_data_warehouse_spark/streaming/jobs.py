@@ -441,6 +441,15 @@ def cents_half_up_vec(values):
     return np.where(v < 0, -mag, mag).astype("int64")
 
 
+def _value_cents():
+    """Column twin of ``cents_half_up_vec`` over ``value``: BIGINT
+    cents, ``floor(|value|·100 + 0.5)`` with the sign reapplied —
+    the ``CASE WHEN value < 0 THEN -FLOOR(..) ELSE FLOOR(..) END``
+    the oracles cast to BIGINT."""
+    mag = F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
+    return F.when(F.col("value") < 0, -mag).otherwise(mag).cast("long")
+
+
 @register(
     "t8_stateful_counters_stream",
     oracle="""
@@ -819,13 +828,7 @@ def t16_streaming_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  cols[1:]))
         merged.write.mode("overwrite").parquet(target_path)
 
-    q = (events_stream(spark, sf_dir)
-         .writeStream
-         .foreachBatch(apply_batch)
-         .option("checkpointLocation", f"{out_dir}/checkpoint")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _drain_foreach(events_stream(spark, sf_dir), apply_batch, out_dir)
     return spark.read.parquet(target_path)
 
 
@@ -891,17 +894,10 @@ def t20_streaming_leaderboard(spark: SparkSession,
                       .agg(F.sum("n_events").alias("n_events")))
         merged.write.mode("overwrite").parquet(counts_path)
 
-    q = (spark.readStream
-         .schema(ev.schema)
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "t20_streaming_leaderboard"]))
-         .parquet(stage)
-         .writeStream
-         .foreachBatch(apply_batch)
-         .option("checkpointLocation", f"{out_dir}/checkpoint")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _drain_foreach(
+        _staged_stream(spark, stage, ev.schema,
+                       "t20_streaming_leaderboard"),
+        apply_batch, out_dir)
 
     from pyspark.sql import Window
 
@@ -983,13 +979,8 @@ def t21_stream_static_enrich(spark: SparkSession,
          .withWatermark("ts", "10 minutes"))
     dim = (load_table(spark, sf_dir, "customer")
            .select("c_custkey", "c_mktsegment"))
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))) \
-     .cast("long")
     j = (s.join(F.broadcast(dim), s["user_id"] == dim["c_custkey"])
-          .select("ts", "c_mktsegment", cents.alias("cents")))
+          .select("ts", "c_mktsegment", _value_cents().alias("cents")))
     agg = (j.groupBy(F.window("ts", "1 hour").alias("w"),
                      "c_mktsegment")
             .agg(F.count(F.lit(1)).alias("n_purchases"),
@@ -1015,10 +1006,7 @@ def _stage_timeordered_files(spark: SparkSession, df: DataFrame,
 
     Returns the staged row count (read back — the multi-batch asserts
     compare admission against it)."""
-    mn, mx = df.agg(F.min(F.unix_micros("ts")),
-                    F.max(F.unix_micros("ts"))).first()
-    q = F.expr(f"((unix_micros(ts) - {mn}) * {n_files}) "
-               f"div ({mx - mn + 1})")
+    q = _event_arrival(df, n_files)
     arrival = F.when(
         (F.col("event_id") % shift_mod == 0) & (q < n_files - 1),
         F.least(q + 2, F.lit(n_files - 1))).otherwise(q)
@@ -1454,17 +1442,27 @@ def _touch_ord(path: str, ordinal: int) -> None:
     fs.create(jdir.suffix(f"/_ORD_{int(ordinal)}"), True).close()
 
 
+class OrdinalMarkerError(RuntimeError):
+    """A state dir holds more than one ``_ORD_*`` marker, so its
+    ordinal is ambiguous."""
+
+
 def _ord_from_marker(path: str):
     """Ordinal recorded by :func:`_touch_ord`, or None when the dir
-    carries no (single, well-formed) marker — callers then fall back
-    to the in-state ``_ord`` read."""
+    carries no well-formed marker — callers then fall back to the
+    in-state ``_ord`` read. Raises ``OrdinalMarkerError`` on more than
+    one marker: ``_touch_ord`` writes exactly one per committed dir,
+    and picking either would silently shift every later ordinal."""
     fs, jdir = _hfs(path)
     if not fs.exists(jdir):
         return None
     ks = [st.getPath().getName()[len("_ORD_"):]
           for st in fs.listStatus(jdir)
           if st.getPath().getName().startswith("_ORD_")]
-    if len(ks) == 1 and ks[0].isdigit():
+    if len(ks) > 1:
+        raise OrdinalMarkerError(
+            f"{path}: {len(ks)} ordinal markers {sorted(ks)}")
+    if ks and ks[0].isdigit():
         return int(ks[0])
     return None
 
@@ -1761,9 +1759,69 @@ def _multiset_eq(a: DataFrame, b: DataFrame, name: str) -> DataFrame:
                       .alias(name))
 
 
+# --- the file-stream driver: every staged replay and maintenance
+# stream reads, drains and pins admission through these four
+
+
+def _staged_stream(spark: SparkSession, stage: str, schema,
+                   name: str) -> DataFrame:
+    """File stream over the staged landing dir ``stage`` under query
+    ``name``'s admission contract (``STREAM_ADMISSION``). Recursive
+    because the staging writers land one subdirectory per arrival
+    file (``a{k}``)."""
+    return (spark.readStream
+            .schema(schema)
+            .option("maxFilesPerTrigger", str(STREAM_ADMISSION[name]))
+            .option("recursiveFileLookup", "true")
+            .parquet(stage))
+
+
+def _drain_foreach(stream_df: DataFrame, callback,
+                   out_dir: str) -> tuple[int, int]:
+    """Drain ``stream_df`` through the ``foreachBatch`` ``callback``
+    with AvailableNow, checkpointed at ``{out_dir}/checkpoint``.
+    Returns ``(n_data_batches, admitted_rows)`` from the engine's own
+    progress metrics (batches with ``numInputRows > 0``) for the
+    caller's admission pin."""
+    sq = (stream_df.writeStream
+          .foreachBatch(callback)
+          .option("checkpointLocation", f"{out_dir}/checkpoint")
+          .trigger(availableNow=True)
+          .start())
+    sq.awaitTermination()
+    rows = [pr["numInputRows"] for pr in sq.recentProgress
+            if pr["numInputRows"] > 0]
+    return len(rows), sum(rows)
+
+
+def _monoid_retained(spark: SparkSession, sroot: str, fam: str,
+                     n_batches: int) -> bool:
+    """Post-stream retention pin of a LATEST-ONLY family ``fam``: at
+    most ``_MONOID_KEEP`` committed versions survive the vacuum, the
+    latest carries the last data batch's ordinal (every batch merged
+    through the state), and the never-vacuumed ``res`` ledger holds
+    one committed version per data batch."""
+    return (len(_committed_versions(sroot, fam)) <= _MONOID_KEEP
+            and _monoid_final_ord(spark, sroot, fam) == n_batches - 1
+            and len(_committed_versions(sroot, "res")) == n_batches)
+
+
+def _event_arrival(ev: DataFrame, n: int):
+    """Arrival file of each ``ev`` row when its µs event-time range is
+    cut into ``n`` equal slices: ``((unix_micros(ts) - mn) * n) div
+    (mx - mn + 1)``, integer arithmetic exact in both engines (the
+    oracles replay the same split). One job: the ``mn, mx``
+    aggregate."""
+    mn, mx = ev.agg(F.min(F.unix_micros("ts")),
+                    F.max(F.unix_micros("ts"))).first()
+    return F.expr(f"((unix_micros(ts) - {mn}) * {n}) "
+                  f"div ({mx - mn + 1})")
+
+
 def _x2_postings(docs: DataFrame) -> DataFrame:
     """Shingle postings (doc_id, n, shingle) — shared by the x2
-    compaction streams' base init and per-batch increments."""
+    ingest and compaction streams' base init and per-batch
+    increments."""
     from ..plans.extensions import shingles_col, tokens_col
     return (docs.select("doc_id",
                         shingles_col(tokens_col("text")).alias("s"))
@@ -1989,22 +2047,15 @@ def t22_watermark_advance_drops(spark: SparkSession,
 
     out_dir = _mkdtemp(prefix="t22_wmadv_")
     stage = f"{out_dir}/landing"
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))) \
-     .cast("long")
     ev = (load_table(spark, sf_dir, "events")
-          .select("event_id", "ts", "event_type", cents.alias("cents")))
+          .select("event_id", "ts", "event_type",
+                  _value_cents().alias("cents")))
     n_staged = _stage_timeordered_files(spark, ev, stage)
 
-    s = (spark.readStream
-         .schema("event_id long, ts timestamp, "
-                 "event_type string, cents long")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "t22_watermark_advance_drops"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
+    s = _staged_stream(spark, stage,
+                       "event_id long, ts timestamp, "
+                       "event_type string, cents long",
+                       "t22_watermark_advance_drops")
     agg = (s.withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n_events"),
@@ -2209,23 +2260,16 @@ def t30_restart_recovery(spark: SparkSession,
     hold = f"{out_dir}/hold"
     live = f"{out_dir}/landing"
     os.makedirs(live, exist_ok=True)
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))) \
-     .cast("long")
     ev = (load_table(spark, sf_dir, "events")
-          .select("event_id", "ts", "event_type", cents.alias("cents")))
+          .select("event_id", "ts", "event_type",
+                  _value_cents().alias("cents")))
     n_staged = _stage_timeordered_files(spark, ev, hold)
 
     def build_out() -> DataFrame:
-        s = (spark.readStream
-             .schema("event_id long, ts timestamp, "
-                     "event_type string, cents long")
-             .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-                 "t30_restart_recovery"]))
-             .option("recursiveFileLookup", "true")
-             .parquet(live))
+        s = _staged_stream(spark, live,
+                           "event_id long, ts timestamp, "
+                           "event_type string, cents long",
+                           "t30_restart_recovery")
         agg = (s.withWatermark("ts", "10 minutes")
                 .groupBy(F.window("ts", "1 hour").alias("w"),
                          "event_type")
@@ -2374,13 +2418,10 @@ def t23_interval_join_advance(spark: SparkSession,
     n_staged = _stage_timeordered_files(spark, ev, stage)
 
     def src() -> DataFrame:
-        return (spark.readStream
-                .schema("event_id long, ts timestamp, "
-                        "user_id long, event_type string")
-                .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-                    "t23_interval_join_advance"]))
-                .option("recursiveFileLookup", "true")
-                .parquet(stage))
+        return _staged_stream(spark, stage,
+                              "event_id long, ts timestamp, "
+                              "user_id long, event_type string",
+                              "t23_interval_join_advance")
 
     c = (src().filter(F.col("event_type") == "click")
          .withWatermark("ts", "30 minutes")
@@ -2524,13 +2565,10 @@ def t24_unconverted_advance(spark: SparkSession,
     n_staged = _stage_timeordered_files(spark, ev, stage)
 
     def src() -> DataFrame:
-        return (spark.readStream
-                .schema("event_id long, ts timestamp, "
-                        "user_id long, event_type string")
-                .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-                    "t24_unconverted_advance"]))
-                .option("recursiveFileLookup", "true")
-                .parquet(stage))
+        return _staged_stream(spark, stage,
+                              "event_id long, ts timestamp, "
+                              "user_id long, event_type string",
+                              "t24_unconverted_advance")
 
     c = (src().filter(F.col("event_type") == "click")
          .withWatermark("ts", "30 minutes")
@@ -2642,22 +2680,17 @@ def t25_stateful_dedup_advance(spark: SparkSession,
     stage = f"{out_dir}/landing"
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "ts", "user_id", "event_type"))
-    mn, mx = ev.agg(F.min(F.unix_micros("ts")),
-                    F.max(F.unix_micros("ts"))).first()
-    q = F.expr(f"((unix_micros(ts) - {mn}) * 4) div ({mx - mn + 1})")
+    q = _event_arrival(ev, 4)
     orig = ev.withColumn("arrival", q)
     copies = (ev.filter(F.col("event_id") % 13 == 0)
                 .withColumn("arrival", F.least(q + 2, F.lit(3))))
     n_staged = _write_arrival_files(
         spark, orig.unionByName(copies), stage)
 
-    s = (spark.readStream
-         .schema("event_id long, ts timestamp, "
-                 "user_id long, event_type string")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "t25_stateful_dedup_advance"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
+    s = _staged_stream(spark, stage,
+                       "event_id long, ts timestamp, "
+                       "user_id long, event_type string",
+                       "t25_stateful_dedup_advance")
     out = (s.withWatermark("ts", "10 minutes")
             .dropDuplicatesWithinWatermark(["event_id"]))
     result, n_late = _run_advancing(out, n_staged)
@@ -2796,13 +2829,8 @@ def t26_session_advance(spark: SparkSession, sf_dir: str) -> DataFrame:
     DELAY_US = 600_000_000
     out_dir = _mkdtemp(prefix="t26_sessadv_")
     stage = f"{out_dir}/landing"
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))) \
-     .cast("long")
     ev = (load_table(spark, sf_dir, "events")
-          .select("event_id", "ts", "user_id", cents.alias("cents"),
+          .select("event_id", "ts", "user_id", _value_cents().alias("cents"),
                   F.unix_micros("ts").alias("us")))
     mn, mx = ev.agg(F.min("us"), F.max("us")).first()
     q = F.expr(f"((us - {mn}) * 4) div ({mx - mn + 1})")
@@ -2834,13 +2862,10 @@ def t26_session_advance(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("event_id", "ts", "user_id", "cents", "arrival"),
         stage)
 
-    s = (spark.readStream
-         .schema("event_id long, ts timestamp, "
-                 "user_id long, cents long")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "t26_session_advance"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
+    s = _staged_stream(spark, stage,
+                       "event_id long, ts timestamp, "
+                       "user_id long, cents long",
+                       "t26_session_advance")
     agg = (s.withWatermark("ts", "10 minutes")
             .groupBy(F.session_window("ts", "30 minutes").alias("w"),
                      "user_id")
@@ -2992,11 +3017,6 @@ def t27_state_timeout_advance(spark: SparkSession,
     DELAY_US = 600_000_000
     out_dir = _mkdtemp(prefix="t27_stateadv_")
     stage = f"{out_dir}/landing"
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))) \
-     .cast("long")
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "ts", "user_id", "value",
                   F.unix_micros("ts").alias("us")))
@@ -3088,13 +3108,10 @@ def t27_state_timeout_advance(spark: SparkSession,
                  "n_events": [i[2] for i in closed],
                  "sum_cents": [i[3] for i in closed]})
 
-    s = (spark.readStream
-         .schema("event_id long, ts timestamp, "
-                 "user_id long, value double")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "t27_state_timeout_advance"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
+    s = _staged_stream(spark, stage,
+                       "event_id long, ts timestamp, "
+                       "user_id long, value double",
+                       "t27_state_timeout_advance")
     sess = (s.withWatermark("ts", "10 minutes")
              .groupBy("user_id")
              .applyInPandasWithState(
@@ -3218,22 +3235,15 @@ def t28_sliding_advance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out_dir = _mkdtemp(prefix="t28_slideadv_")
     stage = f"{out_dir}/landing"
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))) \
-     .cast("long")
     ev = (load_table(spark, sf_dir, "events")
-          .select("event_id", "ts", "event_type", cents.alias("cents")))
+          .select("event_id", "ts", "event_type",
+                  _value_cents().alias("cents")))
     n_staged = _stage_timeordered_files(spark, ev, stage)
 
-    s = (spark.readStream
-         .schema("event_id long, ts timestamp, "
-                 "event_type string, cents long")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "t28_sliding_advance"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
+    s = _staged_stream(spark, stage,
+                       "event_id long, ts timestamp, "
+                       "event_type string, cents long",
+                       "t28_sliding_advance")
     agg = (s.withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"),
                      "event_type")
@@ -3374,13 +3384,10 @@ def t29_chained_pipeline_advance(spark: SparkSession,
     n_staged = _stage_timeordered_files(spark, ev, stage)
 
     def src() -> DataFrame:
-        return (spark.readStream
-                .schema("event_id long, ts timestamp, "
-                        "user_id long, event_type string")
-                .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-                    "t29_chained_pipeline_advance"]))
-                .option("recursiveFileLookup", "true")
-                .parquet(stage))
+        return _staged_stream(spark, stage,
+                              "event_id long, ts timestamp, "
+                              "user_id long, event_type string",
+                              "t29_chained_pipeline_advance")
 
     c = (src().filter(F.col("event_type") == "click")
          .withWatermark("ts", "30 minutes")
@@ -3450,12 +3457,6 @@ def t33_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest_dir = f"{out_dir}/manifest"
     os.makedirs(data_dir)
     os.makedirs(manifest_dir)
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
     last: dict = {}
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -3465,7 +3466,7 @@ def t33_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = (batch_df
                .groupBy("event_type")
                .agg(F.count(F.lit(1)).alias("n_events"),
-                    F.sum(cents).alias("sum_cents")))
+                    F.sum(_value_cents()).alias("sum_cents")))
         rows = agg.collect()  # micro-batch × |types| — bounded
         n = sum(r["n_events"] for r in rows)
         # one LocalRelation for both consumers (ADVICE r7: the
@@ -3484,13 +3485,9 @@ def t33_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         last["id"] = batch_id
 
     mft = STREAM_ADMISSION["t33_exactly_once_sink"]
-    q = (events_stream(spark, sf_dir, max_files_per_trigger=mft)
-         .writeStream
-         .foreachBatch(lambda df, bid: write_batch(df, bid))
-         .option("checkpointLocation", f"{out_dir}/checkpoint")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    _drain_foreach(
+        events_stream(spark, sf_dir, max_files_per_trigger=mft),
+        write_batch, out_dir)
 
     # simulate the at-least-once retry: replay the last committed batch
     before = set(os.listdir(data_dir))
@@ -3590,7 +3587,7 @@ def x3_ivf_ingest_stream(spark: SparkSession,
     ``multi_batch_ok`` — the stream really ran ≥2 data micro-batches
     and admitted every staged row (engine progress metrics);
     ``cells_match`` / ``codes_match`` — the streamed index is
-    SET-EQUAL (exceptAll both ways, exact rows) to the batch ingest
+    multiset-equal (``_multiset_eq``, exact rows) to the batch ingest
     of the same arrivals against the same frozen index: encode is a
     pure per-vector function of the frozen centroids, so HOW the
     arrivals were micro-batched must not matter; ``stored_untouched``
@@ -3706,22 +3703,11 @@ def x3_ivf_ingest_stream(spark: SparkSession,
         encode_pq(batch_df).write.mode("overwrite").parquet(
             _sdir(sroot, "codesi", batch_id))
 
-    s = (spark.readStream
-         .schema("vec_id long, e array<double>")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "x3_ivf_ingest_stream"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
-    sq = (s.writeStream
-           .foreachBatch(ingest_batch)
-           .option("checkpointLocation", f"{out_dir}/checkpoint")
-           .trigger(availableNow=True)
-           .start())
-    sq.awaitTermination()
-    data_batches = [pr for pr in sq.recentProgress
-                    if pr["numInputRows"] > 0]
-    admitted = sum(pr["numInputRows"] for pr in data_batches)
-    multi_batch_ok = len(data_batches) >= 2 and admitted == n_staged
+    n_batches, admitted = _drain_foreach(
+        _staged_stream(spark, stage, "vec_id long, e array<double>",
+                       "x3_ivf_ingest_stream"),
+        ingest_batch, out_dir)
+    multi_batch_ok = n_batches >= 2 and admitted == n_staged
 
     # --- referees (test scaffolding; the graded path is the stream)
     m_cells = spark.read.parquet(cells_dir, *[
@@ -3732,22 +3718,14 @@ def x3_ivf_ingest_stream(spark: SparkSession,
         for v in _committed_versions(sroot, "codesi")])
     b_cells = wh_cells.unionByName(assign_cells(arr))
     b_codes = wh_codes.unionByName(encode_pq(arr))
-
-    def set_eq(a, b, name):
-        return (a.exceptAll(b).agg(F.count(F.lit(1)).alias("_x"))
-                 .crossJoin(b.exceptAll(a)
-                             .agg(F.count(F.lit(1)).alias("_y")))
-                 .select(((F.col("_x") == 0) & (F.col("_y") == 0))
-                         .alias(name)))
-
-    untouched = set_eq(m_cells.filter(F.col("vec_id") % 7 != 0),
-                       wh_cells, "c").crossJoin(
-        set_eq(m_codes.filter(F.col("vec_id") % 7 != 0),
-               wh_codes, "d")) \
+    untouched = _multiset_eq(m_cells.filter(F.col("vec_id") % 7 != 0),
+                             wh_cells, "c").crossJoin(
+        _multiset_eq(m_codes.filter(F.col("vec_id") % 7 != 0),
+                     wh_codes, "d")) \
         .select((F.col("c") & F.col("d")).alias("stored_untouched"))
     return (arr.agg(F.count(F.lit(1)).alias("n_arrivals"))
-               .crossJoin(set_eq(m_cells, b_cells, "cells_match"))
-               .crossJoin(set_eq(m_codes, b_codes, "codes_match"))
+               .crossJoin(_multiset_eq(m_cells, b_cells, "cells_match"))
+               .crossJoin(_multiset_eq(m_codes, b_codes, "codes_match"))
                .crossJoin(untouched)
                .select("n_arrivals",
                        F.lit(bool(multi_batch_ok))
@@ -3851,15 +3829,16 @@ def x2_incremental_minhash_stream(spark: SparkSession,
     its verdict rows and its own bands + postings as BATCH-ID-KEYED
     increment segments beside the stored tables (r12 durable-state
     kit — overwrite-idempotent under foreachBatch retry, the stored
-    table being base + committed increments). Nothing re-bands, the corpus rows are never
-    rewritten, per-batch cost is O(batch·bands + candidate
-    verifications) — FAISS-``add`` economics for near-dup dedup.
+    table being base + committed increments). Nothing re-bands, the
+    corpus rows are never rewritten, per-batch cost is
+    O(batch·bands + candidate verifications) — FAISS-``add``
+    economics for near-dup dedup.
 
     Verdict columns (engine-computed, oracle-pinned TRUE):
     ``multi_batch_ok`` — ≥ 2 data micro-batches ran and admitted
     every staged row (engine progress metrics);
     ``verdicts_match_batch`` — the streamed verdict relation is
-    SET-EQUAL (exceptAll both ways) to the registered batch form's
+    multiset-equal (``_multiset_eq``) to the registered batch form's
     output on the same split: the verdict is a pure function of
     (arrival doc, frozen corpus index), so HOW arrivals were
     micro-batched must not matter; ``index_appended`` — the stored
@@ -3870,8 +3849,7 @@ def x2_incremental_minhash_stream(spark: SparkSession,
     (portable md5 family — the candidate set itself is cross-engine
     exact, banding misses included)."""
     from ..plans.extensions import (
-        _portable_bands, shingles_col, tokens_col,
-        x2_incremental_minhash,
+        _portable_bands, x2_incremental_minhash,
     )
     from ..functions.scalars import round_half_up
     from ..sources.tables import load_table
@@ -3890,19 +3868,12 @@ def x2_incremental_minhash_stream(spark: SparkSession,
     corpus = d.filter(F.col("doc_id") < 400)
     arrivals = d.filter(F.col("doc_id") >= 400)
 
-    def postings(docs: DataFrame) -> DataFrame:
-        return (docs.select("doc_id",
-                            shingles_col(tokens_col("text"))
-                            .alias("s"))
-                    .select("doc_id", F.size("s").alias("n"),
-                            F.explode("s").alias("shingle")))
-
     # --- the stored index: corpus banded + posted once, landed
     # durable; the two init writes and the arrival staging are
     # independent jobs — overlap them (r16, guide §2.6)
     _, _, n_staged = _par_actions(
         lambda: _portable_bands(corpus).write.parquet(idx_dir),
-        lambda: postings(corpus).write.parquet(post_dir),
+        lambda: _x2_postings(corpus).write.parquet(post_dir),
         lambda: _write_arrival_files(
             spark, arrivals.select("doc_id", "text")
                            .withColumn("arrival", F.col("doc_id") % 3),
@@ -3924,7 +3895,7 @@ def x2_incremental_minhash_stream(spark: SparkSession,
         _par_actions(
             lambda: _portable_bands(batch_df).write.mode("overwrite")
                     .parquet(_sdir(sroot, "bandsi", batch_id)),
-            lambda: postings(batch_df).write.mode("overwrite")
+            lambda: _x2_postings(batch_df).write.mode("overwrite")
                     .parquet(_sdir(sroot, "posti", batch_id)))
         b_bands = spark.read.parquet(_sdir(sroot, "bandsi", batch_id))
         c_idx = (spark.read.parquet(idx_dir)
@@ -3981,22 +3952,11 @@ def x2_incremental_minhash_stream(spark: SparkSession,
         verdicts.write.mode("overwrite").parquet(
             _sdir(sroot, "verd", batch_id))
 
-    s = (spark.readStream
-         .schema("doc_id long, text string")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "x2_incremental_minhash_stream"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
-    sq = (s.writeStream
-           .foreachBatch(dedup_batch)
-           .option("checkpointLocation", f"{out_dir}/checkpoint")
-           .trigger(availableNow=True)
-           .start())
-    sq.awaitTermination()
-    data_batches = [pr for pr in sq.recentProgress
-                    if pr["numInputRows"] > 0]
-    admitted = sum(pr["numInputRows"] for pr in data_batches)
-    multi_batch_ok = len(data_batches) >= 2 and admitted == n_staged
+    n_batches, admitted = _drain_foreach(
+        _staged_stream(spark, stage, "doc_id long, text string",
+                       "x2_incremental_minhash_stream"),
+        dedup_batch, out_dir)
+    multi_batch_ok = n_batches >= 2 and admitted == n_staged
 
     # --- referees (test scaffolding; the graded path is the stream)
     # r16 (guide §2.4 — the r15 eager localCheckpoints are gone with
@@ -4297,22 +4257,11 @@ def x2_band_compaction_stream(spark: SparkSession,
 
     dedup_batch = _x2bc_make_batch(spark, out_dir)
 
-    s = (spark.readStream
-         .schema("doc_id long, text string")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "x2_band_compaction_stream"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
-    sq = (s.writeStream
-           .foreachBatch(dedup_batch)
-           .option("checkpointLocation", f"{out_dir}/checkpoint")
-           .trigger(availableNow=True)
-           .start())
-    sq.awaitTermination()
-    data_batches = [pr for pr in sq.recentProgress
-                    if pr["numInputRows"] > 0]
-    admitted = sum(pr["numInputRows"] for pr in data_batches)
-    multi_batch_ok = len(data_batches) == 3 and admitted == n_staged
+    n_batches, admitted = _drain_foreach(
+        _staged_stream(spark, stage, "doc_id long, text string",
+                       "x2_band_compaction_stream"),
+        dedup_batch, out_dir)
+    multi_batch_ok = n_batches == 3 and admitted == n_staged
     # ADVICE r10: the old pin (post < pre) requires at least one dup
     # verdict in batches 0/1 — a testdata regeneration with no early
     # dups would turn a valid "nothing to compact" run into a hash
@@ -4576,44 +4525,28 @@ def t40_quantile_monitor_stream(spark: SparkSession,
 
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "ts", "value"))
-    mn, mx = ev.agg(F.min(F.unix_micros("ts")),
-                    F.max(F.unix_micros("ts"))).first()
-    arrival = F.expr(f"((unix_micros(ts) - {mn}) * 4) "
-                     f"div ({mx - mn + 1})")
     n_staged = _write_arrival_files(
-        spark, ev.withColumn("arrival", arrival), stage, n_files=4)
+        spark, ev.withColumn("arrival", _event_arrival(ev, 4)),
+        stage, n_files=4)
 
     monitor_batch = _t40_make_batch(spark, out_dir)
 
-    s = (spark.readStream
-         .schema("event_id long, ts timestamp, value double")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "t40_quantile_monitor_stream"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
-    sq = (s.writeStream
-           .foreachBatch(monitor_batch)
-           .option("checkpointLocation", f"{out_dir}/checkpoint")
-           .trigger(availableNow=True)
-           .start())
-    sq.awaitTermination()
-    data_batches = [pr for pr in sq.recentProgress
-                    if pr["numInputRows"] > 0]
-    admitted = sum(pr["numInputRows"] for pr in data_batches)
+    n_batches, admitted = _drain_foreach(
+        _staged_stream(spark, stage,
+                       "event_id long, ts timestamp, value double",
+                       "t40_quantile_monitor_stream"),
+        monitor_batch, out_dir)
     sroot = f"{out_dir}/state"
     # the retention pins (≤ _MONOID_KEEP band-state versions, final
     # in-state ordinal 3, ≤ _STORE_LIVE_BOUND live store trees)
     # prove the vacuum/compaction actually ran — 4 un-vacuumed
     # versions or an unbounded live tree set would mean the
     # retention step is dead
-    maintained_ok = (len(data_batches) == 4 and admitted == n_staged
-                     and len(_committed_versions(sroot, "bands"))
-                     <= _MONOID_KEEP
-                     and _monoid_final_ord(spark, sroot, "bands") == 3
+    maintained_ok = (n_batches == 4 and admitted == n_staged
+                     and _monoid_retained(spark, sroot, "bands", 4)
                      and len(_store_live_trees(sroot, "store",
                                                "storec"))
-                     <= _STORE_LIVE_BOUND
-                     and len(_committed_versions(sroot, "res")) == 4)
+                     <= _STORE_LIVE_BOUND)
     return (_read_family(spark, sroot, "res")
             .select("batch_id", "n_events", "p50_value",
                     "p95_value",
@@ -4973,23 +4906,12 @@ def x2_triggered_compaction_stream(spark: SparkSession,
 
     dedup_batch = _x2trig_make_batch(spark, out_dir)
 
-    s = (spark.readStream
-         .schema("doc_id long, text string")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "x2_triggered_compaction_stream"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
-    sq = (s.writeStream
-           .foreachBatch(dedup_batch)
-           .option("checkpointLocation", f"{out_dir}/checkpoint")
-           .trigger(availableNow=True)
-           .start())
-    sq.awaitTermination()
-    data_batches = [pr for pr in sq.recentProgress
-                    if pr["numInputRows"] > 0]
-    admitted = sum(pr["numInputRows"] for pr in data_batches)
-    assert len(data_batches) == 3 and admitted == n_staged, \
-        (len(data_batches), admitted, n_staged)
+    n_batches, admitted = _drain_foreach(
+        _staged_stream(spark, stage, "doc_id long, text string",
+                       "x2_triggered_compaction_stream"),
+        dedup_batch, out_dir)
+    assert n_batches == 3 and admitted == n_staged, \
+        (n_batches, admitted, n_staged)
     return (_read_family(spark, sroot, "res")
             .select("batch_id", "n_arrivals", "n_dups",
                     "n_unique", "jac6_mass",
@@ -5188,39 +5110,23 @@ def t47_tiered_compaction_stream(spark: SparkSession,
 
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "ts", "value"))
-    mn, mx = ev.agg(F.min(F.unix_micros("ts")),
-                    F.max(F.unix_micros("ts"))).first()
-    arrival = F.expr(f"((unix_micros(ts) - {mn}) * 12) "
-                     f"div ({mx - mn + 1})")
     n_staged = _write_arrival_files(
-        spark, ev.withColumn("arrival", arrival), stage, n_files=12)
+        spark, ev.withColumn("arrival", _event_arrival(ev, 12)),
+        stage, n_files=12)
 
     tiered_batch = _t47_make_batch(spark, out_dir)
 
-    s = (spark.readStream
-         .schema("event_id long, ts timestamp, value double")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "t47_tiered_compaction_stream"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
-    sq = (s.writeStream
-           .foreachBatch(tiered_batch)
-           .option("checkpointLocation", f"{out_dir}/checkpoint")
-           .trigger(availableNow=True)
-           .start())
-    sq.awaitTermination()
-    data_batches = [pr for pr in sq.recentProgress
-                    if pr["numInputRows"] > 0]
-    admitted = sum(pr["numInputRows"] for pr in data_batches)
+    n_batches, admitted = _drain_foreach(
+        _staged_stream(spark, stage,
+                       "event_id long, ts timestamp, value double",
+                       "t47_tiered_compaction_stream"),
+        tiered_batch, out_dir)
     sroot = f"{out_dir}/state"
-    maintained_ok = (len(data_batches) == 12 and admitted == n_staged
-                     and len(_committed_versions(sroot, "bands"))
-                     <= _MONOID_KEEP
-                     and _monoid_final_ord(spark, sroot, "bands") == 11
+    maintained_ok = (n_batches == 12 and admitted == n_staged
+                     and _monoid_retained(spark, sroot, "bands", 12)
                      and len(_store_live_trees(sroot, "store",
                                                "storec"))
-                     <= 1 + (_T47_SNAP_T - 1) + _T47_RUN_T
-                     and len(_committed_versions(sroot, "res")) == 12)
+                     <= 1 + (_T47_SNAP_T - 1) + _T47_RUN_T)
     return (_read_family(spark, sroot, "res")
             .select("batch_id", "n_events", "p50_value", "p95_value",
                     "fired_run", "fired_snapshot", "live_trees",
@@ -5351,27 +5257,13 @@ def t42_reservoir_sample_stream(spark: SparkSession,
 
     rsv_batch = _t42_make_batch(spark, out_dir)
 
-    s = (spark.readStream
-         .schema("doc_id long, n_chars long")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "t42_reservoir_sample_stream"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
-    sq = (s.writeStream
-           .foreachBatch(rsv_batch)
-           .option("checkpointLocation", f"{out_dir}/checkpoint")
-           .trigger(availableNow=True)
-           .start())
-    sq.awaitTermination()
-    data_batches = [pr for pr in sq.recentProgress
-                    if pr["numInputRows"] > 0]
-    admitted = sum(pr["numInputRows"] for pr in data_batches)
+    n_batches, admitted = _drain_foreach(
+        _staged_stream(spark, stage, "doc_id long, n_chars long",
+                       "t42_reservoir_sample_stream"),
+        rsv_batch, out_dir)
     sroot = f"{out_dir}/state"
-    maintained_ok = (len(data_batches) == 4 and admitted == n_staged
-                     and len(_committed_versions(sroot, "rsv"))
-                     <= _MONOID_KEEP
-                     and _monoid_final_ord(spark, sroot, "rsv") == 3
-                     and len(_committed_versions(sroot, "res")) == 4)
+    maintained_ok = (n_batches == 4 and admitted == n_staged
+                     and _monoid_retained(spark, sroot, "rsv", 4))
     return (_read_family(spark, sroot, "res")
             .select("batch_id", "doc_id", "rsv_key",
                     F.lit(bool(maintained_ok))
@@ -5395,10 +5287,6 @@ def _t43_make_batch(spark: SparkSession, out_dir: str):
     durability drills in tests/test_stream_durability.py can drive
     the SAME callback the registered query runs."""
     sroot = f"{out_dir}/state"
-    cents = (F.when(F.col("value") < 0,
-                    -F.floor(F.abs(F.col("value")) * 100.0 + 0.5))
-              .otherwise(F.floor(F.abs(F.col("value")) * 100.0 + 0.5))
-              .cast("long"))
 
     def dcy_batch(batch_df: DataFrame, batch_id: int) -> None:
         # ONE eager read of the micro-batch source (foreachBatch
@@ -5410,7 +5298,7 @@ def _t43_make_batch(spark: SparkSession, out_dir: str):
         prev, ordinal = _monoid_prev(spark, sroot, "dcy", batch_id)
         agg = (batch_df.groupBy("event_type")
                        .agg(F.count(F.lit(1)).cast("long").alias("bn"),
-                            F.sum(cents).cast("long").alias("bc")))
+                            F.sum(_value_cents()).cast("long").alias("bc")))
         if prev is None:
             merged = agg.select(
                 "event_type",
@@ -5513,37 +5401,21 @@ def t43_decayed_counter_stream(spark: SparkSession,
 
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "ts", "event_type", "value"))
-    mn, mx = ev.agg(F.min(F.unix_micros("ts")),
-                    F.max(F.unix_micros("ts"))).first()
-    arrival = F.expr(f"((unix_micros(ts) - {mn}) * 4) "
-                     f"div ({mx - mn + 1})")
     n_staged = _write_arrival_files(
-        spark, ev.withColumn("arrival", arrival), stage, n_files=4)
+        spark, ev.withColumn("arrival", _event_arrival(ev, 4)),
+        stage, n_files=4)
 
     dcy_batch = _t43_make_batch(spark, out_dir)
 
-    s = (spark.readStream
-         .schema("event_id long, ts timestamp, event_type string, "
-                 "value double")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "t43_decayed_counter_stream"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
-    sq = (s.writeStream
-           .foreachBatch(dcy_batch)
-           .option("checkpointLocation", f"{out_dir}/checkpoint")
-           .trigger(availableNow=True)
-           .start())
-    sq.awaitTermination()
-    data_batches = [pr for pr in sq.recentProgress
-                    if pr["numInputRows"] > 0]
-    admitted = sum(pr["numInputRows"] for pr in data_batches)
+    n_batches, admitted = _drain_foreach(
+        _staged_stream(spark, stage,
+                       "event_id long, ts timestamp, event_type string, "
+                       "value double",
+                       "t43_decayed_counter_stream"),
+        dcy_batch, out_dir)
     sroot = f"{out_dir}/state"
-    maintained_ok = (len(data_batches) == 4 and admitted == n_staged
-                     and len(_committed_versions(sroot, "dcy"))
-                     <= _MONOID_KEEP
-                     and _monoid_final_ord(spark, sroot, "dcy") == 3
-                     and len(_committed_versions(sroot, "res")) == 4)
+    maintained_ok = (n_batches == 4 and admitted == n_staged
+                     and _monoid_retained(spark, sroot, "dcy", 4))
     return (_read_family(spark, sroot, "res")
             .select("batch_id", "event_type", "decayed_n_x8",
                     "decayed_cents_x8", "n_batch",
@@ -5700,10 +5572,7 @@ def t44_distinct_monitor_stream(spark: SparkSession,
 
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "ts", "user_id"))
-    mn, mx = ev.agg(F.min(F.unix_micros("ts")),
-                    F.max(F.unix_micros("ts"))).first()
-    arrival = F.expr(f"((unix_micros(ts) - {mn}) * 4) "
-                     f"div ({mx - mn + 1})")
+    arrival = _event_arrival(ev, 4)
     n_staged = _write_arrival_files(
         spark, ev.withColumn("arrival", arrival), stage, n_files=4)
 
@@ -5711,27 +5580,14 @@ def t44_distinct_monitor_stream(spark: SparkSession,
                     F.to_date("ts").cast("string"))
     dmon_batch = _t44_make_batch(spark, out_dir)
 
-    s = (spark.readStream
-         .schema("event_id long, ts timestamp, user_id long")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "t44_distinct_monitor_stream"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
-    sq = (s.writeStream
-           .foreachBatch(dmon_batch)
-           .option("checkpointLocation", f"{out_dir}/checkpoint")
-           .trigger(availableNow=True)
-           .start())
-    sq.awaitTermination()
-    data_batches = [pr for pr in sq.recentProgress
-                    if pr["numInputRows"] > 0]
-    admitted = sum(pr["numInputRows"] for pr in data_batches)
+    n_batches, admitted = _drain_foreach(
+        _staged_stream(spark, stage,
+                       "event_id long, ts timestamp, user_id long",
+                       "t44_distinct_monitor_stream"),
+        dmon_batch, out_dir)
     sroot = f"{out_dir}/state"
-    maintained_ok = (len(data_batches) == 4 and admitted == n_staged
-                     and len(_committed_versions(sroot, "kmv"))
-                     <= _MONOID_KEEP
-                     and _monoid_final_ord(spark, sroot, "kmv") == 3
-                     and len(_committed_versions(sroot, "res")) == 4)
+    maintained_ok = (n_batches == 4 and admitted == n_staged
+                     and _monoid_retained(spark, sroot, "kmv", 4))
 
     # --- referee (test scaffolding): exact prefix distincts from the
     # staged landing, graded against the maintained estimates.
@@ -5962,27 +5818,13 @@ def t45_heavy_hitter_stream(spark: SparkSession,
 
     mgs_batch = _t45_make_batch(spark, out_dir)
 
-    s = (spark.readStream
-         .schema("doc_id long, text string")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "t45_heavy_hitter_stream"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
-    sq = (s.writeStream
-           .foreachBatch(mgs_batch)
-           .option("checkpointLocation", f"{out_dir}/checkpoint")
-           .trigger(availableNow=True)
-           .start())
-    sq.awaitTermination()
-    data_batches = [pr for pr in sq.recentProgress
-                    if pr["numInputRows"] > 0]
-    admitted = sum(pr["numInputRows"] for pr in data_batches)
+    n_batches, admitted = _drain_foreach(
+        _staged_stream(spark, stage, "doc_id long, text string",
+                       "t45_heavy_hitter_stream"),
+        mgs_batch, out_dir)
     sroot = f"{out_dir}/state"
-    maintained_ok = (len(data_batches) == 4 and admitted == n_staged
-                     and len(_committed_versions(sroot, "mgs"))
-                     <= _MONOID_KEEP
-                     and _monoid_final_ord(spark, sroot, "mgs") == 3
-                     and len(_committed_versions(sroot, "res")) == 4)
+    maintained_ok = (n_batches == 4 and admitted == n_staged
+                     and _monoid_retained(spark, sroot, "mgs", 4))
 
     # --- referee (test scaffolding): exact prefix counts for the
     # ≤ 4·K emitted keys, from the staged landing
@@ -6241,41 +6083,25 @@ def t46_prequential_anomaly_stream(spark: SparkSession,
 
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "ts", "value"))
-    mn, mx = ev.agg(F.min(F.unix_micros("ts")),
-                    F.max(F.unix_micros("ts"))).first()
-    arrival = F.expr(f"((unix_micros(ts) - {mn}) * 4) "
-                     f"div ({mx - mn + 1})")
     n_staged = _write_arrival_files(
-        spark, ev.withColumn("arrival", arrival), stage, n_files=4)
+        spark, ev.withColumn("arrival", _event_arrival(ev, 4)),
+        stage, n_files=4)
 
     preq_batch = _t46_make_batch(spark, out_dir)
 
-    s = (spark.readStream
-         .schema("event_id long, ts timestamp, value double")
-         .option("maxFilesPerTrigger", str(STREAM_ADMISSION[
-             "t46_prequential_anomaly_stream"]))
-         .option("recursiveFileLookup", "true")
-         .parquet(stage))
-    sq = (s.writeStream
-           .foreachBatch(preq_batch)
-           .option("checkpointLocation", f"{out_dir}/checkpoint")
-           .trigger(availableNow=True)
-           .start())
-    sq.awaitTermination()
-    data_batches = [pr for pr in sq.recentProgress
-                    if pr["numInputRows"] > 0]
-    admitted = sum(pr["numInputRows"] for pr in data_batches)
+    n_batches, admitted = _drain_foreach(
+        _staged_stream(spark, stage,
+                       "event_id long, ts timestamp, value double",
+                       "t46_prequential_anomaly_stream"),
+        preq_batch, out_dir)
     sroot = f"{out_dir}/state"
     # retention pins (r13): superseded band-state vacuumed, final
     # ordinal carried in-state, store live set bounded
-    maintained_ok = (len(data_batches) == 4 and admitted == n_staged
-                     and len(_committed_versions(sroot, "bands"))
-                     <= _MONOID_KEEP
-                     and _monoid_final_ord(spark, sroot, "bands") == 3
+    maintained_ok = (n_batches == 4 and admitted == n_staged
+                     and _monoid_retained(spark, sroot, "bands", 4)
                      and len(_store_live_trees(sroot, "store",
                                                "storec"))
-                     <= _STORE_LIVE_BOUND
-                     and len(_committed_versions(sroot, "res")) == 4)
+                     <= _STORE_LIVE_BOUND)
     return (_read_family(spark, sroot, "res")
             .select("batch_id", "n_arrivals", "p25_prior",
                     "p75_prior", "n_outliers_hi",

@@ -8,8 +8,10 @@ from stock_data_warehouse_spark.operators import staircase
 from stock_data_warehouse_spark.operators.staircase import (
     STATE_BAND_CAP, BandStateTooLargeError, state_exact_quantiles,
 )
+from stock_data_warehouse_spark.plans import registry
 from stock_data_warehouse_spark.streaming.jobs import (
-    RefereeSchemaError, _multiset_eq,
+    OrdinalMarkerError, RefereeSchemaError, _multiset_eq,
+    _ord_from_marker,
 )
 
 
@@ -52,3 +54,27 @@ def test_referee_rejects_unequal_column_sets(spark):
     # column order does not matter, only the set
     assert _multiset_eq(a, a.select("v", "id"), "same").first()["same"]
     assert not _multiset_eq(a, a.filter("id > 0"), "same").first()["same"]
+
+
+def test_catalog_import_failure_is_named(monkeypatch):
+    """A plan module that fails to import stops the catalog load
+    instead of dropping its queries in silence."""
+    monkeypatch.setattr(registry, "_PLAN_MODULES",
+                        registry._PLAN_MODULES + ("no_such_module",))
+    monkeypatch.setattr(registry, "_LOADED", False)
+    with pytest.raises(registry.CatalogImportError) as err:
+        registry._load_all()
+    assert err.value.name.endswith(".no_such_module")
+    assert isinstance(err.value.__cause__, ModuleNotFoundError)
+
+
+def test_state_dir_with_two_ordinal_markers_is_rejected(spark,
+                                                        tmp_path):
+    d = tmp_path / "b3"
+    d.mkdir()
+    assert _ord_from_marker(str(d)) is None  # no marker: fallback
+    (d / "_ORD_2").touch()
+    assert _ord_from_marker(str(d)) == 2
+    (d / "_ORD_3").touch()
+    with pytest.raises(OrdinalMarkerError):
+        _ord_from_marker(str(d))

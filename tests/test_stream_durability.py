@@ -95,6 +95,24 @@ def test_append_writes_are_exempt_marked_repo_wide():
                 "unexempted mode('append') — justify or overwrite")
 
 
+def test_file_streams_open_only_through_the_driver():
+    """Every file stream in streaming/jobs.py opens through
+    ``events_stream`` (the events table) or ``_staged_stream`` (a
+    staged landing under ``STREAM_ADMISSION``), so no query grows its
+    own reader with drifting admission options again."""
+    import ast
+    import pathlib
+    text = pathlib.Path(J.__file__).read_text()
+    spans = [(n.lineno, n.end_lineno, n.name)
+             for n in ast.parse(text).body
+             if isinstance(n, ast.FunctionDef)]
+    owners = {next((name for lo, hi, name in spans if lo <= i <= hi),
+                   f"module line {i}")
+              for i, ln in enumerate(text.splitlines(), 1)
+              if "spark.readStream" in ln}
+    assert owners == {"events_stream", "_staged_stream"}, owners
+
+
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
