@@ -155,3 +155,12 @@ def round_money(c: Column, scale: int = 2) -> Column:
     item 1).  SQL twin: :func:`sql_round_half_up`.
     """
     return round_half_up(c, scale)
+
+
+def md5_prefix_long(s: Column, k: int) -> Column:
+    """The first ``k`` hex digits of ``md5(s)`` as a long — the portable
+    hash behind the seeded coins, folds, shards and sketches
+    (``k ≤ 15`` stays inside a signed long). DuckDB twin:
+    ``('0x' || substr(md5(s), 1, k))::BIGINT``; Python twin:
+    ``int(hashlib.md5(s).hexdigest()[:k], 16)``."""
+    return F.conv(F.substring(F.md5(s), 1, k), 16, 10).cast("long")

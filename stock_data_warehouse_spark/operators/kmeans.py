@@ -32,6 +32,12 @@ from pyspark.sql import functions as F
 from .checkpoint import ckpt
 
 
+class SampleIdUniverseError(ValueError):
+    """The groups of a sampled ``kmeans_fit_assign_grouped`` carry
+    different id sets, so the shared hash-min seeds would not exist in
+    every group."""
+
+
 def _sq_dist(a: F.Column, b: F.Column) -> F.Column:
     d = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
     return F.aggregate(d, F.lit(0.0), lambda acc, x: acc + x)
@@ -368,6 +374,10 @@ def kmeans_fit_assign_grouped(vectors: DataFrame, group_col: str = "j",
     round for those same ≤S×groups rows. Per-round inertia is the
     SUM over groups of the per-group training inertia — identical to
     the distributed form's ungrouped total.
+
+    Sampled mode raises ``SampleIdUniverseError`` when the sampled
+    (or caller-supplied ``sample_rows``) groups carry different id
+    sets; the check runs driver-side over rows already collected.
     """
     spark = vectors.sparkSession
     v = vectors.select(F.col(group_col).alias("grp"),
@@ -391,6 +401,12 @@ def kmeans_fit_assign_grouped(vectors: DataFrame, group_col: str = "j",
         by_grp: dict = {}
         for g, i, e in rows:
             by_grp.setdefault(g, []).append((i, e))
+        id_sets = {g: {i for i, _e in r} for g, r in by_grp.items()}
+        if len({frozenset(ids) for ids in id_sets.values()}) > 1:
+            sizes = {g: len(ids) for g, ids in sorted(id_sets.items())}
+            raise SampleIdUniverseError(
+                f"sampled groups carry different id sets (ids per "
+                f"group: {sizes})")
         # the SAME k hash-min ids seed every group (the shared-id-
         # universe property); _hash_key is the driver twin of the
         # distributed (md5(id), id) order

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalars import sql_round_half_up
+from ..functions.scalars import md5_prefix_long, sql_round_half_up
 from ..sources.tables import load_table
 from .registry import register
 
@@ -841,9 +841,9 @@ def a17_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     jd = values_df(spark, [(0,), (1,), (2,), (3,)], "j long")
 
     def bucket(tok_col):
-        return (F.conv(F.substring(F.md5(F.concat(
-            F.col("j").cast("string"), F.lit(":"), tok_col)), 1, 6),
-            16, 10).cast("long") % _CMS_WIDTH)
+        return (md5_prefix_long(F.concat(
+            F.col("j").cast("string"), F.lit(":"), tok_col), 6)
+            % _CMS_WIDTH)
 
     tj = tok.crossJoin(F.broadcast(jd))
     cells = (tj.groupBy("j", bucket(F.col("tok")).alias("b"))
@@ -1585,8 +1585,8 @@ def _kmv_u(key: F.Column) -> F.Column:
     """Engine-portable uniform(0,1) hash: md5 -> first 15 hex digits ->
     60-bit int -> divide by 2^60. Both engines parse the identical hex
     substring, so ``u`` is bit-identical cross-engine."""
-    h = F.md5(F.concat(F.lit("kmv:"), key.cast("string")))
-    return (F.conv(F.substring(h, 1, 15), 16, 10).cast("long")
+    return (md5_prefix_long(F.concat(F.lit("kmv:"), key.cast("string")),
+                            15)
             / F.lit(_KMV_DENOM))
 
 
@@ -2963,9 +2963,7 @@ def a32_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     cnt = (c.groupBy(F.col("c_mktsegment").alias("mktsegment"))
             .agg(F.count(F.lit(1)).alias("true_count")))
-    u = (F.conv(F.substring(
-            F.md5(F.concat(F.lit("dp:"), F.col("mktsegment"))),
-            1, 15), 16, 10).cast("long")
+    u = (md5_prefix_long(F.concat(F.lit("dp:"), F.col("mktsegment")), 15)
          / F.lit(1152921504606846976.0))
     x = (-(1.0 / _DP_EPS)
          * F.when(u >= 0.5, F.lit(1.0)).otherwise(F.lit(-1.0))

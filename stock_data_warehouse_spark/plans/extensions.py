@@ -31,7 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.scalars import round_half_up, sql_round_half_up
+from ..functions.scalars import (md5_prefix_long, round_half_up,
+                                 sql_round_half_up)
 from ..operators.checkpoint import ckpt
 from ..sources.tables import load_table
 from .registry import register
@@ -6870,11 +6871,9 @@ def x9_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     both stay hash-exact."""
     d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
     ep = d.withColumn("epoch", F.explode(F.array(F.lit(1), F.lit(2))))
-    hk = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("ep"), F.col("epoch").cast("string"),
-                           F.lit(":"), F.col("doc_id").cast("string"))),
-            1, 15), 16, 10).cast("long")
+    hk = md5_prefix_long(
+        F.concat(F.lit("ep"), F.col("epoch").cast("string"),
+                 F.lit(":"), F.col("doc_id").cast("string")), 15)
     h = ep.withColumn("hk", hk)
     return (h.groupBy("epoch",
                       (F.col("hk") % _SHUF_SHARDS).cast("int")
@@ -8016,10 +8015,9 @@ def x9_length_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (_t(spark, sf_dir, "documents")
          .select("doc_id", F.size(tokens_col("text")).alias("n_tok"))
          .filter(F.col("n_tok") > 0)
-         .withColumn("h", F.conv(F.substring(
-             F.md5(F.concat(F.lit("lb:"),
-                            F.col("doc_id").cast("string"))),
-             1, 15), 16, 10).cast("long")))
+         .withColumn("h", md5_prefix_long(
+             F.concat(F.lit("lb:"), F.col("doc_id").cast("string")),
+             15)))
     bucketed = d.withColumn(
         "bucket",
         F.floor(F.log(F.col("n_tok").cast("double"))
@@ -11060,9 +11058,9 @@ def x2_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sequence(F.lit(0), n - 1),
         lambda i: F.when(
             (i >= _CDC_W - 1)
-            & (F.conv(F.substring(F.md5(F.array_join(
+            & (md5_prefix_long(F.array_join(
                    F.slice(F.col("t"), i - (_CDC_W - 2), _CDC_W),
-                   " ")), 1, 6), 16, 10).cast("long")
+                   " "), 6)
                % _CDC_D == 0),
             F.lit(1)).otherwise(F.lit(0)))
     zipped = F.when(n > 0, F.zip_with(
@@ -11426,10 +11424,9 @@ def x6_calibration_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
 
     def coin(salt):
-        return F.conv(F.substring(
-            F.md5(F.concat(F.lit(salt + ":"),
-                           F.col("doc_id").cast("string"))), 1, 6),
-            16, 10).cast("long")
+        return md5_prefix_long(
+            F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string")),
+            6)
 
     z = (coin("calz") % 2001 - 1000) / F.lit(250.0)
     q0 = F.lit(1.0) / (F.lit(1.0)
@@ -11659,10 +11656,9 @@ def x6_psi_triggered_recalibration(spark: SparkSession,
     d = _t(spark, sf_dir, "documents")
 
     def coin(salt):
-        return F.conv(F.substring(
-            F.md5(F.concat(F.lit(salt + ":"),
-                           F.col("doc_id").cast("string"))), 1, 6),
-            16, 10).cast("long")
+        return md5_prefix_long(
+            F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string")),
+            6)
 
     day = (F.col("doc_id") % 3).cast("int")
     z = (coin("rcz") % 2001 - 1000) / F.lit(250.0)

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.scalars import sql_round_half_up
+from ..functions.scalars import md5_prefix_long, sql_round_half_up
 from ..sources.tables import load_table, values_df
 from .registry import register
 
@@ -357,11 +357,8 @@ def x7_weighted_sample_ares(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus.
     """
     d = _t(spark, sf_dir, "documents")
-    v = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("ares:"),
-                           F.col("doc_id").cast("string"))), 1, 6),
-        16, 10).cast("long")
+    v = md5_prefix_long(
+        F.concat(F.lit("ares:"), F.col("doc_id").cast("string")), 6)
     u = (v.cast("double") + F.lit(0.5)) / F.lit(16777216.0)
     w = (F.col("n_chars") + F.lit(1)).cast("double")
     key = (F.round(F.pow(u, F.lit(1.0) / w).cast("decimal(38,10)"), 10)
@@ -435,10 +432,8 @@ def x7_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select("source", "n_docs", rate.alias("target_rate"))
              .withColumn("th", F.floor(F.col("target_rate")
                                        * 16777216).cast("long")))
-    coin = F.conv(
-        F.substring(F.md5(F.concat(F.lit("t"), F.lit(":"),
-                                   F.col("doc_id").cast("string"))),
-                    1, 6), 16, 10).cast("long")
+    coin = md5_prefix_long(F.concat(F.lit("t"), F.lit(":"),
+                                    F.col("doc_id").cast("string")), 6)
     hits = (d.join(F.broadcast(th), "source")
              .filter(coin < F.col("th"))
              .groupBy("source")
@@ -568,10 +563,9 @@ def x7_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     CV harness logs; the hash-mod spread makes them near-equal
     without a balancing shuffle. Shape: one scan, one bounded agg."""
     d = _t(spark, sf_dir, "documents")
-    fold = (F.conv(F.substring(
-                F.md5(F.concat(F.lit("fold:"),
-                               F.col("doc_id").cast("string"))),
-                1, 15), 16, 10).cast("long") % _KFOLD).cast("int")
+    fold = (md5_prefix_long(F.concat(F.lit("fold:"),
+                                     F.col("doc_id").cast("string")),
+                            15) % _KFOLD).cast("int")
     assigned = d.select("doc_id", fold.alias("fold"))
     tot = assigned.agg(F.count(F.lit(1)).alias("n_total"),
                        F.countDistinct("doc_id").alias("n_ids"))
@@ -680,12 +674,11 @@ def x7_poisson_bootstrap(spark: SparkSession,
     reps = base.withColumn(
         "replica",
         F.explode(F.array(*[F.lit(i) for i in range(_N_REPLICAS)])))
-    u = (F.conv(F.substring(
-            F.md5(F.concat(F.lit("boot"),
-                           F.col("replica").cast("string"),
-                           F.lit(":"),
-                           F.col("o_orderkey").cast("string"))),
-            1, 15), 16, 10).cast("long")
+    u = (md5_prefix_long(F.concat(F.lit("boot"),
+                                  F.col("replica").cast("string"),
+                                  F.lit(":"),
+                                  F.col("o_orderkey").cast("string")),
+                         15)
          / F.lit(1152921504606846976.0))
     w = F.lit(6)
     for k, t in reversed(list(enumerate(_POIS_CDF))):
@@ -1224,12 +1217,10 @@ def x6_bootstrap_auc_ci(spark: SparkSession,
         "replica",
         F.explode(F.array(*[F.lit(i)
                             for i in range(_N_AUC_REPLICAS)])))
-    u = (F.conv(F.substring(
-            F.md5(F.concat(F.lit("bauc"),
-                           F.col("replica").cast("string"),
-                           F.lit(":"),
-                           F.col("vec_id").cast("string"))),
-            1, 15), 16, 10).cast("long")
+    u = (md5_prefix_long(F.concat(F.lit("bauc"),
+                                  F.col("replica").cast("string"),
+                                  F.lit(":"),
+                                  F.col("vec_id").cast("string")), 15)
          / F.lit(1152921504606846976.0))
     w = F.lit(6)
     for k, t in reversed(list(enumerate(_POIS_CDF))):

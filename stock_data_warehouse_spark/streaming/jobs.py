@@ -83,6 +83,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.scalars import md5_prefix_long
 from ..operators.checkpoint import ckpt
 from ..plans.registry import register
 from ..tmpdirs import mkdtemp as _mkdtemp
@@ -1713,13 +1714,44 @@ def _par_actions(*thunks) -> list:
     OPTIMIZATION_r15.md (0.08–0.4 s of job-launch + commit round-trip
     each at local[32]; real scheduler/commit latency at 1000
     executors) OVERLAPS instead of summing. Results come back in
-    thunk order; the first exception propagates, so a failed write
-    still fails its micro-batch."""
+    thunk order.
+
+    Each worker runs under ``inheritable_thread_target``, so its jobs
+    carry the caller's job group, description and tags, plus one tag
+    unique to this call. On the first exception the pending thunks
+    are cancelled and the tagged jobs still running are cancelled
+    (again until every started thunk has returned, so a job a sibling
+    submits after the first cancel dies too); then the exception
+    propagates and fails its micro-batch with no overlapped write
+    left running."""
     if len(thunks) == 1:
         return [thunks[0]()]
-    from concurrent.futures import ThreadPoolExecutor
+    import uuid
+    from concurrent.futures import (FIRST_EXCEPTION, ThreadPoolExecutor,
+                                    wait)
+    from pyspark.util import inheritable_thread_target
+    spark = (SparkSession.getActiveSession()
+             or SparkSession.builder.getOrCreate())
+    sc = spark.sparkContext
+    tag = f"par_actions_{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        inherit = inheritable_thread_target(spark)
+    finally:
+        sc.removeJobTag(tag)
+    targets = [inherit(t) for t in thunks]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        return [f.result() for f in [pool.submit(t) for t in thunks]]
+        futs = [pool.submit(t) for t in targets]
+        wait(futs, return_when=FIRST_EXCEPTION)
+        failed = [f for f in futs if f.done() and f.exception()]
+        if failed:
+            for f in futs:
+                f.cancel()
+            while not all(f.done() for f in futs):
+                sc.cancelJobsWithTag(tag)
+                wait(futs, timeout=0.1)
+            raise failed[0].exception()
+        return [f.result() for f in futs]
 
 
 class RefereeSchemaError(ValueError):
@@ -1816,6 +1848,140 @@ def _event_arrival(ev: DataFrame, n: int):
                     F.max(F.unix_micros("ts"))).first()
     return F.expr(f"((unix_micros(ts) - {mn}) * {n}) "
                   f"div ({mx - mn + 1})")
+
+
+def _run_monoid_stream(spark: SparkSession, name: str, prefix: str,
+                       staged: DataFrame, n: int, schema: str,
+                       make_batch, fam: str) -> tuple[str, str, bool]:
+    """Run-and-pin driver of a maintenance stream: stage ``staged``
+    (carrying ``arrival``) as ``n`` arrival files in a fresh temp dir,
+    drain them through ``make_batch(spark, out_dir)``'s callback, and
+    return ``(state root, landing dir, pin)``. The pin holds iff ``n``
+    data batches admitted every staged row and the latest-only family
+    ``fam`` passes :func:`_monoid_retained`."""
+    out_dir = _mkdtemp(prefix=prefix)
+    stage = f"{out_dir}/landing"
+    n_staged = _write_arrival_files(spark, staged, stage, n_files=n)
+    n_batches, admitted = _drain_foreach(
+        _staged_stream(spark, stage, schema, name),
+        make_batch(spark, out_dir), out_dir)
+    sroot = f"{out_dir}/state"
+    return sroot, stage, (n_batches == n and admitted == n_staged
+                          and _monoid_retained(spark, sroot, fam, n))
+
+
+# --- the monoid-stream kit: the prologue, commit and band-store body
+# every maintenance callback (t40, t42–t47) is written with
+
+
+def _monoid_open(spark: SparkSession, batch_df: DataFrame, root: str,
+                 fam: str, batch_id: int):
+    """Prologue of a latest-only monoid callback: ONE eager read of the
+    micro-batch (foreachBatch re-scans the source per action, so a bare
+    ``isEmpty()`` would double ``numInputRows`` and break the admission
+    pin), then the predecessor state of ``fam``. Returns
+    ``(batch, prev, ordinal)``; ``batch`` is None for an empty batch,
+    which the caller skips without touching state."""
+    batch_df = batch_df.localCheckpoint(eager=True)
+    if batch_df.isEmpty():
+        return None, None, None
+    return (batch_df,) + _monoid_prev(spark, root, fam, batch_id)
+
+
+def _monoid_commit(root: str, fam: str, batch_id: int, ordinal: int,
+                   state: DataFrame, *writes) -> None:
+    """Commit of a latest-only monoid callback: the ``_ord``-stamped
+    ``state`` of ``fam`` and the caller's other ``(DataFrame, dir)``
+    writes (its ``res`` rows, ledgers) overlapped as independent jobs —
+    they come from one deterministic lineage, so no write needs
+    another's read-back — then the ordinal marker and the vacuum of
+    superseded ``fam`` versions."""
+    sdir = _sdir(root, fam, batch_id)
+    _par_actions(*[
+        (lambda df=df, d=d: df.write.mode("overwrite").parquet(d))
+        for df, d in [(_stamp_ord(state, ordinal), sdir), *writes]])
+    _touch_ord(sdir, ordinal)
+    _vacuum_superseded(root, fam, batch_id)
+
+
+def _land_band_store(spark: SparkSession, batch_df: DataFrame, bucket,
+                     store_dir: str):
+    """Land the batch's values as its plain-overwrite band store tree
+    at ``store_dir`` and return the committed ``(value, _qb)`` read
+    back, or None for an all-empty batch.
+
+    The tree write is the batch's ONE materialising action on the raw
+    batch lineage (guide §2.4): the band merge, the fences and the
+    quantile answers all read the committed tree back, instead of an
+    eager ``localCheckpoint`` plus a second write of the same rows.
+    The tree is partitioned by the band GROUP ``_qbg`` (see
+    ``_QB_GROUP``; per-band dirs were 9–12 s of pure small-files
+    commit per batch at sf0.1) and sorted by ``_qb`` inside each group
+    file, so row-group stats prune probes. A re-delivered batch
+    overwrites exactly its own tree (file-source replay is
+    byte-identical), and a strict-prefix reader (t46's fence) cannot
+    see it by batch-id cutoff. An empty batch lands no ``_qbg=*`` dir;
+    its tree is decommitted by FS listing and no state is written —
+    the old ``isEmpty`` early return at zero extra jobs."""
+    (batch_df.select("value")
+             .withColumn("_qb", bucket)
+             .withColumn("_qbg", _qb_group_col(F.col("_qb")))
+             .repartition("_qbg")
+             .sortWithinPartitions("_qb")
+             .write.partitionBy("_qbg").mode("overwrite")
+             .parquet(store_dir))
+    fs, jdir = _hfs(store_dir)
+    if not any(st.getPath().getName().startswith("_qbg=")
+               for st in fs.listStatus(jdir)):
+        _decommit_rmtree(store_dir)
+        return None
+    return spark.read.parquet(store_dir).select("value", "_qb")
+
+
+def _merge_band_stats(banded: DataFrame, prev, ordinal: int,
+                      bands_dir: str) -> None:
+    """Merge the batch's per-band ``(_bn, _bmin, _bmax)`` into the
+    band state ``prev`` (count sums, min/max — a commutative monoid),
+    write it ``_ord``-stamped as one file to ``bands_dir`` and drop
+    the ordinal marker."""
+    b_stats = (banded.groupBy("_qb")
+                     .agg(F.count(F.lit(1)).alias("_bn"),
+                          F.min("value").alias("_bmin"),
+                          F.max("value").alias("_bmax")))
+    merged = b_stats if prev is None else (
+        prev.unionByName(b_stats)
+            .groupBy("_qb")
+            .agg(F.sum("_bn").cast("long").alias("_bn"),
+                 F.min("_bmin").alias("_bmin"),
+                 F.max("_bmax").alias("_bmax")))
+    (_stamp_ord(merged, ordinal).coalesce(1)
+     .write.mode("overwrite").parquet(bands_dir))
+    _touch_ord(bands_dir, ordinal)
+
+
+def _band_store_reader(spark: SparkSession, root: str, batch_id: int,
+                       inclusive: bool):
+    """``store_for_bands`` for ``state_exact_quantiles``: the union of
+    the band store's live trees at ``batch_id`` (``_store_live_trees``
+    — ≤ ``_STORE_LIVE_BOUND`` relations however long the stream has
+    run; ``inclusive=False`` is the strict prefix), each read
+    separately (one partitioned root per read) and pruned to the
+    target bands: the ``_qbg`` literal prunes dirs at file listing,
+    the ``_qb`` filter prunes row groups inside the group file."""
+    def store_for_bands(band_ids: list) -> DataFrame:
+        ids = [int(b) for b in band_ids]
+        gids = sorted({_qb_group_id(i) for i in ids})
+        parts = [spark.read.parquet(p)
+                      .filter(F.col("_qbg").isin(gids))
+                      .filter(F.col("_qb").isin(ids))
+                      .select("value", "_qb")
+                 for p in _store_live_trees(root, "store", "storec",
+                                            batch_id, inclusive)]
+        out = parts[0]
+        for pt in parts[1:]:
+            out = out.unionByName(pt)
+        return out
+    return store_for_bands
 
 
 def _x2_postings(docs: DataFrame) -> DataFrame:
@@ -4363,79 +4529,18 @@ def _t40_make_batch(spark: SparkSession, out_dir: str):
     bucket = double_value_bucket(F.col("value"), 2.0)
 
     def monitor_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # r16 (guide §2.4): the store tree write IS the batch's
-        # materialization — ONE action on the raw batch lineage (the
-        # same single-source-read discipline the r15 eager
-        # localCheckpoint enforced, without paying checkpoint + a
-        # second write of the same rows); the band merge reads the
-        # committed tree back. The store is a per-batch PARTITIONED
-        # TREE (family ``store``, one plain-overwrite dir per batch)
-        # partitioned by the BAND GROUP ``_qbg`` (see _QB_GROUP —
-        # per-band dirs were 9-12 s of pure small-files commit per
-        # batch at sf0.1), sorted by ``_qb`` within each group file
-        # so row-group stats prune probes; idempotent under retry
-        # with PLAIN overwrite commit semantics. An all-empty batch
-        # decommits its (empty) tree and leaves no state — exactly
-        # the old isEmpty early-return, checked by FS listing (an
-        # empty partitionBy write lands no ``_qbg=*`` dirs), zero
-        # extra jobs.
-        store_dir = _sdir(sroot, "store", batch_id)
-        (batch_df.select("value")
-                 .withColumn("_qb", bucket)
-                 .withColumn("_qbg", _qb_group_col(F.col("_qb")))
-                 .repartition("_qbg")
-                 .sortWithinPartitions("_qb")
-                 .write.partitionBy("_qbg").mode("overwrite")
-                 .parquet(store_dir))
-        fs, jdir = _hfs(store_dir)
-        if not any(st.getPath().getName().startswith("_qbg=")
-                   for st in fs.listStatus(jdir)):
-            _decommit_rmtree(store_dir)
+        banded = _land_band_store(spark, batch_df, bucket,
+                                  _sdir(sroot, "store", batch_id))
+        if banded is None:
             return
-        banded = (spark.read.parquet(store_dir)
-                       .select("value", "_qb"))
         prev, ordinal = _monoid_prev(spark, sroot, "bands", batch_id)
-        b_stats = (banded.groupBy("_qb")
-                         .agg(F.count(F.lit(1)).alias("_bn"),
-                              F.min("value").alias("_bmin"),
-                              F.max("value").alias("_bmax")))
-        merged = b_stats if prev is None else (
-            prev.unionByName(b_stats)
-                .groupBy("_qb")
-                .agg(F.sum("_bn").cast("long").alias("_bn"),
-                     F.min("_bmin").alias("_bmin"),
-                     F.max("_bmax").alias("_bmax")))
-        (_stamp_ord(merged, ordinal).coalesce(1)
-         .write.mode("overwrite").parquet(
-             _sdir(sroot, "bands", batch_id)))
-        _touch_ord(_sdir(sroot, "bands", batch_id), ordinal)
+        _merge_band_stats(banded, prev, ordinal,
+                          _sdir(sroot, "bands", batch_id))
         stats = (spark.read.parquet(_sdir(sroot, "bands", batch_id))
                       .drop("_ord"))
-
-        def store_for_bands(band_ids: list) -> DataFrame:
-            # union the LIVE trees of this prefix (latest snapshot +
-            # runs after it + uncovered increments ≤ batch_id —
-            # ≤ _STORE_LIVE_BOUND relations however long the stream
-            # has run); the _qbg isin literal prunes each tree at
-            # file listing, the _qb filter prunes row groups inside
-            # the group file — only the target bands' neighborhoods
-            # (~N·G/B rows each) are read
-            ids = [int(b) for b in band_ids]
-            gids = sorted({_qb_group_id(i) for i in ids})
-            parts = [spark.read.parquet(p)
-                          .filter(F.col("_qbg").isin(gids))
-                          .filter(F.col("_qb").isin(ids))
-                          .select("value", "_qb")
-                     for p in _store_live_trees(
-                         sroot, "store", "storec", batch_id,
-                         inclusive=True)]
-            out = parts[0]
-            for pt in parts[1:]:
-                out = out.unionByName(pt)
-            return out
-
-        q = state_exact_quantiles(stats, store_for_bands, "value",
-                                  [0.5, 0.95])
+        q = state_exact_quantiles(
+            stats, _band_store_reader(spark, sroot, batch_id, True),
+            "value", [0.5, 0.95])
         (q.select(F.lit(ordinal).cast("long").alias("batch_id"),
                   F.col("n").alias("n_events"),
                   round_half_up(F.col("q0"), 6).alias("p50_value"),
@@ -4520,32 +4625,19 @@ def t40_quantile_monitor_stream(spark: SparkSession,
     it); the monitor adds zero shuffles of history."""
     from ..sources.tables import load_table
 
-    out_dir = _mkdtemp(prefix="t40_qmon_")
-    stage = f"{out_dir}/landing"
-
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "ts", "value"))
-    n_staged = _write_arrival_files(
-        spark, ev.withColumn("arrival", _event_arrival(ev, 4)),
-        stage, n_files=4)
-
-    monitor_batch = _t40_make_batch(spark, out_dir)
-
-    n_batches, admitted = _drain_foreach(
-        _staged_stream(spark, stage,
-                       "event_id long, ts timestamp, value double",
-                       "t40_quantile_monitor_stream"),
-        monitor_batch, out_dir)
-    sroot = f"{out_dir}/state"
+    sroot, _, ok = _run_monoid_stream(
+        spark, "t40_quantile_monitor_stream", "t40_qmon_",
+        ev.withColumn("arrival", _event_arrival(ev, 4)), 4,
+        "event_id long, ts timestamp, value double", _t40_make_batch,
+        "bands")
     # the retention pins (≤ _MONOID_KEEP band-state versions, final
     # in-state ordinal 3, ≤ _STORE_LIVE_BOUND live store trees)
     # prove the vacuum/compaction actually ran — 4 un-vacuumed
     # versions or an unbounded live tree set would mean the
     # retention step is dead
-    maintained_ok = (n_batches == 4 and admitted == n_staged
-                     and _monoid_retained(spark, sroot, "bands", 4)
-                     and len(_store_live_trees(sroot, "store",
-                                               "storec"))
+    maintained_ok = (ok and len(_store_live_trees(sroot, "store", "storec"))
                      <= _STORE_LIVE_BOUND)
     return (_read_family(spark, sroot, "res")
             .select("batch_id", "n_events", "p50_value",
@@ -4960,40 +5052,13 @@ def _t47_make_batch(spark: SparkSession, out_dir: str):
     bucket = double_value_bucket(F.col("value"), 2.0)
 
     def tiered_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # r16: the t40 rewrite (change 4) applied here too — the
-        # store-tree write is the batch's ONE materializing action,
-        # the band merge reads the committed tree back, and an
-        # all-empty batch decommits its empty tree by FS listing.
-        store_dir = _sdir(sroot, "store", batch_id)
-        (batch_df.select("value")
-                 .withColumn("_qb", bucket)
-                 .withColumn("_qbg", _qb_group_col(F.col("_qb")))
-                 .repartition("_qbg")
-                 .sortWithinPartitions("_qb")
-                 .write.partitionBy("_qbg").mode("overwrite")
-                 .parquet(store_dir))
-        fs, jdir = _hfs(store_dir)
-        if not any(st.getPath().getName().startswith("_qbg=")
-                   for st in fs.listStatus(jdir)):
-            _decommit_rmtree(store_dir)
+        banded = _land_band_store(spark, batch_df, bucket,
+                                  _sdir(sroot, "store", batch_id))
+        if banded is None:
             return
-        banded = (spark.read.parquet(store_dir)
-                       .select("value", "_qb"))
         prev, ordinal = _monoid_prev(spark, sroot, "bands", batch_id)
-        b_stats = (banded.groupBy("_qb")
-                         .agg(F.count(F.lit(1)).alias("_bn"),
-                              F.min("value").alias("_bmin"),
-                              F.max("value").alias("_bmax")))
-        merged = b_stats if prev is None else (
-            prev.unionByName(b_stats)
-                .groupBy("_qb")
-                .agg(F.sum("_bn").cast("long").alias("_bn"),
-                     F.min("_bmin").alias("_bmin"),
-                     F.max("_bmax").alias("_bmax")))
-        (_stamp_ord(merged, ordinal).coalesce(1)
-         .write.mode("overwrite").parquet(
-             _sdir(sroot, "bands", batch_id)))
-        _touch_ord(_sdir(sroot, "bands", batch_id), ordinal)
+        _merge_band_stats(banded, prev, ordinal,
+                          _sdir(sroot, "bands", batch_id))
         _maybe_compact_store(spark, sroot, "store", "storec",
                              batch_id, run_threshold=_T47_RUN_T,
                              snap_threshold=_T47_SNAP_T)
@@ -5003,24 +5068,9 @@ def _t47_make_batch(spark: SparkSession, out_dir: str):
                                      batch_id, inclusive=True))
         stats = (spark.read.parquet(_sdir(sroot, "bands", batch_id))
                       .drop("_ord"))
-
-        def store_for_bands(band_ids: list) -> DataFrame:
-            ids = [int(x) for x in band_ids]
-            gids = sorted({_qb_group_id(i) for i in ids})
-            parts = [spark.read.parquet(p)
-                          .filter(F.col("_qbg").isin(gids))
-                          .filter(F.col("_qb").isin(ids))
-                          .select("value", "_qb")
-                     for p in _store_live_trees(
-                         sroot, "store", "storec", batch_id,
-                         inclusive=True)]
-            out = parts[0]
-            for pt in parts[1:]:
-                out = out.unionByName(pt)
-            return out
-
-        q = state_exact_quantiles(stats, store_for_bands, "value",
-                                  [0.5, 0.95])
+        q = state_exact_quantiles(
+            stats, _band_store_reader(spark, sroot, batch_id, True),
+            "value", [0.5, 0.95])
         (q.select(F.lit(ordinal).cast("long").alias("batch_id"),
                   F.col("n").alias("n_events"),
                   round_half_up(F.col("q0"), 6).alias("p50_value"),
@@ -5105,27 +5155,14 @@ def t47_tiered_compaction_stream(spark: SparkSession,
     drive this exact kit path."""
     from ..sources.tables import load_table
 
-    out_dir = _mkdtemp(prefix="t47_tiered_")
-    stage = f"{out_dir}/landing"
-
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "ts", "value"))
-    n_staged = _write_arrival_files(
-        spark, ev.withColumn("arrival", _event_arrival(ev, 12)),
-        stage, n_files=12)
-
-    tiered_batch = _t47_make_batch(spark, out_dir)
-
-    n_batches, admitted = _drain_foreach(
-        _staged_stream(spark, stage,
-                       "event_id long, ts timestamp, value double",
-                       "t47_tiered_compaction_stream"),
-        tiered_batch, out_dir)
-    sroot = f"{out_dir}/state"
-    maintained_ok = (n_batches == 12 and admitted == n_staged
-                     and _monoid_retained(spark, sroot, "bands", 12)
-                     and len(_store_live_trees(sroot, "store",
-                                               "storec"))
+    sroot, _, ok = _run_monoid_stream(
+        spark, "t47_tiered_compaction_stream", "t47_tiered_",
+        ev.withColumn("arrival", _event_arrival(ev, 12)), 12,
+        "event_id long, ts timestamp, value double", _t47_make_batch,
+        "bands")
+    maintained_ok = (ok and len(_store_live_trees(sroot, "store", "storec"))
                      <= 1 + (_T47_SNAP_T - 1) + _T47_RUN_T)
     return (_read_family(spark, sroot, "res")
             .select("batch_id", "n_events", "p50_value", "p95_value",
@@ -5152,20 +5189,18 @@ def _t42_make_batch(spark: SparkSession, out_dir: str):
     results family ``res`` — batch-id-keyed, predecessor by listing
     (durable-state kit). Module-level for the durability drills."""
     sroot = f"{out_dir}/state"
-    v = F.conv(F.substring(
-        F.md5(F.concat(F.lit("rsv:"),
-                       F.col("doc_id").cast("string"))), 1, 6),
-        16, 10).cast("long")
+    v = md5_prefix_long(
+        F.concat(F.lit("rsv:"), F.col("doc_id").cast("string")), 6)
     u = (v.cast("double") + F.lit(0.5)) / F.lit(16777216.0)
     w = (F.col("n_chars") + F.lit(1)).cast("double")
     key = (F.round(F.pow(u, F.lit(1.0) / w).cast("decimal(38,10)"),
                    10).cast("double"))
 
     def rsv_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint(eager=True)
-        if batch_df.isEmpty():
+        batch_df, prev, ordinal = _monoid_open(spark, batch_df, sroot,
+                                               "rsv", batch_id)
+        if batch_df is None:
             return
-        prev, ordinal = _monoid_prev(spark, sroot, "rsv", batch_id)
         cand = (batch_df.select("doc_id", key.alias("rsv_key"))
                         .orderBy(F.col("rsv_key").desc(), "doc_id")
                         .limit(_RSV_K))
@@ -5173,20 +5208,12 @@ def _t42_make_batch(spark: SparkSession, out_dir: str):
             prev.unionByName(cand)
                 .orderBy(F.col("rsv_key").desc(), "doc_id")
                 .limit(_RSV_K))
-        # r16 (guide §2.6): the result rows ARE the new reservoir plus
-        # the ordinal — write both families from the same deterministic
-        # lineage (top-k under a total order) as overlapped independent
-        # jobs instead of state write → read-back → result write.
-        _par_actions(
-            lambda: _stamp_ord(merged, ordinal).write.mode("overwrite")
-                    .parquet(_sdir(sroot, "rsv", batch_id)),
-            lambda: merged.select(F.lit(ordinal).cast("long")
-                                   .alias("batch_id"),
-                                  "doc_id", "rsv_key")
-                    .write.mode("overwrite").parquet(
-                        _sdir(sroot, "res", batch_id)))
-        _touch_ord(_sdir(sroot, "rsv", batch_id), ordinal)
-        _vacuum_superseded(sroot, "rsv", batch_id)
+        # the result rows ARE the new reservoir (top-k under a total
+        # order) plus the ordinal
+        _monoid_commit(sroot, "rsv", batch_id, ordinal, merged, (
+            merged.select(F.lit(ordinal).cast("long").alias("batch_id"),
+                          "doc_id", "rsv_key"),
+            _sdir(sroot, "res", batch_id)))
 
     return rsv_batch
 
@@ -5245,25 +5272,12 @@ def t42_reservoir_sample_stream(spark: SparkSession,
     proven by the drills in tests/test_stream_durability.py."""
     from ..sources.tables import load_table
 
-    out_dir = _mkdtemp(prefix="t42_rsv_")
-    stage = f"{out_dir}/landing"
-
     d = load_table(spark, sf_dir, "documents") \
         .select("doc_id", "n_chars")
-    n_staged = _write_arrival_files(
-        spark, d.withColumn("arrival",
-                            (F.col("doc_id") % 4).cast("int")),
-        stage, n_files=4)
-
-    rsv_batch = _t42_make_batch(spark, out_dir)
-
-    n_batches, admitted = _drain_foreach(
-        _staged_stream(spark, stage, "doc_id long, n_chars long",
-                       "t42_reservoir_sample_stream"),
-        rsv_batch, out_dir)
-    sroot = f"{out_dir}/state"
-    maintained_ok = (n_batches == 4 and admitted == n_staged
-                     and _monoid_retained(spark, sroot, "rsv", 4))
+    sroot, _, maintained_ok = _run_monoid_stream(
+        spark, "t42_reservoir_sample_stream", "t42_rsv_",
+        d.withColumn("arrival", (F.col("doc_id") % 4).cast("int")), 4,
+        "doc_id long, n_chars long", _t42_make_batch, "rsv")
     return (_read_family(spark, sroot, "res")
             .select("batch_id", "doc_id", "rsv_key",
                     F.lit(bool(maintained_ok))
@@ -5289,13 +5303,10 @@ def _t43_make_batch(spark: SparkSession, out_dir: str):
     sroot = f"{out_dir}/state"
 
     def dcy_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # ONE eager read of the micro-batch source (foreachBatch
-        # re-scans the source per action; a bare isEmpty() would
-        # double numInputRows and break the admission pin)
-        batch_df = batch_df.localCheckpoint(eager=True)
-        if batch_df.isEmpty():
+        batch_df, prev, ordinal = _monoid_open(spark, batch_df, sroot,
+                                               "dcy", batch_id)
+        if batch_df is None:
             return
-        prev, ordinal = _monoid_prev(spark, sroot, "dcy", batch_id)
         agg = (batch_df.groupBy("event_type")
                        .agg(F.count(F.lit(1)).cast("long").alias("bn"),
                             F.sum(_value_cents()).cast("long").alias("bc")))
@@ -5315,22 +5326,13 @@ def _t43_make_batch(spark: SparkSession, out_dir: str):
                 (F.expr("coalesce(dc, 0) div 2")
                  + F.coalesce(F.col("bc"), F.lit(0)) * 8).alias("dc"),
                 F.coalesce(F.col("bn"), F.lit(0)).alias("n_batch")))
-        # r16 (guide §2.6): state + result from the same deterministic
-        # lineage (bounded-key integer aggregates), overlapped, instead
-        # of state write → read-back → result write.
-        _par_actions(
-            lambda: _stamp_ord(merged, ordinal).write.mode("overwrite")
-                    .parquet(_sdir(sroot, "dcy", batch_id)),
-            lambda: merged.select(F.lit(ordinal).cast("long")
-                                   .alias("batch_id"),
-                                  "event_type",
-                                  F.col("dn").alias("decayed_n_x8"),
-                                  F.col("dc").alias("decayed_cents_x8"),
-                                  "n_batch")
-                    .write.mode("overwrite").parquet(
-                        _sdir(sroot, "res", batch_id)))
-        _touch_ord(_sdir(sroot, "dcy", batch_id), ordinal)
-        _vacuum_superseded(sroot, "dcy", batch_id)
+        _monoid_commit(sroot, "dcy", batch_id, ordinal, merged, (
+            merged.select(F.lit(ordinal).cast("long").alias("batch_id"),
+                          "event_type",
+                          F.col("dn").alias("decayed_n_x8"),
+                          F.col("dc").alias("decayed_cents_x8"),
+                          "n_batch"),
+            _sdir(sroot, "res", batch_id)))
 
     return dcy_batch
 
@@ -5396,26 +5398,13 @@ def t43_decayed_counter_stream(spark: SparkSession,
     committed state versions."""
     from ..sources.tables import load_table
 
-    out_dir = _mkdtemp(prefix="t43_dcy_")
-    stage = f"{out_dir}/landing"
-
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "ts", "event_type", "value"))
-    n_staged = _write_arrival_files(
-        spark, ev.withColumn("arrival", _event_arrival(ev, 4)),
-        stage, n_files=4)
-
-    dcy_batch = _t43_make_batch(spark, out_dir)
-
-    n_batches, admitted = _drain_foreach(
-        _staged_stream(spark, stage,
-                       "event_id long, ts timestamp, event_type string, "
-                       "value double",
-                       "t43_decayed_counter_stream"),
-        dcy_batch, out_dir)
-    sroot = f"{out_dir}/state"
-    maintained_ok = (n_batches == 4 and admitted == n_staged
-                     and _monoid_retained(spark, sroot, "dcy", 4))
+    sroot, _, maintained_ok = _run_monoid_stream(
+        spark, "t43_decayed_counter_stream", "t43_dcy_",
+        ev.withColumn("arrival", _event_arrival(ev, 4)), 4,
+        "event_id long, ts timestamp, event_type string, value double",
+        _t43_make_batch, "dcy")
     return (_read_family(spark, sroot, "res")
             .select("batch_id", "event_type", "decayed_n_x8",
                     "decayed_cents_x8", "n_batch",
@@ -5444,37 +5433,27 @@ def _t44_make_batch(spark: SparkSession, out_dir: str):
     sroot = f"{out_dir}/state"
     ukey = F.concat(F.col("user_id").cast("string"), F.lit("@"),
                     F.to_date("ts").cast("string"))
-    u_col = (F.conv(F.substring(
-        F.md5(F.concat(F.lit("dmon:"), ukey)), 1, 15), 16, 10)
-        .cast("long") / F.lit(1152921504606846976.0))
+    u_col = (md5_prefix_long(F.concat(F.lit("dmon:"), ukey), 15)
+             / F.lit(1152921504606846976.0))
 
     def dmon_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint(eager=True)
-        if batch_df.isEmpty():
+        batch_df, prev, ordinal = _monoid_open(spark, batch_df, sroot,
+                                               "kmv", batch_id)
+        if batch_df is None:
             return
-        prev, ordinal = _monoid_prev(spark, sroot, "kmv", batch_id)
         cand = (batch_df.select(u_col.alias("u")).distinct()
                         .orderBy("u").limit(_DMON_K))
         merged = cand if prev is None else (
             prev.unionByName(cand).distinct()
                 .orderBy("u").limit(_DMON_K))
-        # r16 (guide §2.6): state + result from the same deterministic
-        # lineage (k-min under a strict total order — `u` is distinct),
-        # overlapped, instead of state write → read-back → result write.
-        _par_actions(
-            lambda: _stamp_ord(merged, ordinal).write.mode("overwrite")
-                    .parquet(_sdir(sroot, "kmv", batch_id)),
-            lambda: merged
-                    .agg(F.count(F.lit(1)).cast("long")
-                          .alias("n_sketch"),
-                         F.max("u").alias("u_max"))
-                    .select(F.lit(ordinal).cast("long")
-                             .alias("batch_id"),
-                            "n_sketch", "u_max")
-                    .write.mode("overwrite").parquet(
-                        _sdir(sroot, "res", batch_id)))
-        _touch_ord(_sdir(sroot, "kmv", batch_id), ordinal)
-        _vacuum_superseded(sroot, "kmv", batch_id)
+        # k-min under a strict total order (`u` is distinct), so the
+        # state and the result come from one deterministic lineage
+        _monoid_commit(sroot, "kmv", batch_id, ordinal, merged, (
+            merged.agg(F.count(F.lit(1)).cast("long").alias("n_sketch"),
+                       F.max("u").alias("u_max"))
+                  .select(F.lit(ordinal).cast("long").alias("batch_id"),
+                          "n_sketch", "u_max"),
+            _sdir(sroot, "res", batch_id)))
 
     return dmon_batch
 
@@ -5567,27 +5546,16 @@ def t44_distinct_monitor_stream(spark: SparkSession,
     keeps without a count-distinct over an ever-growing prefix."""
     from ..sources.tables import load_table
 
-    out_dir = _mkdtemp(prefix="t44_dmon_")
-    stage = f"{out_dir}/landing"
-
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "ts", "user_id"))
     arrival = _event_arrival(ev, 4)
-    n_staged = _write_arrival_files(
-        spark, ev.withColumn("arrival", arrival), stage, n_files=4)
-
+    sroot, stage, maintained_ok = _run_monoid_stream(
+        spark, "t44_distinct_monitor_stream", "t44_dmon_",
+        ev.withColumn("arrival", arrival), 4,
+        "event_id long, ts timestamp, user_id long", _t44_make_batch,
+        "kmv")
     ukey = F.concat(F.col("user_id").cast("string"), F.lit("@"),
                     F.to_date("ts").cast("string"))
-    dmon_batch = _t44_make_batch(spark, out_dir)
-
-    n_batches, admitted = _drain_foreach(
-        _staged_stream(spark, stage,
-                       "event_id long, ts timestamp, user_id long",
-                       "t44_distinct_monitor_stream"),
-        dmon_batch, out_dir)
-    sroot = f"{out_dir}/state"
-    maintained_ok = (n_batches == 4 and admitted == n_staged
-                     and _monoid_retained(spark, sroot, "kmv", 4))
 
     # --- referee (test scaffolding): exact prefix distincts from the
     # staged landing, graded against the maintained estimates.
@@ -5709,10 +5677,10 @@ def _t45_make_batch(spark: SparkSession, out_dir: str):
     sroot = f"{out_dir}/state"
 
     def mgs_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint(eager=True)
-        if batch_df.isEmpty():
+        batch_df, prev, ordinal = _monoid_open(spark, batch_df, sroot,
+                                               "mgs", batch_id)
+        if batch_df is None:
             return
-        prev, ordinal = _monoid_prev(spark, sroot, "mgs", batch_id)
         cum_dir = _latest_before(sroot, "cum", batch_id)
         bc = (batch_df.select(F.explode(tokens_col("text"))
                               .alias("tok"))
@@ -5745,28 +5713,18 @@ def _t45_make_batch(spark: SparkSession, out_dir: str):
                           .select("tok",
                                   (F.col("w") - F.lit(s_val))
                                   .alias("w")))
-        # r16 (guide §2.6): counters state, error ledger and result
-        # rows are three independent writes off the same checkpointed
-        # ``combined`` (pruned is a cheap deterministic filter of it)
-        # — overlap them instead of state write → read-back → result
-        # write.
-        _par_actions(
-            lambda: _stamp_ord(pruned, ordinal).write.mode("overwrite")
-                    .parquet(_sdir(sroot, "mgs", batch_id)),
-            lambda: spark.range(1)
-                    .select(F.lit(s_cum).cast("long").alias("s_cum"))
-                    .write.mode("overwrite").parquet(
-                        _sdir(sroot, "cum", batch_id)),
-            lambda: pruned
-                    .select(F.lit(ordinal).cast("long")
-                             .alias("batch_id"),
-                            "tok", F.col("w").alias("w_est"),
-                            F.lit(s_cum).cast("long").alias("s_cum"))
-                    .write.mode("overwrite").parquet(
-                        _sdir(sroot, "res", batch_id)))
-        _touch_ord(_sdir(sroot, "mgs", batch_id), ordinal)
+        # counters, error ledger and result rows all derive from the
+        # checkpointed ``combined`` (pruned is a deterministic filter)
+        _monoid_commit(
+            sroot, "mgs", batch_id, ordinal, pruned,
+            (spark.range(1).select(F.lit(s_cum).cast("long")
+                                   .alias("s_cum")),
+             _sdir(sroot, "cum", batch_id)),
+            (pruned.select(F.lit(ordinal).cast("long").alias("batch_id"),
+                           "tok", F.col("w").alias("w_est"),
+                           F.lit(s_cum).cast("long").alias("s_cum")),
+             _sdir(sroot, "res", batch_id)))
         # the error ledger is latest-only state too — same vacuum
-        _vacuum_superseded(sroot, "mgs", batch_id)
         _vacuum_superseded(sroot, "cum", batch_id)
 
     return mgs_batch
@@ -5807,24 +5765,11 @@ def t45_heavy_hitter_stream(spark: SparkSession,
     columns are the point, not a pretty leaderboard."""
     from ..sources.tables import load_table
 
-    out_dir = _mkdtemp(prefix="t45_mgs_")
-    stage = f"{out_dir}/landing"
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n_staged = _write_arrival_files(
-        spark, d.withColumn("arrival",
-                            (F.col("doc_id") % 4).cast("int")),
-        stage, n_files=4)
-
-    mgs_batch = _t45_make_batch(spark, out_dir)
-
-    n_batches, admitted = _drain_foreach(
-        _staged_stream(spark, stage, "doc_id long, text string",
-                       "t45_heavy_hitter_stream"),
-        mgs_batch, out_dir)
-    sroot = f"{out_dir}/state"
-    maintained_ok = (n_batches == 4 and admitted == n_staged
-                     and _monoid_retained(spark, sroot, "mgs", 4))
+    sroot, stage, maintained_ok = _run_monoid_stream(
+        spark, "t45_heavy_hitter_stream", "t45_mgs_",
+        d.withColumn("arrival", (F.col("doc_id") % 4).cast("int")), 4,
+        "doc_id long, text string", _t45_make_batch, "mgs")
 
     # --- referee (test scaffolding): exact prefix counts for the
     # ≤ 4·K emitted keys, from the staged landing
@@ -5885,34 +5830,10 @@ def _t46_make_batch(spark: SparkSession, out_dir: str):
     bucket = double_value_bucket(F.col("value"), 2.0)
 
     def preq_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # r16 (guide §2.4, the t40 rewrite applied here): the store
-        # tree write is the batch's ONE materializing action (was:
-        # eager localCheckpoint + a second write of the same rows at
-        # the end); everything else reads the committed tree back.
-        # Landing the tree BEFORE the fence is judged cannot poison
-        # the fence: the fence resolves the STRICT prefix
-        # (inclusive=False — increments < batch_id only), so the
-        # batch's own tree is invisible to it by batch-id cutoff,
-        # exactly the property the same-batch replay drill pins (a
-        # retried batch's first attempt may ALREADY have written this
-        # tree — the kit was designed for that order). An all-empty
-        # batch decommits its empty tree and leaves no state (FS
-        # listing check — no ``_qbg=*`` dirs — zero extra jobs).
-        store_dir = _sdir(sroot, "store", batch_id)
-        (batch_df.select("value")
-                 .withColumn("_qb", bucket)
-                 .withColumn("_qbg", _qb_group_col(F.col("_qb")))
-                 .repartition("_qbg")
-                 .sortWithinPartitions("_qb")
-                 .write.partitionBy("_qbg").mode("overwrite")
-                 .parquet(store_dir))
-        fs, jdir = _hfs(store_dir)
-        if not any(st.getPath().getName().startswith("_qbg=")
-                   for st in fs.listStatus(jdir)):
-            _decommit_rmtree(store_dir)
+        banded = _land_band_store(spark, batch_df, bucket,
+                                  _sdir(sroot, "store", batch_id))
+        if banded is None:
             return
-        banded = (spark.read.parquet(store_dir)
-                       .select("value", "_qb"))
         prev, ordinal = _monoid_prev(spark, sroot, "bands", batch_id)
         if prev is None:
             row = banded.agg(
@@ -5923,32 +5844,11 @@ def _t46_make_batch(spark: SparkSession, out_dir: str):
                 F.lit(0).cast("long").alias("n_outliers_hi"),
                 F.lit(0).cast("long").alias("n_outliers_lo"))
         else:
-            stats = prev
-
-            def store_for_bands(band_ids: list) -> DataFrame:
-                # STRICT prefix read: only PRIOR batches' live trees
-                # feed the fence (a retried batch's own increment
-                # from a failed attempt is excluded by the strict
-                # cutoff; its own run or snapshot, if any, contains
-                # only values strictly before this batch and is
-                # safe); _qbg prunes dirs, _qb prunes row groups
-                # (the _QB_GROUP layout)
-                ids = [int(x) for x in band_ids]
-                gids = sorted({_qb_group_id(i) for i in ids})
-                parts = [spark.read.parquet(p)
-                              .filter(F.col("_qbg").isin(gids))
-                              .filter(F.col("_qb").isin(ids))
-                              .select("value", "_qb")
-                         for p in _store_live_trees(
-                             sroot, "store", "storec", batch_id,
-                             inclusive=False)]
-                out = parts[0]
-                for pt in parts[1:]:
-                    out = out.unionByName(pt)
-                return out
-
-            q = state_exact_quantiles(stats, store_for_bands,
-                                      "value", [0.25, 0.75])
+            # the STRICT prefix: only prior batches' live trees feed
+            # the fence
+            q = state_exact_quantiles(
+                prev, _band_store_reader(spark, sroot, batch_id, False),
+                "value", [0.25, 0.75])
             # r16: the fences ride into the flagging aggregation as a
             # broadcast 1-row crossJoin instead of a separate
             # ``q.first()`` action + literal re-entry — one fewer
@@ -5975,20 +5875,8 @@ def _t46_make_batch(spark: SparkSession, out_dir: str):
         row.write.mode("overwrite").parquet(
             _sdir(sroot, "res", batch_id))
         # train AFTER test: merge the batch's bands into new state
-        b_stats = (banded.groupBy("_qb")
-                         .agg(F.count(F.lit(1)).alias("_bn"),
-                              F.min("value").alias("_bmin"),
-                              F.max("value").alias("_bmax")))
-        merged = b_stats if prev is None else (
-            prev.unionByName(b_stats)
-                .groupBy("_qb")
-                .agg(F.sum("_bn").cast("long").alias("_bn"),
-                     F.min("_bmin").alias("_bmin"),
-                     F.max("_bmax").alias("_bmax")))
-        (_stamp_ord(merged, ordinal).coalesce(1)
-         .write.mode("overwrite").parquet(
-             _sdir(sroot, "bands", batch_id)))
-        _touch_ord(_sdir(sroot, "bands", batch_id), ordinal)
+        _merge_band_stats(banded, prev, ordinal,
+                          _sdir(sroot, "bands", batch_id))
         # retention LAST: runs and snapshots cover only values
         # strictly before batch_id, exactly what a same-batch retry's
         # fence resolves
@@ -6078,29 +5966,16 @@ def t46_prequential_anomaly_stream(spark: SparkSession,
     its true value, not asserted away."""
     from ..sources.tables import load_table
 
-    out_dir = _mkdtemp(prefix="t46_preq_")
-    stage = f"{out_dir}/landing"
-
     ev = (load_table(spark, sf_dir, "events")
           .select("event_id", "ts", "value"))
-    n_staged = _write_arrival_files(
-        spark, ev.withColumn("arrival", _event_arrival(ev, 4)),
-        stage, n_files=4)
-
-    preq_batch = _t46_make_batch(spark, out_dir)
-
-    n_batches, admitted = _drain_foreach(
-        _staged_stream(spark, stage,
-                       "event_id long, ts timestamp, value double",
-                       "t46_prequential_anomaly_stream"),
-        preq_batch, out_dir)
-    sroot = f"{out_dir}/state"
+    sroot, _, ok = _run_monoid_stream(
+        spark, "t46_prequential_anomaly_stream", "t46_preq_",
+        ev.withColumn("arrival", _event_arrival(ev, 4)), 4,
+        "event_id long, ts timestamp, value double", _t46_make_batch,
+        "bands")
     # retention pins (r13): superseded band-state vacuumed, final
     # ordinal carried in-state, store live set bounded
-    maintained_ok = (n_batches == 4 and admitted == n_staged
-                     and _monoid_retained(spark, sroot, "bands", 4)
-                     and len(_store_live_trees(sroot, "store",
-                                               "storec"))
+    maintained_ok = (ok and len(_store_live_trees(sroot, "store", "storec"))
                      <= _STORE_LIVE_BOUND)
     return (_read_family(spark, sroot, "res")
             .select("batch_id", "n_arrivals", "p25_prior",

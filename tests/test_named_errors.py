@@ -5,6 +5,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from stock_data_warehouse_spark.operators import staircase
+from stock_data_warehouse_spark.operators.kmeans import (
+    SampleIdUniverseError, kmeans_fit_assign_grouped,
+)
 from stock_data_warehouse_spark.operators.staircase import (
     STATE_BAND_CAP, BandStateTooLargeError, state_exact_quantiles,
 )
@@ -78,3 +81,21 @@ def test_state_dir_with_two_ordinal_markers_is_rejected(spark,
     (d / "_ORD_3").touch()
     with pytest.raises(OrdinalMarkerError):
         _ord_from_marker(str(d))
+
+
+def test_grouped_kmeans_sample_groups_share_one_id_universe(spark):
+    """Sampled grouped k-means seeds every group with the same hash-min
+    ids; a group missing one of them is rejected before training."""
+    vecs = spark.createDataFrame([(0, 1, [0.0, 1.0])],
+                                 "j int, vec_id long, sv array<double>")
+    rows = [(0, 1, [0.0, 1.0]), (0, 2, [1.0, 0.0]),
+            (1, 1, [0.0, 1.0]), (1, 3, [1.0, 1.0])]
+    with pytest.raises(SampleIdUniverseError):
+        kmeans_fit_assign_grouped(vecs, "j", "vec_id", "sv", k=1,
+                                  n_iter=1, train_sample=2,
+                                  assign=False, sample_rows=rows)
+    shared = rows[:2] + [(1, 1, [0.0, 1.0]), (1, 2, [1.0, 1.0])]
+    _, cb = kmeans_fit_assign_grouped(vecs, "j", "vec_id", "sv", k=1,
+                                      n_iter=1, train_sample=2,
+                                      assign=False, sample_rows=shared)
+    assert sorted(r["grp"] for r in cb.collect()) == [0, 1]

@@ -478,3 +478,25 @@ def test_bpe_replace_merge_equals_array_walk_merge(spark):
         "'<' || pa || '><' || pb || '>', "
         "'<' || pa || ' ' || pb || '>') <> want").fetchone()[0]
     assert n_bad == 0
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.lists(st.text(max_size=40), min_size=1, max_size=30))
+def test_md5_prefix_long_matches_python_hex_prefix(spark, texts):
+    """Property: ``md5_prefix_long(s, k)`` is the integer of the first
+    ``k`` hex digits of md5(s) (UTF-8), for k = 6 and 15 — the two
+    widths the coins, folds and 60-bit uniforms use."""
+    import hashlib
+
+    from stock_data_warehouse_spark.functions.scalars import (
+        md5_prefix_long,
+    )
+
+    rows = [(i, t) for i, t in enumerate(texts)]
+    df = spark.createDataFrame(rows, "id long, s string")
+    got = {r["id"]: (r["h6"], r["h15"]) for r in df.select(
+        "id", md5_prefix_long(F.col("s"), 6).alias("h6"),
+        md5_prefix_long(F.col("s"), 15).alias("h15")).collect()}
+    for i, t in rows:
+        hx = hashlib.md5(t.encode("utf-8")).hexdigest()
+        assert got[i] == (int(hx[:6], 16), int(hx[:15], 16)), t

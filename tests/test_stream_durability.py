@@ -113,6 +113,27 @@ def test_file_streams_open_only_through_the_driver():
     assert owners == {"events_stream", "_staged_stream"}, owners
 
 
+def test_band_store_trees_are_written_only_by_the_kit():
+    """The partitioned band-store tree write lives in
+    ``_land_band_store`` (the per-batch tree) and
+    ``_maybe_compact_store`` (runs and snapshots) only, so a
+    maintenance callback cannot grow its own copy of the store body
+    again. ``_write_arrival_files`` partitions the staged landing by
+    ``arrival`` and is not a store writer."""
+    import ast
+    import pathlib
+    text = pathlib.Path(J.__file__).read_text()
+    spans = [(n.lineno, n.end_lineno, n.name)
+             for n in ast.parse(text).body
+             if isinstance(n, ast.FunctionDef)]
+    owners = {next((name for lo, hi, name in spans if lo <= i <= hi),
+                   f"module line {i}")
+              for i, ln in enumerate(text.splitlines(), 1)
+              if ".write.partitionBy(" in ln}
+    assert owners - {"_write_arrival_files"} == {
+        "_land_band_store", "_maybe_compact_store"}, owners
+
+
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
@@ -801,3 +822,70 @@ def test_x2_triggered_restart_fires_in_second_lifetime(spark):
     fired = [r[5] for r in clean_res]  # compaction_fired per batch
     assert fired == [False, False, True]
     assert clean_rmv == [2]
+
+
+def test_par_actions_failure_cancels_overlapped_jobs(spark, monkeypatch):
+    """An overlapped write that raises fails its micro-batch promptly:
+    ``_par_actions`` cancels the tagged sibling jobs (here a job that
+    would run for minutes) instead of letting them run to the end, and
+    leaves no active job behind. The sibling's job ran under the
+    caller's job group (the workers inherit it). A replay of the
+    failed batch then converges to the clean run."""
+    import threading
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    batches = _doc_pairs(spark)
+    real = J._par_actions
+    started = threading.Event()
+
+    def long_job():
+        started.set()
+        spark.range(0, 1 << 40, 1, 1).agg(F.max("id")).collect()
+
+    def failing_write():
+        started.wait(60)
+        time.sleep(1.0)  # the sibling's job is submitted and running
+        raise RuntimeError("injected overlapped write failure")
+
+    def fail_once(*thunks):
+        monkeypatch.setattr(J, "_par_actions", real)
+        return real(*thunks, long_job, failing_write)
+
+    def final(out_dir):
+        sroot = f"{out_dir}/state"
+        return (_rows(J._read_family(spark, sroot, "res")),
+                _rows(spark.read.parquet(J._sdir(sroot, "rsv", 3))))
+
+    clean_dir = J._mkdtemp(prefix="dur_par_clean_")
+    cb = J._t42_make_batch(spark, clean_dir)
+    for bid, df in enumerate(batches):
+        cb(df, bid)
+
+    out_dir = J._mkdtemp(prefix="dur_par_fail_")
+    cb = J._t42_make_batch(spark, out_dir)
+    cb(batches[0], 0)
+    monkeypatch.setattr(J, "_par_actions", fail_once)
+    sc.setJobGroup("par_actions_drill", "overlapped write failure")
+    t0 = time.monotonic()
+    try:
+        with pytest.raises(RuntimeError, match="injected"):
+            cb(batches[1], 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert time.monotonic() - t0 < 30
+    # job ends reach the status store through the listener bus
+    deadline = time.monotonic() + 10
+    while tracker.getActiveJobsIds() and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert tracker.getActiveJobsIds() == []
+    drill_jobs = [tracker.getJobInfo(j)
+                  for j in tracker.getJobIdsForGroup("par_actions_drill")]
+    assert any(j is not None and j.status == "FAILED"
+               for j in drill_jobs), drill_jobs
+
+    for bid in (1, 2, 3):
+        cb(batches[bid], bid)
+    assert final(out_dir) == final(clean_dir)
