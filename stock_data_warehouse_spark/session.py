@@ -50,6 +50,43 @@ Memory
   memory manager; no GC ever reclaims one. tests/test_session_memory.py
   checks that execution memory reads 0 after an aggregation and a
   sort.
+
+JIT
+---
+
+- **C2 only for code that stays hot.** ``spark.driver.defaultJavaOptions``
+  raises the driver JVM's three tier-4 invocation thresholds 10x
+  (``JIT_FLAGS``). A method runs C1 code until it has been called often
+  enough for C2's slower, better compile to pay off. An operation here
+  runs for seconds, and much of its code is Janino-generated classes
+  that live only that long; at the JVM's thresholds C2 compiled them
+  anyway, and its threads took about half of the ``corpus_curation``
+  benchmark's ``cpu_s_per_op`` at sf0.01. Over 10 alternating pairs
+  this posture moved that metric from 3.43 to 2.94 s and the compiler
+  threads' part from 1.87 to 1.09 s. ``jit_compile_ms`` reads the JVM's
+  total compile time.
+- **Why not C1 only.** ``-XX:TieredStopAtLevel=1`` removes more compile
+  time, but C1 code is slow in long hot loops: at sf0.1 it ran
+  ``bench.py``'s a17_count_min in 9.0 s against 2.3 s at the JVM
+  default and 2.6 s here. Thresholds 30x and 100x the JVM's saved no
+  more CPU at sf0.01 and cost more at sf0.1, because methods spend
+  longer in C1's profiling tier. The loop (on-stack replacement)
+  threshold is left alone, so a long loop still reaches C2 on the
+  JVM's schedule.
+- **How the flags arrive.** ``defaultJavaOptions`` is Spark's slot for
+  administrator defaults. A caller's ``spark.driver.extraJavaOptions``
+  is appended after it, so a caller's flags still apply and win over
+  these. tests/test_session_memory.py checks both on a live JVM.
+- **Executors keep the JVM's thresholds.** No
+  ``spark.executor.defaultJavaOptions`` is set. On a cluster the driver
+  plans, compiles generated code, schedules and runs bounded collects:
+  short, varied code where waiting for C2 saves compile time. Executors
+  run long hot loops over the data, where C2 pays for itself early. In
+  ``local[N]`` the driver also runs the tasks, which is why the posture
+  was chosen at sf0.1 as well as at sf0.01.
+- **Cost.** ``setup_s`` rose from 12.8 to 14.1 s over the same 10
+  corpus pairs (flat on ``warehouse_queries``); it has not been split
+  by phase yet.
 """
 
 from __future__ import annotations
@@ -57,6 +94,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: The driver JVM's JIT posture (module docstring, "JIT").
+JIT_FLAGS = ("-XX:Tier4InvocationThreshold=50000",
+             "-XX:Tier4MinInvocationThreshold=6000",
+             "-XX:Tier4CompileThreshold=150000")
 
 _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -91,6 +133,8 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.parquet.filterPushdown": "true",
     "spark.ui.enabled": "false",
     "spark.driver.memory": "8g",
+    # The driver JVM's JIT posture (module docstring, "JIT").
+    "spark.driver.defaultJavaOptions": " ".join(JIT_FLAGS),
     # Tungsten execution pages in native memory (module docstring,
     # "Memory").
     "spark.memory.offHeap.enabled": "true",
@@ -137,6 +181,15 @@ def codegen_compiles(spark: SparkSession) -> int:
     compile twice: once on the driver and once in a task thread."""
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
     return int(metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def jit_compile_ms(spark: SparkSession) -> int:
+    """Milliseconds this JVM's JIT compilers have spent so far
+    (``CompilationMXBean.getTotalCompilationTime``). Janino compiles of
+    generated code are not in it (``codegen_compiles`` counts those)."""
+    mgmt = spark.sparkContext._jvm.java.lang.management
+    return int(mgmt.ManagementFactory.getCompilationMXBean()
+               .getTotalCompilationTime())
 
 
 def _quiet_windowexec_warning(spark: SparkSession) -> None:

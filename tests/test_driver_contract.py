@@ -34,27 +34,20 @@ def test_catalog_is_loaded():
     assert len(_registered_queries()) >= 150
 
 
-def test_no_nonscalar_result_columns(spark):
-    """Build every registered query's plan and reject any top-level
-    array/map/struct output column. Plan construction only — the
-    handful of eager queries (sinks/streaming/j13) do execute, which
-    is the price of checking their real output schema."""
-    bad: dict[str, list[str]] = {}
-    errs: dict[str, str] = {}
-    for name, fn in _registered_queries():
-        try:
-            df = fn(spark, SF)
-        except Exception as exc:  # noqa: BLE001 — report, don't abort
-            errs[name] = repr(exc)
-            continue
-        offending = [f.name for f in df.schema.fields
-                     if isinstance(f.dataType, _NONSCALAR)]
-        if offending:
-            bad[name] = offending
-    assert not errs, f"queries failed to build: {errs}"
-    assert not bad, (
+@pytest.mark.parametrize("name", [n for n, _ in _registered_queries()])
+def test_no_nonscalar_result_columns(spark, name):
+    """Build the query's plan and reject any top-level array/map/struct
+    output column. Plan construction only — the handful of eager
+    queries (sinks/streaming/j13) do execute, which is the price of
+    checking their real output schema. One case per registered query,
+    in name order, so ``--durations`` shows what each build costs and a
+    failure names its query."""
+    df = dict(_registered_queries())[name](spark, SF)
+    offending = [f.name for f in df.schema.fields
+                 if isinstance(f.dataType, _NONSCALAR)]
+    assert not offending, (
         "non-scalar result columns would crash the driver's "
-        f"canonicalizer (unhashable cells): {bad}")
+        f"canonicalizer (unhashable cells): {offending}")
 
 
 def test_driver_sort_values_replay(spark):
