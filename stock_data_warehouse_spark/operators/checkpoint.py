@@ -1,11 +1,13 @@
 """Lineage-truncation checkpoint with a reliability switch.
 
-Every iterative operator in the engine (connected components,
-large-star/small-star contraction, Lloyd's k-means, BPE merge rounds,
+Every distributed iterative operator in the engine (connected
+components, large-star/small-star contraction, BPE merge rounds,
 iterative join splits) re-derives a DataFrame from the previous round's
 result. Without truncation the lineage — and therefore the recovery
 re-computation and the plan-compile time — grows linearly with the
-round count.
+round count. (Lloyd's k-means needs none: its round state is a
+driver-held codebook re-emitted as a literal, so its lineage does not
+grow; only its final assignment is checkpointed.)
 
 Two truncation modes, selected per session by configuration:
 

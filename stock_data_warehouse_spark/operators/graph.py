@@ -53,9 +53,11 @@ def connected_components(edges: DataFrame, src: str = "src",
                .union(edges.select(F.col(dst).alias("u"),
                                    F.col(src).alias("v")))
                .distinct())
-    labels = ckpt(und.select(F.col("u").alias("node"))
-                     .distinct()
-                     .withColumn("component", F.col("node")))
+    # The seed labels derive from the checkpointed ``und``, and round
+    # 1's ckpt_fused truncates below them, so they need no barrier.
+    labels = (und.select(F.col("u").alias("node"))
+                 .distinct()
+                 .withColumn("component", F.col("node")))
     converged = False
     for _ in range(max_iter):
         nbr_min = (und.join(labels,

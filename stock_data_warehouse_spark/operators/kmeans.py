@@ -1,17 +1,23 @@
-"""Distributed Lloyd's k-means over an embedding column — the trainer
-behind a production IVF index (plans/extensions.x3_ivf_topk uses seeded
-medoids precisely so its query stays oracle-checkable; this operator is
-the path that replaces those medoids with learned centroids).
+"""Lloyd's k-means over an embedding column — the trainer behind a
+production IVF index (plans/extensions.x3_ivf_topk uses seeded medoids
+precisely so its query stays oracle-checkable; this operator is the
+path that replaces those medoids with learned centroids).
 
 Scale posture (100 TB):
 
-- Each iteration is ONE shuffle: assign every vector to its nearest
-  centroid (broadcast K×dim centroids — a few MB for any sane K), then
-  partial-aggregate per-dimension sums map-side and reduce to K rows.
-- Centroids live in the driver only as a K×dim literal (bounded);
-  vectors never leave the executors.
-- ``ckpt`` per iteration truncates lineage (same discipline
-  as operators/graph.py).
+- ONE round loop (:func:`_lloyd`) for every mode. The codebook lives
+  on the driver as ``{(grp, cell): vec}`` — G×K×dim doubles, a few MB
+  for any sane K — and re-enters plans as a zero-job VALUES literal.
+  Each round asks a *step* for per-cell sums, counts and the training
+  inertia, then sets each centroid to sums/count; a cell with no
+  members drops out.
+- Sampled mode (``train_sample=S``, the FAISS ``train()`` posture)
+  steps with local numpy over one bounded hash-order collect.
+  Exhaustive mode steps with ONE Spark aggregate per round over the
+  whole relation: an argmin against the codebook inlined as a literal
+  (no join, no broadcast), then a per-(grp, cell, pos) sum that partial-aggregates map-side, so only
+  G×K×(dim+1) rows reach the driver. The lineage never grows across
+  rounds, so no round checkpoints.
 - Seeding is the K vectors with the smallest ``md5(id)`` — a
   deterministic pseudo-random spread that plans as a distributed
   partial top-K (``TakeOrderedAndProject``: each partition keeps K
@@ -25,6 +31,8 @@ Scale posture (100 TB):
 """
 
 from __future__ import annotations
+
+from itertools import groupby
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -61,130 +69,213 @@ def _hash_key(i) -> tuple:
     return (hashlib.md5(str(i).encode()).hexdigest(), i)
 
 
-def _local_lloyd(sample: list, k: int, n_iter: int):
-    """Driver-side Lloyd over a BOUNDED training sample — the FAISS
-    ``train()`` posture: the sample is a few hundred rows by the
-    ~100·K sizing rule, so the iteration loop is local vectorized
-    arithmetic instead of ``n_iter`` chained distributed jobs (each of
-    which paid a broadcast build plus 2-3 shuffle stages for ≤S rows —
-    measured 0.6-1.4 s per trainer at sf0.1, pure scheduling).
+def _hash_prefix_rows(v: DataFrame, n: int, grouped: bool) -> list:
+    """``[(grp, id, e), ...]`` for the first ``n`` ids of the hash
+    order — one bounded collect. Ungrouped ids are unique, so a plain
+    partial top-n suffices; grouped relations pick the ids once over
+    distinct ids and broadcast them back, so every group contributes
+    the same ids (its subvector of each)."""
+    if grouped:
+        ids = v.select("id").distinct().orderBy(*_hash_order()).limit(n)
+        pre = v.join(F.broadcast(ids), "id")
+    else:
+        pre = v.orderBy(*_hash_order()).limit(n)
+    return [(r["grp"], r["id"], r["e"]) for r in pre.collect()]
 
-    ``sample``: ``[(id, [float, ...]), ...]`` in hash order (seeds are
-    the first ``k`` entries). Semantics replicate the distributed
-    form exactly: seed cell ordinals = the k hash-min ids sorted
-    ascending; assignment ties break toward the lower cell; a cell
-    with no members drops out of the codebook (the groupBy-means
-    behavior). Returns ``(centroids, inertias)`` with ``centroids`` a
-    ``{cell: [float, ...]}`` dict and ``inertias`` the per-round
-    training inertia (squared distance to the round's STARTING
-    centroids — Lloyd's non-increasing sequence).
 
-    Member order inside a cell is pinned to id-ascending before the
-    mean so the result is run-to-run deterministic."""
+def _seed_codebook(rows: list, k: int) -> dict:
+    """``{(grp, cell): vec}`` from ``rows``' ``k`` hash-min ids: cell
+    ordinals are those ids sorted ascending, the same in every group."""
     import numpy as np
 
-    x = np.asarray([vec for _i, vec in sample], dtype=np.float64)
-    order = np.argsort(np.asarray([i for i, _v in sample]),
-                       kind="stable")
-    x = x[order]
-    seed_ids = sorted(i for i, _v in sample[:k])
-    by_id = {i: vec for i, vec in sample}
-    cents = np.asarray([by_id[i] for i in seed_ids], dtype=np.float64)
-    live = list(range(len(seed_ids)))
+    seed_ids = sorted(sorted({i for _g, i, _e in rows},
+                             key=_hash_key)[:k])
+    cell = {i: c for c, i in enumerate(seed_ids)}
+    return {(g, cell[i]): np.asarray(e, dtype=np.float64)
+            for g, i, e in rows if i in cell}
+
+
+def _lloyd(cents: dict, step, n_iter: int) -> tuple[dict, list]:
+    """The round loop of every k-means mode. ``step(cents)`` returns
+    ``(sums, counts, inertia)`` keyed like ``cents``; the inertia is
+    the training set's squared distance to the round's STARTING
+    centroids, so the returned per-round list is Lloyd's
+    non-increasing sequence."""
     inertias = []
     for _ in range(n_iter):
-        # d2[i, c]: squared distance of sample row i to live centroid c
-        d2 = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        a = d2.argmin(axis=1)          # ties -> first (lowest cell)
-        inertias.append(float(d2[np.arange(len(x)), a].sum()))
-        new_cents, new_live = [], []
-        for ci in range(len(live)):
-            members = x[a == ci]
-            if len(members):
-                new_cents.append(members.mean(axis=0))
-                new_live.append(live[ci])
-        cents = np.asarray(new_cents)
-        live = new_live
-    return ({cell: [float(v) for v in cents[ci]]
-             for ci, cell in enumerate(live)}, inertias)
+        sums, counts, inertia = step(cents)
+        inertias.append(inertia)
+        cents = {key: sums[key] / counts[key]
+                 for key in sorted(sums) if counts[key]}
+    return cents, inertias
 
 
-def _centroids_values_df(spark, rows: list, schema_cols: list) -> DataFrame:
-    """Trained centroids as ONE SQL VALUES relation (LocalRelation —
-    zero jobs, the values_df discipline from sources/tables.py;
-    ``createDataFrame`` would route a Python RDD through pickle and
-    spawn workers per action). Doubles are emitted as
-    ``CAST('<repr>' AS DOUBLE)``: Python ``repr`` round-trips the
-    exact IEEE double and Spark's string→double parse is
-    nearest-value, so the literal relation carries the trained bits
-    unchanged. ``rows`` are tuples matching ``schema_cols`` =
-    ``[(name, sql_type), ...]`` where the last column is the
-    ``ARRAY<DOUBLE>`` centroid."""
-    if not rows:
-        # ADVICE r15: an empty VALUES body is a SQL parse error at
-        # plan-build time — name the real cause instead
+def _sample_step(rows: list):
+    """Step over a collected sample, driver-side numpy. Per group the
+    members are pinned id-ascending, so ``members.sum(axis=0) / n`` is
+    the bits of ``members.mean(axis=0)`` and run-to-run deterministic;
+    assignment ties break toward the lower cell."""
+    import numpy as np
+
+    by_grp: dict = {}
+    for g, i, e in rows:
+        by_grp.setdefault(g, []).append((i, e))
+    xs = {g: np.asarray([e for _i, e in sorted(r, key=lambda t: t[0])],
+                        dtype=np.float64)
+          for g, r in sorted(by_grp.items())}
+
+    def step(cents):
+        sums, counts, inertia = {}, {}, 0.0
+        for g, x in xs.items():
+            cells = sorted(c for gc, c in cents if gc == g)
+            cm = np.asarray([cents[g, c] for c in cells])
+            # d2[i, c]: squared distance of row i to live centroid c
+            d2 = ((x[:, None, :] - cm[None, :, :]) ** 2).sum(axis=2)
+            a = d2.argmin(axis=1)          # ties -> first (lowest cell)
+            inertia += float(d2[np.arange(len(x)), a].sum())
+            for ci, c in enumerate(cells):
+                members = x[a == ci]
+                sums[g, c] = members.sum(axis=0)
+                counts[g, c] = len(members)
+        return sums, counts, inertia
+    return step
+
+
+def _spark_step(v: DataFrame, grp_type: str):
+    """Step over the whole relation: ONE aggregate per round. Every
+    vector takes its nearest cell (:func:`_argmin_assign`, a
+    projection), and one group-by over ``posexplode(concat(
+    array(sq_dist), e))`` sums the distance (pos 0) and each dimension
+    per cell, map-side first — G×K×(dim+1) rows reach the driver."""
+    import numpy as np
+
+    def step(cents):
+        parts = (_argmin_assign(v, cents, grp_type)
+                 .select("grp", "cell", F.posexplode(F.concat(
+                     F.array("sq_dist"), "e")).alias("pos", "val"))
+                 .groupBy("grp", "cell", "pos")
+                 .agg(F.sum("val").alias("s"),
+                      F.count(F.lit(1)).alias("n"))
+                 .collect())
+        by_cell: dict = {}
+        for r in parts:
+            by_cell.setdefault((r["grp"], r["cell"]), {})[r["pos"]] = r
+        sums, counts, inertia = {}, {}, 0.0
+        for key in sorted(by_cell):
+            p = by_cell[key]
+            inertia += p[0]["s"]
+            counts[key] = p[0]["n"]
+            sums[key] = np.asarray([p[d]["s"] for d in range(1, len(p))],
+                                   dtype=np.float64)
+        return sums, counts, inertia
+    return step
+
+
+def _grp_sql(g, grp_type: str) -> str:
+    # a string/decimal group key would silently truncate or raise an
+    # unnamed ValueError — fail loudly with the actual requirement
+    try:
+        ok = int(g) == g
+    except (TypeError, ValueError):
+        ok = False
+    if not ok:
+        raise ValueError(f"kmeans requires integral group keys; got "
+                         f"{g!r} for a {grp_type} column")
+    return f"CAST({int(g)} AS {grp_type})"
+
+
+def _vec_sql(vec) -> str:
+    """A trained vector as an ``ARRAY<DOUBLE>`` literal. Doubles are
+    emitted as ``CAST('<repr>' AS DOUBLE)``: Python ``repr``
+    round-trips the exact IEEE double and Spark's string→double parse
+    is nearest-value, so the literal carries the trained bits
+    unchanged."""
+    return ("array(" + ",".join(f"CAST('{float(x)!r}' AS DOUBLE)"
+                                for x in vec) + ")")
+
+
+def _codebook_df(spark, cents: dict, grp_type: str) -> DataFrame:
+    """The codebook ``{(grp, cell): vec}`` as ONE SQL VALUES relation
+    ``(grp, cell, ce)`` (LocalRelation — the values_df discipline from
+    sources/tables.py; ``createDataFrame`` would route a Python RDD
+    through pickle and spawn workers per action)."""
+    if not cents:
+        # an empty VALUES body is a SQL parse error at plan-build
+        # time — name the real cause instead
         raise ValueError(
             "k-means produced no centroids to emit (empty training "
             "relation, or every cell degenerated to zero members)")
-
-    def lit(v, typ):
-        if typ == "array<double>":
-            return ("array(" + ",".join(
-                f"CAST('{float(x)!r}' AS DOUBLE)" for x in v) + ")")
-        # ADVICE r15: non-array columns (grp/cell) are emitted as
-        # integer literals; a string/decimal group key would silently
-        # truncate or raise an unnamed ValueError — fail loudly with
-        # the operator's actual requirement instead
-        try:
-            iv = int(v)
-            ok = iv == v
-        except (TypeError, ValueError):
-            ok = False
-        if not ok:
-            raise ValueError(
-                f"kmeans sampled mode requires integral group/cell "
-                f"keys; got {v!r} for a {typ} column")
-        return f"CAST({iv} AS {typ})"
-
-    body = ",".join(
-        "(" + ",".join(lit(v, t) for v, (_n, t) in zip(r, schema_cols))
-        + ")" for r in rows)
-    names = ",".join(
-        f"col{i + 1} AS {n}" for i, (n, _t) in enumerate(schema_cols))
-    return spark.sql(f"SELECT {names} FROM (VALUES {body})")
+    body = ",".join(f"({_grp_sql(g, grp_type)},{c},{_vec_sql(vec)})"
+                    for (g, c), vec in sorted(cents.items()))
+    return spark.sql("SELECT col1 AS grp, col2 AS cell, col3 AS ce "
+                     f"FROM (VALUES {body})")
 
 
-def _argmin_assign(v: DataFrame, centroids: DataFrame,
-                   keys: list[str],
-                   keep_vec: bool = True) -> DataFrame:
-    """Nearest-centroid assignment via ``min(struct(d2, cell))``:
-    lexicographic struct order IS the (d2 ASC, cell ASC) tiebreak, and
-    the aggregation combines map-side — K candidate rows per vector
-    collapse before the exchange, where a sort-window would shuffle and
-    sort all K×N rows. d2 is computed ONCE per candidate (a window form
-    evaluates the fold twice: ordering + projection).
+def _argmin_assign(v: DataFrame, cents: dict,
+                   grp_type: str) -> DataFrame:
+    """``v`` plus each vector's nearest ``cell`` and its ``sq_dist``,
+    as ONE projection: the codebook rides in the plan as a literal map
+    ``grp → array<(cell, ce)>`` (G×K×dim doubles, bounded like the
+    codebook itself), and ``array_min`` over ``struct(d2, cell)``
+    picks the winner — lexicographic struct order IS the (d2 ASC,
+    cell ASC) tiebreak, and d2 is computed ONCE per candidate. No
+    join, no broadcast job and no shuffle: the vectors never leave
+    their partitions. A group absent from the codebook assigns
+    nothing."""
+    book = ",".join(
+        f"{_grp_sql(g, grp_type)}, array(" + ",".join(
+            f"named_struct('cell', {c}, 'ce', {_vec_sql(cents[g, c])})"
+            for _g, c in keys) + ")"
+        for g, keys in groupby(sorted(cents), key=lambda gc: gc[0]))
+    cands = F.element_at(F.expr(f"map({book})"), F.col("grp"))
+    best = F.array_min(F.transform(cands, lambda c: F.struct(
+        _sq_dist(F.col("e"), c["ce"]).alias("d2"),
+        c["cell"].alias("cell"))))
+    return (v.withColumn("_b", best).filter(F.col("_b").isNotNull())
+             .select(*v.columns, F.col("_b.cell").alias("cell"),
+                     F.col("_b.d2").alias("sq_dist")))
 
-    ``keep_vec=True`` carries the vector through the SAME aggregation
-    as ``first(e)`` — every candidate row of a key holds the identical
-    ``e`` (the broadcast replicates centroids, not vectors), so
-    ``first`` is deterministic by value and partial aggregation
-    collapses the K candidates map-side; the r14 form joined back to
-    ``v`` instead, which shuffled the vectors a second time (2 N-row
-    exchanges per assignment instead of 1 — guide §2.3/§2.4).
-    ``keep_vec=False`` (the final corpus pass, which only needs
-    ``(keys, cell, sq_dist)``) drops the vector before the exchange:
-    the embedding bytes never cross the network at all."""
-    join_keys = [k for k in keys if k != "id"]
-    scored = (v.join(F.broadcast(centroids), join_keys)
-              if join_keys else v.crossJoin(F.broadcast(centroids)))
-    scored = scored.withColumn("d2", _sq_dist(F.col("e"), F.col("ce")))
-    aggs = [F.min(F.struct("d2", "cell")).alias("b")]
-    if keep_vec:
-        aggs.append(F.first("e").alias("e"))
-    best = scored.groupBy(*keys).agg(*aggs)
-    cols = ["e"] if keep_vec else []
-    return best.select(*keys, *cols, F.col("b.cell").alias("cell"),
-                       F.col("b.d2").alias("sq_dist"))
+
+def _fit_assign(v: DataFrame, grouped: bool, k: int, n_iter: int,
+                train_sample: int | None, inertia_log: list | None,
+                assign: bool, sample_rows: list | None
+                ) -> tuple[DataFrame | None, DataFrame]:
+    """Body of both public trainers over ``v = (grp, id, e)``: seed,
+    run :func:`_lloyd` with the step ``train_sample`` selects, emit
+    the codebook and the inertia log as literals, then assign the full
+    relation once."""
+    spark = v.sparkSession
+    grp_type = dict(v.dtypes)["grp"]
+    if train_sample is None:
+        rows = _hash_prefix_rows(v, k, grouped)
+        step = _spark_step(v, grp_type)
+    else:
+        rows = (sample_rows if sample_rows is not None
+                else _hash_prefix_rows(v, train_sample, grouped))
+        id_sets: dict = {}
+        for g, i, _e in rows:
+            id_sets.setdefault(g, set()).add(i)
+        if len({frozenset(ids) for ids in id_sets.values()}) > 1:
+            sizes = {g: len(ids) for g, ids in sorted(id_sets.items())}
+            raise SampleIdUniverseError(
+                f"sampled groups carry different id sets (ids per "
+                f"group: {sizes})")
+        step = _sample_step(rows)
+    cents, inertias = _lloyd(_seed_codebook(rows, k), step, n_iter)
+    centroids = _codebook_df(spark, cents, grp_type)
+    if inertia_log is not None:
+        # VALUES literals: reading one back (collect/first) runs no job
+        for it, val in enumerate(inertias):
+            inertia_log.append(spark.sql(
+                f"SELECT col1 AS it, col2 AS inertia FROM (VALUES "
+                f"({it}, CAST('{float(val)!r}' AS DOUBLE)))"))
+    if not assign:
+        return None, centroids
+    # ONE full-relation assignment against the trained centroids; the
+    # result is consumed several times downstream (completeness,
+    # inertia, code joins) — truncate its lineage once
+    final = _argmin_assign(v, cents, grp_type)
+    return ckpt(final.select("grp", "id", "cell", "sq_dist")), centroids
 
 
 def kmeans_fit_assign(vectors: DataFrame, id_col: str = "vec_id",
@@ -198,17 +289,28 @@ def kmeans_fit_assign(vectors: DataFrame, id_col: str = "vec_id",
                       ) -> DataFrame | None:
     """Run ``n_iter`` Lloyd iterations from hash-min medoid seeds and
     return ``(id, cell, sq_dist)`` — every vector with its cluster
-    under the final trained centroids and squared distance to it.
+    under the final trained centroids and squared distance to it. This
+    is :func:`kmeans_fit_assign_grouped` with a single group.
 
-    ``train_sample=S`` is the FAISS-style scale posture: the iteration
+    ``train_sample=S`` is the FAISS-style scale posture: the round
     loop sees only the first S vectors of the deterministic hash order
-    (a bounded TakeOrdered sample — k-means needs ~100·K training
-    points, not the corpus), and the full relation is assigned ONCE
-    against the trained centroids. Training cost becomes
-    O(n_iter · S · K) + one full assignment pass instead of
-    O(n_iter · N · K) — at 100 TB that is the difference between a
-    constant-size training job and n_iter full-corpus passes.
-    ``train_sample=None`` trains on everything (the exhaustive form).
+    (one bounded TakeOrdered collect — k-means needs ~100·K training
+    points, not the corpus) and runs driver-side in numpy; the full
+    relation is assigned ONCE against the trained centroids. Training
+    cost becomes O(n_iter · S · K) + one full assignment pass instead
+    of O(n_iter · N · K). ``train_sample=None`` trains on everything
+    (the exhaustive form): each round is one distributed aggregate job
+    over the input relation, which is re-read per round.
+
+    ``sample_rows`` (only with ``train_sample``): the caller supplies
+    the ``[(id, [float, ...]), ...]`` hash-order prefix itself instead
+    of this function collecting it — for callers that train SEVERAL
+    estimators off one train set (the IVF-PQ builders run a coarse
+    trainer AND a grouped subspace trainer) and can serve every
+    trainer from ONE collect. Must be exactly the first
+    ``train_sample`` rows of the (md5(id), id) order — equivalence
+    pinned by tests/test_operators.py::
+    test_kmeans_sample_rows_equivalence.
 
     ``inertia_log``, if a list, receives one 1-row DataFrame
     ``(it, inertia)`` per iteration — total squared distance of the
@@ -217,110 +319,25 @@ def kmeans_fit_assign(vectors: DataFrame, id_col: str = "vec_id",
     monotonicity verdict without re-training a shorter twin.
 
     ``centroids_log``, if a list, receives the final trained
-    ``(cell, ce)`` centroid relation (K rows, already checkpointed) —
+    ``(cell, ce)`` centroid relation (K rows, a VALUES literal) —
     callers that need the centroids themselves (residual PQ encodes
     ``vec − centroid(cell)``, streaming ingest assigns arrivals against
     a frozen index) read them from here instead of re-deriving.
 
-    The per-iteration plan: broadcast the K centroids as a literal
-    relation (K is bounded), map-side argmin via ``min(struct)``, then
-    ``posexplode`` the vectors and hash-aggregate per (cell, dim) to
-    rebuild centroids — partial aggregation keeps the shuffle at
-    K×dim×partitions rows.
-
-    Sampled-mode execution (r15, guide §1.2 — fix the distributed
-    algorithm before per-task work): with a TRAINING SAMPLE the
-    iteration loop runs DRIVER-SIDE over the collected ≤S-row sample
-    (:func:`_local_lloyd` — the FAISS ``train()`` posture: one bounded
-    TakeOrdered collect, local vectorized Lloyd, centroids re-emitted
-    as a zero-job VALUES literal). The r14 form ran every round as a
-    chained distributed job over those same ≤S rows — a broadcast
-    build plus 2-3 shuffle stages per round of pure scheduling
-    overhead (measured 0.6-1.4 s per trainer at sf0.1), and an eager
-    ``ckpt`` round-trip per round on top. The collect is
-    control-plane-bounded by the ~100·K sizing rule (the same class
-    as the staircase band-id collects), never corpus-sized, and the
-    full-relation assignment stays distributed. Exhaustive mode
-    (``train_sample=None``) keeps the r14 discipline unchanged: every
-    round runs distributed over the full relation with per-round
-    checkpoints truncating the lineage.
-
     ``assign=False`` skips the final full-relation assignment and
-    returns None — for callers that only need the trained centroids
-    (via ``centroids_log``): the r14 form always ran and materialized
-    a full assignment pass that e.g. the ingest path immediately
-    discarded (it re-assigns through its own encode plans).
+    returns None — for callers that only need the trained centroids.
     """
-    spark = vectors.sparkSession
-    v = vectors.select(F.col(id_col).alias("id"),
+    v = vectors.select(F.lit(0).alias("grp"),
+                       F.col(id_col).alias("id"),
                        F.col(vec_col).alias("e"))
-    if train_sample is not None:
-        # sample_rows (r16, guide §2.4 — only with train_sample): the
-        # caller supplies the [(id, [float, ...]), ...] hash-order
-        # prefix itself instead of this function collecting it — for
-        # callers that train SEVERAL estimators off one train set
-        # (the IVF-PQ builders run a coarse trainer AND a grouped
-        # subspace trainer) and can serve every trainer from ONE
-        # TakeOrdered collect. Must be exactly the first train_sample
-        # rows of the (md5(id), id) order this function would have
-        # collected — equivalence pinned by tests/test_operators.py::
-        # test_kmeans_sample_rows_equivalence.
-        sample = (sample_rows if sample_rows is not None
-                  else [(r["id"], r["e"]) for r in
-                        v.orderBy(*_hash_order()).limit(train_sample)
-                         .collect()])
-        cents, inertias = _local_lloyd(sample, k, n_iter)
-        centroids = _centroids_values_df(
-            spark, sorted(cents.items()),
-            [("cell", "INT"), ("ce", "array<double>")])
-        if inertia_log is not None:
-            for it, val in enumerate(inertias):
-                inertia_log.append(spark.range(1).select(
-                    F.lit(it).alias("it"),
-                    F.lit(val).cast("double").alias("inertia")))
-    else:
-        v = ckpt(v)
-        vt = v
-        # Seeds: the k vectors with the smallest md5(id) — the
-        # hash-order prefix.
-        seeds = vt.orderBy(*_hash_order()).limit(k)
-        centroids = ckpt(seeds
-                         .agg(F.array_sort(
-                             F.collect_list(F.struct("id", "e")))
-                              .alias("se"))
-                         .select(F.posexplode(
-                             F.transform("se", lambda s: s["e"]))
-                             .alias("cell", "ce")))
-        for it in range(n_iter):
-            assigned = _argmin_assign(vt, centroids, ["id"])
-            if inertia_log is not None:
-                assigned = ckpt(assigned)
-                inertia_log.append(assigned.agg(
-                    F.lit(it).alias("it"),
-                    F.sum("sq_dist").alias("inertia")))
-            # rebuild: per-(cell, dim) mean via posexplode + hash agg
-            dims = assigned.select(
-                "cell", F.posexplode("e").alias("dim", "val"))
-            means = (dims.groupBy("cell", "dim")
-                         .agg(F.avg("val").alias("m"))
-                         .groupBy("cell")
-                         .agg(F.array_sort(
-                             F.collect_list(F.struct("dim", "m")))
-                             .alias("dm"))
-                         .select("cell",
-                                 F.transform("dm", lambda s: s["m"])
-                                 .alias("ce")))
-            centroids = ckpt(means)
+    rows = (None if sample_rows is None
+            else [(0, i, e) for i, e in sample_rows])
+    assigned, centroids = _fit_assign(v, False, k, n_iter, train_sample,
+                                      inertia_log, assign, rows)
     if centroids_log is not None:
-        centroids_log.append(centroids)
-    if not assign:
-        return None
-    # ONE full-relation assignment against the trained centroids; the
-    # result is consumed several times downstream (completeness,
-    # inertia, code joins) — truncate its lineage once. keep_vec=False:
-    # the corpus-wide pass shuffles (id, cell, d2), never the vectors.
-    final = _argmin_assign(v, centroids, ["id"], keep_vec=False)
-    return ckpt(final.select("id", "cell", "sq_dist"))
+        centroids_log.append(centroids.select("cell", "ce"))
+    return (None if assigned is None
+            else assigned.select("id", "cell", "sq_dist"))
 
 
 def kmeans_fit_assign_grouped(vectors: DataFrame, group_col: str = "j",
@@ -340,130 +357,30 @@ def kmeans_fit_assign_grouped(vectors: DataFrame, group_col: str = "j",
     This is the per-subspace trainer of a product-quantization index
     (plans/extensions.x3_ivfpq_learned): with ``group_col`` = the PQ
     subspace ordinal, one invocation learns all 8 codebooks
-    simultaneously — per iteration ONE broadcast of the groups×k
-    centroid table (bounded: e.g. 8×32 rows), ONE map-side argmin
-    (min(struct), same shape as :func:`kmeans_fit_assign`), and ONE
-    per-(grp, cell, dim) hash aggregation. Never a per-group driver
-    loop: 8 sequential trainers would multiply job count by the group
-    cardinality for zero extra parallelism.
-
-    ``train_sample=S`` samples IDS (the same S hash-min ids for every
-    group — each vector contributes one subvector per subspace, so the
-    per-group training sets stay aligned) and assigns the full
-    relation once at the end; ``inertia_log`` receives per-iteration
-    1-row (it, inertia) totals over the training set, exactly like the
-    ungrouped trainer.
+    simultaneously — each round steps every group at once (one
+    map-side argmin against the groups×k codebook literal and, in
+    exhaustive mode, one per-(grp, cell, dim) aggregation). Never a
+    per-group driver loop: 8 sequential trainers would multiply job
+    count by the group cardinality for zero extra parallelism.
 
     Seeding exploits the PQ structure — every group carries the same
     id universe — so the per-group seeds are the SAME k hash-min ids,
-    selected once via a distributed partial top-k over distinct ids
-    and broadcast back; cell ordinals 0..k-1 come from the sorted
-    k-row seed list (bounded collect_list, never the full data).
-    Determinism matches :func:`kmeans_fit_assign`: md5 seeding,
-    (cell) argmin tiebreak.
-
-    Sampled-mode execution and ``assign`` match
-    :func:`kmeans_fit_assign` (r15): the sampled ids' subvectors —
-    bounded at S×groups rows by the ~100·K sizing rule — are
-    collected once and every group's codebook trains driver-side in
-    one pass of local vectorized Lloyd (:func:`_local_lloyd` per
-    group, same seeds, same tiebreaks, independent groups exactly
-    like the distributed form); the trained groups×k codebook
-    re-enters the plan as a zero-job VALUES literal. The r14 form
-    paid a broadcast build + 2-3 shuffle stages + an eager ckpt per
-    round for those same ≤S×groups rows. Per-round inertia is the
-    SUM over groups of the per-group training inertia — identical to
-    the distributed form's ungrouped total.
+    selected once over distinct ids and collected with every group's
+    subvector; cell ordinals 0..k-1 follow the ids sorted ascending.
+    ``train_sample=S`` samples IDS the same way (each vector
+    contributes one subvector per subspace, so the per-group training
+    sets stay aligned), trains driver-side and assigns the full
+    relation once at the end, exactly like :func:`kmeans_fit_assign`;
+    so do ``assign`` and ``sample_rows`` (here ``[(grp, id, subvec),
+    ...]``). ``inertia_log`` receives per-iteration 1-row
+    ``(it, inertia)`` totals, summed over groups.
 
     Sampled mode raises ``SampleIdUniverseError`` when the sampled
     (or caller-supplied ``sample_rows``) groups carry different id
     sets; the check runs driver-side over rows already collected.
     """
-    spark = vectors.sparkSession
     v = vectors.select(F.col(group_col).alias("grp"),
                        F.col(id_col).alias("id"),
                        F.col(vec_col).alias("e"))
-    if train_sample is not None:
-        grp_type = dict(v.dtypes)["grp"]
-        # sample_rows (r16): caller-supplied [(grp, id, subvec), ...]
-        # for the SAME train_sample hash-min ids this branch would
-        # sample itself (the shared-id-universe property both forms
-        # rely on) — one collect serves every trainer of a composite
-        # index build. Equivalence pinned by tests/test_operators.py.
-        if sample_rows is not None:
-            rows = sample_rows
-        else:
-            train_ids = (v.select("id").distinct()
-                          .orderBy(*_hash_order())
-                          .limit(train_sample))
-            rows = [(r["grp"], r["id"], r["e"]) for r in
-                    v.join(F.broadcast(train_ids), "id").collect()]
-        by_grp: dict = {}
-        for g, i, e in rows:
-            by_grp.setdefault(g, []).append((i, e))
-        id_sets = {g: {i for i, _e in r} for g, r in by_grp.items()}
-        if len({frozenset(ids) for ids in id_sets.values()}) > 1:
-            sizes = {g: len(ids) for g, ids in sorted(id_sets.items())}
-            raise SampleIdUniverseError(
-                f"sampled groups carry different id sets (ids per "
-                f"group: {sizes})")
-        # the SAME k hash-min ids seed every group (the shared-id-
-        # universe property); _hash_key is the driver twin of the
-        # distributed (md5(id), id) order
-        cents_rows: list = []
-        per_round: dict = {}
-        for g in sorted(by_grp):
-            sample = sorted(by_grp[g], key=lambda t: _hash_key(t[0]))
-            cents, inertias = _local_lloyd(sample, k, n_iter)
-            for cell, ce in sorted(cents.items()):
-                cents_rows.append((g, cell, ce))
-            for it, val in enumerate(inertias):
-                per_round[it] = per_round.get(it, 0.0) + val
-        centroids = _centroids_values_df(
-            spark, cents_rows,
-            [("grp", grp_type), ("cell", "INT"),
-             ("ce", "array<double>")])
-        if inertia_log is not None:
-            for it in sorted(per_round):
-                inertia_log.append(spark.range(1).select(
-                    F.lit(it).alias("it"),
-                    F.lit(per_round[it]).cast("double")
-                     .alias("inertia")))
-    else:
-        v = ckpt(v)
-        vt = v
-        seed_pool = v.select("id").distinct()
-        seed_ids = seed_pool.orderBy(*_hash_order()).limit(k)
-        seed_cells = (seed_ids
-                      .agg(F.array_sort(F.collect_list("id"))
-                            .alias("a"))
-                      .select(F.posexplode("a").alias("cell", "sid")))
-        centroids = ckpt(vt.join(F.broadcast(seed_cells),
-                                 vt.id == seed_cells.sid)
-                           .select("grp", "cell",
-                                   F.col("e").alias("ce")))
-        for it in range(n_iter):
-            assigned = _argmin_assign(vt, centroids, ["grp", "id"])
-            if inertia_log is not None:
-                assigned = ckpt(assigned)
-                inertia_log.append(assigned.agg(
-                    F.lit(it).alias("it"),
-                    F.sum("sq_dist").alias("inertia")))
-            dims = assigned.select(
-                "grp", "cell", F.posexplode("e").alias("dim", "val"))
-            means = (dims.groupBy("grp", "cell", "dim")
-                         .agg(F.avg("val").alias("m"))
-                         .groupBy("grp", "cell")
-                         .agg(F.array_sort(
-                             F.collect_list(F.struct("dim", "m")))
-                             .alias("dm"))
-                         .select("grp", "cell",
-                                 F.transform("dm", lambda s: s["m"])
-                                 .alias("ce")))
-            centroids = ckpt(means)
-    if not assign:
-        return None, centroids
-    final = _argmin_assign(v, centroids, ["grp", "id"],
-                           keep_vec=False)
-    return (ckpt(final.select("grp", "id", "cell", "sq_dist")),
-            centroids)
+    return _fit_assign(v, True, k, n_iter, train_sample, inertia_log,
+                       assign, sample_rows)

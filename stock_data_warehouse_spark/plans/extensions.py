@@ -1958,18 +1958,20 @@ def x4_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x3_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OP-X3 (index training) — distributed Lloyd's k-means over the
+    """OP-X3 (index training) — exhaustive Lloyd's k-means over the
     embeddings (operators/kmeans.py): the trainer that turns the seeded
-    medoids of ``x3_ivf_topk`` into learned IVF centroids. One shuffle
-    per iteration (broadcast centroids → argmin assign → per-dim hash
-    agg). The centroid means depend on float summation order, which no
-    second engine reproduces — so the registered query emits the
-    oracle-checkable *training report* instead of raw centroids
-    (VERDICT r2 item 3 pattern): every vector assigned exactly once
-    (n_vectors equals the table count the oracle states), the cell
-    count lands in [1, k], and total inertia after 3 Lloyd rounds is
-    ≤ the 1-round inertia (Lloyd's is monotonically non-increasing —
-    a genuinely falsifiable trainer property, not a tautology).
+    medoids of ``x3_ivf_topk`` into learned IVF centroids. Each round
+    is one aggregate (argmin against the driver-held codebook literal,
+    per-(cell, dim) sums collected to the driver) with no per-round
+    checkpoint: 12 Spark jobs in all at sf0.01. The centroid means
+    depend on float summation order, which no second engine
+    reproduces — so the registered query emits the oracle-checkable
+    *training report* instead of raw centroids (VERDICT r2 item 3
+    pattern): every vector assigned exactly once (n_vectors equals the
+    table count the oracle states), the cell count lands in [1, k],
+    and the per-round training inertia never rises, through the final
+    assignment's (Lloyd's is monotonically non-increasing — a
+    genuinely falsifiable trainer property, not a tautology).
     Cell-level output stays available via kmeans_fit_assign."""
     from ..operators.kmeans import kmeans_fit_assign
     e = _t(spark, sf_dir, "embeddings")
@@ -1982,18 +1984,16 @@ def x3_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum("sq_dist").alias("inertia_final"))
     # the full per-round chain (STRONGER than the old 1-vs-3 twin):
     # i0 >= i1 >= i2 >= final, each with tiny FP slack because
-    # adjacent rounds share sums at convergence
-    seq = log[0].select(F.col("inertia").alias("i0"))
-    seq = seq.crossJoin(log[1].select(F.col("inertia").alias("i1")))
-    seq = seq.crossJoin(log[2].select(F.col("inertia").alias("i2")))
+    # adjacent rounds share sums at convergence. The log entries are
+    # literal relations, so reading them back runs no job.
+    i0, i1, i2 = (df.first()["inertia"] for df in log)
     eps = 1.0000001
-    return (stats3.crossJoin(seq)
-            .select("n_vectors",
-                    F.col("n_cells").between(1, 8).alias("cells_ok"),
-                    ((F.col("i1") <= F.col("i0") * eps)
-                     & (F.col("i2") <= F.col("i1") * eps)
-                     & (F.col("inertia_final") <= F.col("i2") * eps))
-                     .alias("inertia_monotone")))
+    return stats3.select(
+        "n_vectors",
+        F.col("n_cells").between(1, 8).alias("cells_ok"),
+        (F.lit(i1 <= i0 * eps and i2 <= i1 * eps)
+         & (F.col("inertia_final") <= F.lit(i2) * eps))
+        .alias("inertia_monotone"))
 
 
 @register(
@@ -4561,12 +4561,12 @@ def x3_ivfpq_recall_report(spark: SparkSession,
 def x3_ivfpq_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-X3 — IVF-PQ with *learned* codebooks: the production form the
     medoid-seeded ``x3_ivfpq_topk`` docstring promises. Coarse cells
-    come from distributed Lloyd's k-means over the full vectors
-    (operators/kmeans.py, K_COARSE cells), and the 8 per-subspace PQ
-    codebooks are trained SIMULTANEOUSLY by the grouped trainer
-    (``kmeans_fit_assign_grouped`` — one broadcast / one argmin window
-    / one hash agg per iteration for ALL subspaces; never a per-group
-    driver loop). Scoring then replays the exact x3_ivfpq_topk plan
+    come from Lloyd's k-means trained on a hash-order sample of the
+    full vectors (operators/kmeans.py, K_COARSE cells), and the 8
+    per-subspace PQ codebooks are trained SIMULTANEOUSLY by the grouped
+    trainer (``kmeans_fit_assign_grouped`` — one round loop over one
+    codebook keyed by (subspace, cell); never a per-group driver
+    loop). Scoring then replays the exact x3_ivfpq_topk plan
     shape — codes hash-join the broadcast per-query ADC LUT on
     (cell, j, code) — with learned centroids swapped for the hash-rank
     medoids: zero plan-shape diff (VERDICT r4 item 2).

@@ -1876,14 +1876,18 @@ def _run_monoid_stream(spark: SparkSession, name: str, prefix: str,
 
 def _monoid_open(spark: SparkSession, batch_df: DataFrame, root: str,
                  fam: str, batch_id: int):
-    """Prologue of a latest-only monoid callback: ONE eager read of the
+    """Prologue of a latest-only monoid callback: ONE read of the
     micro-batch (foreachBatch re-scans the source per action, so a bare
     ``isEmpty()`` would double ``numInputRows`` and break the admission
-    pin), then the predecessor state of ``fam``. Returns
-    ``(batch, prev, ordinal)``; ``batch`` is None for an empty batch,
-    which the caller skips without touching state."""
-    batch_df = batch_df.localCheckpoint(eager=True)
-    if batch_df.isEmpty():
+    pin), then the predecessor state of ``fam``. The read is a lazy
+    ``localCheckpoint`` whose blocks the empty guard's full count
+    materialises — the ``ckpt_fused`` contract. The guard counts the
+    plan's RDD: one job, where a DataFrame ``count()`` is a partial
+    and a final aggregate, which adaptive execution runs as two.
+    Returns ``(batch, prev, ordinal)``; ``batch`` is None for an empty
+    batch, which the caller skips without touching state."""
+    batch_df = batch_df.localCheckpoint(eager=False)
+    if batch_df._jdf.queryExecution().toRdd().count() == 0:
         return None, None, None
     return (batch_df,) + _monoid_prev(spark, root, fam, batch_id)
 

@@ -311,3 +311,76 @@ def test_kmeans_sample_rows_equivalence(spark):
     g_a = sorted(tuple(r) for r in cb_a.collect())
     g_b = sorted(tuple(r) for r in cb_b.collect())
     assert g_a == g_b and g_a
+
+
+def test_kmeans_exhaustive_matches_full_sample(spark):
+    """Exhaustive mode (one Spark aggregate per Lloyd round) and
+    sampled mode with a sample covering every row (numpy rounds over
+    the collected relation) run the same round loop from the same
+    seeds, so they must agree: identical ``(id, cell)`` assignments,
+    and centroids and every per-round inertia equal up to summation
+    order (1e-9 relative) — ungrouped and grouped. The tables are the
+    vendored sf0.001 copy (perfbench/data), 500 embeddings."""
+    import math
+    import os
+
+    from stock_data_warehouse_spark.operators.kmeans import (
+        kmeans_fit_assign, kmeans_fit_assign_grouped,
+    )
+    from stock_data_warehouse_spark.sources.tables import load_table
+
+    sf = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "perfbench", "data", "sf0.001")
+    e = load_table(spark, sf, "embeddings")
+    v = e.select("vec_id",
+                 F.transform("embedding",
+                             lambda x: x.cast("double")).alias("e"))
+    n = v.count()
+    assert n >= 500
+    K = 6
+
+    def close(a, b):
+        return math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-12)
+
+    def same_codebook(cb_x, cb_y, keys):
+        x = {tuple(r[k] for k in keys): r["ce"] for r in cb_x.collect()}
+        y = {tuple(r[k] for k in keys): r["ce"] for r in cb_y.collect()}
+        assert x and x.keys() == y.keys()
+        assert all(close(p, q) for key in x
+                   for p, q in zip(x[key], y[key], strict=True))
+
+    def same_inertias(log_x, log_y):
+        ix = [df.first()["inertia"] for df in log_x]
+        iy = [df.first()["inertia"] for df in log_y]
+        assert len(ix) == len(iy) == 3
+        assert all(close(p, q) for p, q in zip(ix, iy))
+
+    runs = {}
+    for mode, s in (("exhaustive", None), ("sampled", n)):
+        ilog, clog = [], []
+        out = kmeans_fit_assign(v, "vec_id", "e", k=K, n_iter=3,
+                                train_sample=s, inertia_log=ilog,
+                                centroids_log=clog)
+        runs[mode] = ({(r["id"], r["cell"]) for r in out.collect()},
+                      clog[0], ilog)
+    ex, sa = runs["exhaustive"], runs["sampled"]
+    assert len(ex[0]) == n and ex[0] == sa[0]
+    same_codebook(ex[1], sa[1], ["cell"])
+    same_inertias(ex[2], sa[2])
+
+    sub = v.select(
+        "vec_id",
+        F.posexplode(F.array(*[F.slice("e", 8 * j + 1, 8)
+                               for j in range(8)])).alias("j", "sv"))
+    runs = {}
+    for mode, s in (("exhaustive", None), ("sampled", n)):
+        ilog = []
+        out, cb = kmeans_fit_assign_grouped(
+            sub, "j", "vec_id", "sv", k=K, n_iter=3,
+            train_sample=s, inertia_log=ilog)
+        runs[mode] = ({(r["grp"], r["id"], r["cell"])
+                       for r in out.collect()}, cb, ilog)
+    ex, sa = runs["exhaustive"], runs["sampled"]
+    assert len(ex[0]) == 8 * n and ex[0] == sa[0]
+    same_codebook(ex[1], sa[1], ["grp", "cell"])
+    same_inertias(ex[2], sa[2])
