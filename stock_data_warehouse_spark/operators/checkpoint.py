@@ -86,3 +86,11 @@ def ckpt_fused(df: DataFrame) -> DataFrame:
     if spark.conf.get(CKPT_MODE_CONF, "local") == "local":
         return df.localCheckpoint(eager=False)
     return ckpt(df)
+
+
+def count_rows(df: DataFrame) -> int:
+    """Row count of ``df`` in ONE Spark job: a count over the plan's
+    RDD. A DataFrame ``count()`` is a partial and a final aggregate,
+    which adaptive execution runs as two jobs. Over a lazy
+    ``ckpt_fused`` frame this is the materialising action."""
+    return df._jdf.queryExecution().toRdd().count()

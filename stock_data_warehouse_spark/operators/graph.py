@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpoint import ckpt, ckpt_fused
+from .checkpoint import ckpt, ckpt_fused, count_rows
 
 
 def connected_components(edges: DataFrame, src: str = "src",
@@ -70,17 +70,18 @@ def connected_components(edges: DataFrame, src: str = "src",
         # convergence test is a filter-count over already-materialized
         # rows — no extra new-vs-old join job per round. r16: the
         # checkpoint is LAZY (ckpt_fused) — the count below is the
-        # materializing job, so each round runs ONE job where r15 ran
-        # an eager materialization plus the count. The count scans the
-        # full relation (no limit/take), so every block lands exactly
-        # as the eager form left it.
+        # materializing job, and an RDD-level one (count_rows), so each
+        # round runs ONE job where r15 ran an eager materialization
+        # plus a two-job DataFrame count. The count scans the full
+        # relation (no limit/take), so every block lands exactly as the
+        # eager form left it.
         stepped = ckpt_fused(
             labels.join(nbr_min, "node", "left")
                   .select("node",
                           new_component.alias("component"),
                           (new_component != F.col("component"))
                            .alias("_changed")))
-        changed = stepped.filter("_changed").count()  # control flow only
+        changed = count_rows(stepped.filter("_changed"))  # control flow
         labels = stepped.drop("_changed")
         if changed == 0:
             converged = True

@@ -38,17 +38,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .checkpoint import ckpt
+from .vectors import l2sq
 
 
 class SampleIdUniverseError(ValueError):
     """The groups of a sampled ``kmeans_fit_assign_grouped`` carry
     different id sets, so the shared hash-min seeds would not exist in
     every group."""
-
-
-def _sq_dist(a: F.Column, b: F.Column) -> F.Column:
-    d = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-    return F.aggregate(d, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def _hash_order(id_col: str = "id"):
@@ -229,7 +225,7 @@ def _argmin_assign(v: DataFrame, cents: dict,
         for g, keys in groupby(sorted(cents), key=lambda gc: gc[0]))
     cands = F.element_at(F.expr(f"map({book})"), F.col("grp"))
     best = F.array_min(F.transform(cands, lambda c: F.struct(
-        _sq_dist(F.col("e"), c["ce"]).alias("d2"),
+        l2sq(F.col("e"), c["ce"]).alias("d2"),
         c["cell"].alias("cell"))))
     return (v.withColumn("_b", best).filter(F.col("_b").isNotNull())
              .select(*v.columns, F.col("_b.cell").alias("cell"),

@@ -15,13 +15,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.reference_pipeline import (
-    LAST_UPDATED, _lists_df, snapshot_pipeline,
-)
 from ..functions.scalars import canonicalize_line, normalize_ticker
+from ..plans.registry import query_fns
+from ..sources.reference import LAST_UPDATED, _lists_df
 from ..sources.sinks import (
     publish_if_changed, write_manifest, write_per_key_json,
 )
@@ -41,7 +40,8 @@ def lists_relation(spark: SparkSession) -> DataFrame:
 def refresh_warehouse(spark: SparkSession, out_dir: str) -> dict:
     """Run one refresh; returns counters for the run report
     (the reference's success/total tally, fetch_data.py:305-321)."""
-    snapshot = snapshot_pipeline(spark)
+    # the reference domain ships as fixtures: the query ignores sf_dir
+    snapshot = query_fns()["ref_snapshot_pipeline"](spark, "")
     n_changed = publish_if_changed(spark, snapshot, out_dir, "ticker")
 
     data_dir = os.path.join(out_dir, "data")

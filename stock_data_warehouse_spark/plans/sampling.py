@@ -33,6 +33,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalars import md5_prefix_long, sql_round_half_up
+from ..operators.minhash import (_UNIFORM_TH, _hex_threshold, _sql_coin,
+                                 hash_coin)
+from ..operators.text import SQL_TOKENS, tokens_col
+from ..operators.vectors import _as_double_vec
 from ..sources.tables import load_table, values_df
 from .registry import register
 
@@ -41,40 +45,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _hex_threshold(rate: float, digits: int = 6) -> str:
-    """Hex string h such that P[substr(md5(k),1,digits) < h] ≈ rate.
-
-    rate ≥ 1 returns ``"g"``: every hex string sorts below it (hex
-    digits stop at 'f'), so the stratum keeps everything — the naive
-    ``format(16**digits)`` would be a 7-char string that sorts BELOW
-    ~94% of 6-char coins and silently kept almost nothing.
-    """
-    if rate >= 1.0:
-        return "g"
-    return format(int(rate * 16 ** digits), f"0{digits}x")
-
-
-def hash_coin(key: F.Column, salt: str, digits: int = 6) -> F.Column:
-    """Portable uniform draw: first ``digits`` hex chars of
-    ``md5(salt || ':' || key)``. Compare against ``_hex_threshold``."""
-    return F.substring(
-        F.md5(F.concat(F.lit(salt), F.lit(":"), key.cast("string"))),
-        1, digits)
-
-
-def _sql_coin(key_expr: str, salt: str, digits: int = 6) -> str:
-    """DuckDB expression mirroring ``hash_coin`` byte-for-byte."""
-    return (f"substr(md5('{salt}' || ':' || CAST({key_expr} AS VARCHAR)),"
-            f" 1, {digits})")
-
-
 # ---------------------------------------------------------------------------
 # OP-X7a — uniform deterministic sample
 # ---------------------------------------------------------------------------
-
-_UNIFORM_RATE = 0.25
-_UNIFORM_TH = _hex_threshold(_UNIFORM_RATE)
-
 
 @register(
     "x7_hash_sample",
@@ -254,7 +227,6 @@ _SOURCE_TOKEN_BUDGET = 20_000
 
 
 def _x7_budget_oracle() -> str:
-    from .extensions import SQL_TOKENS
     return f"""
     WITH base AS (
       SELECT doc_id, source,
@@ -291,7 +263,6 @@ def x7_token_budget_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     only see the admitted prefix.
     """
     from pyspark.sql import Window
-    from .extensions import tokens_col
 
     d = _t(spark, sf_dir, "documents")
     base = d.select(
@@ -824,14 +795,11 @@ def x7_smd_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X9 — curriculum shard assignment (staircase-ranked difficulty, r8)
 # ---------------------------------------------------------------------------
 
-from .extensions import SQL_TOKENS as _SQL_TOKENS  # noqa: E402
-
-
 @register(
     "x9_curriculum_shards",
     oracle=f"""
     WITH scored AS (
-      SELECT doc_id, len({_SQL_TOKENS}) AS n_tokens FROM documents
+      SELECT doc_id, len({SQL_TOKENS}) AS n_tokens FROM documents
     ),
     ranked AS (
       SELECT doc_id, n_tokens,
@@ -861,7 +829,6 @@ def x9_curriculum_shards(spark: SparkSession,
     ((rn−1)·8) div n is pure integer arithmetic — no float boundary
     can move a document across shards between engines."""
     d = _t(spark, sf_dir, "documents")
-    from ..plans.extensions import tokens_col
     scored = d.select("doc_id",
                       F.size(tokens_col("text")).alias("n_tokens"))
     from ..operators.staircase import bucketed_row_number
@@ -1017,7 +984,7 @@ def x7_dedup_safe_split(spark: SparkSession,
     "x9_shard_skew_report",
     oracle=f"""
     WITH sharded AS (
-      SELECT doc_id, len({_SQL_TOKENS}) AS n_tok,
+      SELECT doc_id, len({SQL_TOKENS}) AS n_tok,
              CAST(substr(md5('shard' || ':'
                     || CAST(doc_id AS VARCHAR)), 1, 1) AS VARCHAR)
                AS shard
@@ -1061,7 +1028,6 @@ def x9_shard_skew_report(spark: SparkSession,
     shards whose balance is a property of the hash, which is exactly
     what the report certifies."""
     d = _t(spark, sf_dir, "documents")
-    from .extensions import tokens_col
     sharded = d.select(
         F.substring(F.md5(F.concat(F.lit("shard"), F.lit(":"),
                                    F.col("doc_id").cast("string"))),
@@ -1094,8 +1060,7 @@ def x9_shard_skew_report(spark: SparkSession,
 # X6 — Poisson-bootstrap CI for the exact AUC (r10): the x6_auc_exact
 # BIGINT midrank machinery composed with x7_poisson_bootstrap's
 # replicate weights. Lives in this module beside the Poisson CDF
-# constants (extensions.py cannot import sampling at module scope —
-# sampling imports extensions at line ~834).
+# constants.
 # ---------------------------------------------------------------------------
 
 _N_AUC_REPLICAS = 5
@@ -1209,8 +1174,7 @@ def x6_bootstrap_auc_ci(spark: SparkSession,
     e = load_table(spark, sf_dir, "embeddings")
     pts = e.select(
         "vec_id",
-        F.element_at(F.transform("embedding",
-                                 lambda x: x.cast("double")), 1)
+        F.element_at(_as_double_vec("embedding"), 1)
          .alias("score"),
         (F.col("label") >= 5).alias("y"))
     reps = pts.withColumn(

@@ -406,7 +406,7 @@ def s9_sharded_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     the downstream loader consumes. The manifest (not the side effect)
     is what the oracle replays — shard membership is a pure function of
     doc_id, so counts and byte totals are engine-exact."""
-    from ..plans.sampling import _UNIFORM_TH, hash_coin
+    from ..operators.minhash import _UNIFORM_TH, hash_coin
 
     d = load_table(spark, sf_dir, "documents")
     shard = (F.ascii(F.substring(

@@ -84,8 +84,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.scalars import md5_prefix_long
-from ..operators.checkpoint import ckpt
-from ..plans.registry import register
+from ..operators.checkpoint import ckpt, count_rows
+from ..operators.minhash import (_SQL_BANDS, _SQL_JPAIRS, _SQL_MH,
+                                 _portable_bands)
+from ..operators.text import SQL_TOKENS, shingles_col, tokens_col
+from ..operators.vectors import (K_CODES, K_COARSE, _as_double_vec, _dot,
+                                 _sql_dot, l2sq, subspaces)
+from ..plans.registry import query_fns, register
 from ..tmpdirs import mkdtemp as _mkdtemp
 
 def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
@@ -1874,20 +1879,26 @@ def _run_monoid_stream(spark: SparkSession, name: str, prefix: str,
 # every maintenance callback (t40, t42–t47) is written with
 
 
+def _open_batch(batch_df: DataFrame) -> DataFrame | None:
+    """ONE read of a foreachBatch micro-batch (foreachBatch re-scans
+    the source per action, so a bare ``isEmpty()`` would double
+    ``numInputRows`` and break the admission pin): a lazy
+    ``localCheckpoint`` whose blocks the empty guard's full
+    ``count_rows`` materialises — the ``ckpt_fused`` contract, one job
+    where an eager checkpoint plus ``isEmpty()`` were two. Returns the
+    batch, or None for an empty batch, which the caller skips."""
+    batch_df = batch_df.localCheckpoint(eager=False)
+    return batch_df if count_rows(batch_df) else None
+
+
 def _monoid_open(spark: SparkSession, batch_df: DataFrame, root: str,
                  fam: str, batch_id: int):
-    """Prologue of a latest-only monoid callback: ONE read of the
-    micro-batch (foreachBatch re-scans the source per action, so a bare
-    ``isEmpty()`` would double ``numInputRows`` and break the admission
-    pin), then the predecessor state of ``fam``. The read is a lazy
-    ``localCheckpoint`` whose blocks the empty guard's full count
-    materialises — the ``ckpt_fused`` contract. The guard counts the
-    plan's RDD: one job, where a DataFrame ``count()`` is a partial
-    and a final aggregate, which adaptive execution runs as two.
-    Returns ``(batch, prev, ordinal)``; ``batch`` is None for an empty
-    batch, which the caller skips without touching state."""
-    batch_df = batch_df.localCheckpoint(eager=False)
-    if batch_df._jdf.queryExecution().toRdd().count() == 0:
+    """Prologue of a latest-only monoid callback: :func:`_open_batch`,
+    then the predecessor state of ``fam``. Returns ``(batch, prev,
+    ordinal)``; ``batch`` is None for an empty batch, which the caller
+    skips without touching state."""
+    batch_df = _open_batch(batch_df)
+    if batch_df is None:
         return None, None, None
     return (batch_df,) + _monoid_prev(spark, root, fam, batch_id)
 
@@ -1992,7 +2003,6 @@ def _x2_postings(docs: DataFrame) -> DataFrame:
     """Shingle postings (doc_id, n, shingle) — shared by the x2
     ingest and compaction streams' base init and per-batch
     increments."""
-    from ..plans.extensions import shingles_col, tokens_col
     return (docs.select("doc_id",
                         shingles_col(tokens_col("text")).alias("s"))
                 .select("doc_id", F.size("s").alias("n"),
@@ -2023,7 +2033,6 @@ def _x2_dedup_verdicts(spark: SparkSession, batch_df: DataFrame,
     derives its per-batch counters from the verdict ledger
     read-back instead of re-running ``best``."""
     from ..functions.scalars import round_half_up
-    from ..plans.extensions import _portable_bands
 
     _par_actions(
         lambda: _portable_bands(batch_df).write.mode("overwrite")
@@ -3706,9 +3715,6 @@ def t33_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 # micro-batch (VERDICT r7 next-round #4)
 # ---------------------------------------------------------------------------
 
-from ..plans.extensions import _sql_dot as _x3_sql_dot  # noqa: E402
-
-
 @register(
     "x3_ivf_ingest_stream",
     oracle=f"""
@@ -3717,7 +3723,7 @@ from ..plans.extensions import _sql_dot as _x3_sql_dot  # noqa: E402
     ),
     n AS (
       SELECT vec_id FROM v
-      WHERE sqrt({_x3_sql_dot('e', 'e')}) > 0
+      WHERE sqrt({_sql_dot('e', 'e')}) > 0
     )
     SELECT (SELECT COUNT(*) FROM n WHERE vec_id % 7 = 0)
              AS n_arrivals,
@@ -3769,9 +3775,6 @@ def x3_ivf_ingest_stream(spark: SparkSession,
     from ..operators.kmeans import (
         kmeans_fit_assign, kmeans_fit_assign_grouped,
     )
-    from ..plans.extensions import (
-        K_COARSE, K_CODES, _as_double_vec, _dot,
-    )
     from ..sources.tables import load_table
 
     out_dir = _mkdtemp(prefix="x3_ingest_stream_")
@@ -3785,18 +3788,6 @@ def x3_ivf_ingest_stream(spark: SparkSession,
           .filter(F.col("nrm") > 0).select("vec_id", "e"))
     wh = n.filter(F.col("vec_id") % 7 != 0)
     arr = n.filter(F.col("vec_id") % 7 == 0)
-
-    def l2sq(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, x: acc + x)
-
-    def subspaces(df, vec="e"):
-        return df.select(
-            "vec_id",
-            F.posexplode(F.array(*[F.slice(vec, 8 * j + 1, 8)
-                                   for j in range(8)])).alias("j",
-                                                              "sv"))
 
     # --- train ONCE on the warehouse; freeze centroids + codebooks
     cent_log: list = []
@@ -3818,7 +3809,8 @@ def x3_ivf_ingest_stream(spark: SparkSession,
                       sample_rows=pre[:8 * K_COARSE])
     cents = cent_log[0]
     _enc, cb = kmeans_fit_assign_grouped(
-        subspaces(wh), "j", "vec_id", "sv",
+        wh.select("vec_id", subspaces("e").alias("j", "sv")),
+        "j", "vec_id", "sv",
         k=K_CODES, n_iter=3, train_sample=8 * K_CODES,
         assign=False,
         sample_rows=[(j, i, list(ev[8 * j:8 * j + 8]))
@@ -3834,7 +3826,7 @@ def x3_ivf_ingest_stream(spark: SparkSession,
                       .select("vec_id", F.col("b.cell").alias("cell")))
 
     def encode_pq(df):
-        scored = (subspaces(df)
+        scored = (df.select("vec_id", subspaces("e").alias("j", "sv"))
                   .join(F.broadcast(
                       cb.select(F.col("grp").alias("j"),
                                 F.col("cell").alias("code"), "ce")),
@@ -3865,8 +3857,8 @@ def x3_ivf_ingest_stream(spark: SparkSession,
     sroot = f"{out_dir}/state"
 
     def ingest_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint(eager=True)
-        if batch_df.isEmpty():
+        batch_df = _open_batch(batch_df)
+        if batch_df is None:
             return
         assign_cells(batch_df).write.mode("overwrite").parquet(
             _sdir(sroot, "cellsi", batch_id))
@@ -3911,27 +3903,16 @@ def x3_ivf_ingest_stream(spark: SparkSession,
 # (VERDICT r8 next-round #3 — the dedup twin of x3_ivf_ingest_stream)
 # ---------------------------------------------------------------------------
 
-from ..plans.extensions import _SQL_JPAIRS as _X2_SQL_JPAIRS  # noqa: E402
 from ..functions.scalars import sql_round_half_up as _sql_rhu  # noqa: E402
 
 
 @register(
     "x2_incremental_minhash_stream",
     oracle=f"""
-    WITH {_X2_SQL_JPAIRS},
+    WITH {_SQL_JPAIRS},
     shingled AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-    mh AS (
-      SELECT t1.doc_id, t.i,
-             min(md5(CAST(t.i AS VARCHAR) || ':' || t1.shingle)) AS mh
-      FROM (SELECT doc_id, unnest(s) AS shingle FROM shingled) t1
-      CROSS JOIN range(16) t(i)
-      GROUP BY t1.doc_id, t.i
-    ),
-    bands AS (
-      SELECT doc_id, i // 4 AS band_idx,
-             md5(string_agg(mh, '|' ORDER BY i)) AS band_hash
-      FROM mh GROUP BY doc_id, i // 4
-    ),
+    mh AS ({_SQL_MH}),
+    bands AS ({_SQL_BANDS}),
     cand AS (
       SELECT DISTINCT c.doc_id AS corpus_id, a.doc_id AS arrival_id
       FROM bands c JOIN bands a
@@ -4018,9 +3999,6 @@ def x2_incremental_minhash_stream(spark: SparkSession,
     n/dup/unique/jac6_mass aggregates replay fully in the oracle
     (portable md5 family — the candidate set itself is cross-engine
     exact, banding misses included)."""
-    from ..plans.extensions import (
-        _portable_bands, x2_incremental_minhash,
-    )
     from ..functions.scalars import round_half_up
     from ..sources.tables import load_table
 
@@ -4050,8 +4028,8 @@ def x2_incremental_minhash_stream(spark: SparkSession,
             stage, n_files=3))
 
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint(eager=True)
-        if batch_df.isEmpty():
+        batch_df = _open_batch(batch_df)
+        if batch_df is None:
             return
         # r16: the batch's own bands/postings are consumed twice each
         # (the probe AND the durable increment). Land the increments
@@ -4139,7 +4117,7 @@ def x2_incremental_minhash_stream(spark: SparkSession,
     # aggregation: the corpus slice's verdict is the same min over
     # the doc_id < 400 groups.
     streamed = _read_family(spark, sroot, "verd")
-    batch_form = x2_incremental_minhash(spark, sf_dir)
+    batch_form = query_fns()["x2_incremental_minhash"](spark, sf_dir)
     m_idx = spark.read.parquet(idx_dir, *[
         _sdir(sroot, "bandsi", v)
         for v in _committed_versions(sroot, "bandsi")])
@@ -4198,8 +4176,8 @@ def _x2bc_make_batch(spark: SparkSession, out_dir: str):
     sroot = f"{out_dir}/state"
 
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint(eager=True)
-        if batch_df.isEmpty():
+        batch_df = _open_batch(batch_df)
+        if batch_df is None:
             return
         # ordinal counts the VERD ledger (one dir per data batch,
         # never vacuumed) — increment counts stopped being ordinals
@@ -4276,22 +4254,12 @@ def _x2bc_make_batch(spark: SparkSession, out_dir: str):
 @register(
     "x2_band_compaction_stream",
     oracle=f"""
-    WITH {_X2_SQL_JPAIRS},
+    WITH {_SQL_JPAIRS},
     jsym AS (SELECT doc_a AS x, doc_b AS y, jac FROM jpairs
              UNION ALL SELECT doc_b, doc_a, jac FROM jpairs),
     shingled AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-    mh AS (
-      SELECT t1.doc_id, t.i,
-             min(md5(CAST(t.i AS VARCHAR) || ':' || t1.shingle)) AS mh
-      FROM (SELECT doc_id, unnest(s) AS shingle FROM shingled) t1
-      CROSS JOIN range(16) t(i)
-      GROUP BY t1.doc_id, t.i
-    ),
-    bands AS (
-      SELECT doc_id, i // 4 AS band_idx,
-             md5(string_agg(mh, '|' ORDER BY i)) AS band_hash
-      FROM mh GROUP BY doc_id, i // 4
-    ),
+    mh AS ({_SQL_MH}),
+    bands AS ({_SQL_BANDS}),
     coll AS (
       SELECT DISTINCT c.doc_id AS x, a.doc_id AS y
       FROM bands c JOIN bands a
@@ -4402,7 +4370,6 @@ def x2_band_compaction_stream(spark: SparkSession,
     idempotent under foreachBatch retry/restart — the durable-state
     kit), after which probes stop paying for dup docs — the probe
     target tracks unique corpus size."""
-    from ..plans.extensions import _portable_bands
     from ..sources.tables import load_table
 
     out_dir = _mkdtemp(prefix="x2_band_compact_stream_")
@@ -4687,8 +4654,8 @@ def _x2trig_make_batch(spark: SparkSession, out_dir: str):
     sroot = f"{out_dir}/state"
 
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.localCheckpoint(eager=True)
-        if batch_df.isEmpty():
+        batch_df = _open_batch(batch_df)
+        if batch_df is None:
             return
         # ordinal counts the VERD ledger (never vacuumed) — see
         # _x2bc_make_batch; increment listings shrink under the r13
@@ -4794,18 +4761,8 @@ def _x2trig_make_batch(spark: SparkSession, out_dir: str):
     jsym AS (SELECT doc_a AS x, doc_b AS y, jac FROM jpairs
              UNION ALL SELECT doc_b, doc_a, jac FROM jpairs),
     shingled AS MATERIALIZED (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-    mh AS MATERIALIZED (
-      SELECT t1.doc_id, t.i,
-             min(md5(CAST(t.i AS VARCHAR) || ':' || t1.shingle)) AS mh
-      FROM (SELECT doc_id, unnest(s) AS shingle FROM shingled) t1
-      CROSS JOIN range(16) t(i)
-      GROUP BY t1.doc_id, t.i
-    ),
-    bands AS MATERIALIZED (
-      SELECT doc_id, i // 4 AS band_idx,
-             md5(string_agg(mh, '|' ORDER BY i)) AS band_hash
-      FROM mh GROUP BY doc_id, i // 4
-    ),
+    mh AS MATERIALIZED ({_SQL_MH}),
+    bands AS MATERIALIZED ({_SQL_BANDS}),
     coll AS MATERIALIZED (
       SELECT DISTINCT c.doc_id AS x, a.doc_id AS y
       FROM bands c JOIN bands a
@@ -4939,7 +4896,7 @@ def _x2trig_make_batch(spark: SparkSession, out_dir: str):
                      - CASE WHEN fired THEN uncomp ELSE 0 END
                    FROM s2f) AS BIGINT)
     )
-    """.format(jp=_X2_SQL_JPAIRS, jac6=_sql_rhu("j.jac", 6),
+    """.format(jp=_SQL_JPAIRS, jac6=_sql_rhu("j.jac", 6),
                num=_TRIG_COMPACT_NUM, den=_TRIG_COMPACT_DEN),
 )
 def x2_triggered_compaction_stream(spark: SparkSession,
@@ -4977,7 +4934,6 @@ def x2_triggered_compaction_stream(spark: SparkSession,
     a fire is one anti-join rewrite; the removed set is ids only. The
     policy guarantees probes never pay more than (1 + 1.5%) of the
     unique corpus for dup debt."""
-    from ..plans.extensions import _portable_bands
     from ..sources.tables import load_table
 
     out_dir = _mkdtemp(prefix="x2_trig_compact_")
@@ -5623,7 +5579,6 @@ def _mgs_oracle() -> str:
     """Sequential 4-level replay of the MG merge recurrence
     state_b = prune_K(state_{b-1} ⊎ exact_counts(batch_b)); hot CTEs
     MATERIALIZED (CLAUDE.md: DuckDB inlines CTEs per reference)."""
-    from ..plans.extensions import SQL_TOKENS
     k = _MGS_K
     parts = [f"""tok_arr AS MATERIALIZED (
       SELECT (doc_id % 4) AS arrival, unnest({SQL_TOKENS}) AS tok
@@ -5677,7 +5632,6 @@ def _t45_make_batch(spark: SparkSession, out_dir: str):
     like the counters, and is vacuumed like them), results family
     ``res`` — all batch-id-keyed, predecessors by listing
     (durable-state kit). Module-level for the durability drills."""
-    from ..plans.extensions import tokens_col
     sroot = f"{out_dir}/state"
 
     def mgs_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -5777,7 +5731,6 @@ def t45_heavy_hitter_stream(spark: SparkSession,
 
     # --- referee (test scaffolding): exact prefix counts for the
     # ≤ 4·K emitted keys, from the staged landing
-    from ..plans.extensions import tokens_col
     res = _read_family(spark, sroot, "res")
     landed = (spark.read.option("recursiveFileLookup", "true")
                    .parquet(stage)

@@ -99,3 +99,60 @@ def test_grouped_kmeans_sample_groups_share_one_id_universe(spark):
                                       n_iter=1, train_sample=2,
                                       assign=False, sample_rows=shared)
     assert sorted(r["grp"] for r in cb.collect()) == [0, 1]
+
+
+def _package_modules():
+    """``(dotted module name, parsed AST, relative path)`` for every
+    module of the package."""
+    import ast
+    import pathlib
+
+    import stock_data_warehouse_spark as pkg
+    root = pathlib.Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root.parent)
+        parts = list(rel.with_suffix("").parts)
+        if parts[-1] == "__init__":
+            parts = parts[:-1]
+        yield ".".join(parts), ast.parse(path.read_text()), rel
+
+
+def _imported_modules(modname, tree, is_pkg):
+    """Absolute names of every module ``tree`` imports from, with
+    ``from X import name`` also counted as ``X.name``."""
+    import ast
+    pkg = modname.split(".") if is_pkg else modname.split(".")[:-1]
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            yield from (a.name for a in n.names)
+        elif isinstance(n, ast.ImportFrom):
+            base = pkg[:len(pkg) - n.level + 1] if n.level else []
+            mod = ".".join(base + (n.module.split(".") if n.module
+                                   else []))
+            yield mod
+            yield from (f"{mod}.{a.name}" for a in n.names)
+
+
+def test_kernels_live_in_operators_and_plans_import_only_the_registry():
+    """No module outside ``plans/`` imports a plan module other than
+    ``plans.registry`` (a kernel two modules use lives in
+    ``operators/``; a referee that needs a registered query gets it
+    through ``registry.query_fns()``), and no function outside
+    ``operators/`` defines its own ``l2sq`` or ``subspaces``."""
+    import ast
+    plans = "stock_data_warehouse_spark.plans"
+    bad_imports, bad_defs = [], []
+    for modname, tree, rel in _package_modules():
+        if not modname.startswith(plans + "."):
+            bad_imports += [
+                (str(rel), m) for m in _imported_modules(
+                    modname, tree, rel.name == "__init__.py")
+                if m.startswith(plans + ".")
+                and m.split(".")[2] != "registry"]
+        if rel.parts[1] != "operators":
+            bad_defs += [(str(rel), n.lineno, n.name)
+                         for n in ast.walk(tree)
+                         if isinstance(n, ast.FunctionDef)
+                         and n.name in ("l2sq", "subspaces")]
+    assert not bad_imports, bad_imports
+    assert not bad_defs, bad_defs

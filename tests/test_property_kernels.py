@@ -3,6 +3,7 @@
 the golden boundary rows. Each example ships a whole batch of rows
 through one Spark job to keep the 15-example budget fast."""
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -500,3 +501,119 @@ def test_md5_prefix_long_matches_python_hex_prefix(spark, texts):
     for i, t in rows:
         hx = hashlib.md5(t.encode("utf-8")).hexdigest()
         assert got[i] == (int(hx[:6], 16), int(hx[:15], 16)), t
+
+
+# ---------------------------------------------------------------------------
+# Column ≡ DuckDB twins of the operators/ vector and MinHash kernels.
+# Each case returns (Spark rows, DuckDB rows) over the same inputs, handed
+# to DuckDB through pandas (bit-exact, no literal parsing).
+# ---------------------------------------------------------------------------
+
+def _vec_pairs():
+    import random
+    rng = random.Random(20261019)
+    pool = [0.0, 1.0, -1.0, 0.1, 1e-300, 63 / 128, 1e9 - 5e-7]
+    rows = []
+    for i in range(60):
+        n = rng.randint(1, 16)
+        rows.append((i, [rng.choice(pool) if rng.random() < 0.2
+                         else rng.uniform(-1e3, 1e3) for _ in range(n)],
+                     [rng.uniform(-1.0, 1.0) for _ in range(n)]))
+    return rows
+
+
+def _fold_twin(spark, col_fn, sql_fn):
+    import duckdb
+    import pandas as pd
+
+    rows = _vec_pairs()
+    df = spark.createDataFrame(rows, "id long, a array<double>, "
+                                     "b array<double>")
+    got = sorted((r["id"], r["v"]) for r in df.select(
+        "id", col_fn(F.col("a"), F.col("b")).alias("v")).collect())
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame(rows, columns=["id", "a", "b"]))
+    want = con.execute(
+        f"SELECT id, {sql_fn('a', 'b')} AS v FROM t ORDER BY id").fetchall()
+    return got, [tuple(r) for r in want]
+
+
+def _twin_dot(spark):
+    from stock_data_warehouse_spark.operators.vectors import _dot, _sql_dot
+    return _fold_twin(spark, _dot, _sql_dot)
+
+
+def _twin_l2sq(spark):
+    from stock_data_warehouse_spark.operators.vectors import l2sq, _sql_l2sq
+    return _fold_twin(spark, l2sq, _sql_l2sq)
+
+
+def _twin_hash_rank(spark):
+    import duckdb
+    import pandas as pd
+
+    from stock_data_warehouse_spark.operators.vectors import (
+        K_COARSE, _H_CENT, _H_CODE, _H_QUERY, _hash_sample,
+        _sql_hash_sample,
+    )
+
+    ids = list(range(0, 3000, 7)) + [2 ** 31 - 2, 2 ** 31 + 5, 2 ** 40]
+    df = spark.createDataFrame([(i,) for i in ids], "vec_id long")
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"vec_id": ids}))
+    got, want = [], []
+    for mi in (_H_CENT, _H_CODE, _H_QUERY):
+        got.append([r["vec_id"]
+                    for r in _hash_sample(df, K_COARSE, mi).collect()])
+        want.append([r[0] for r in con.execute(
+            f"SELECT vec_id FROM t {_sql_hash_sample(mi, K_COARSE)}")
+            .fetchall()])
+    return got, want
+
+
+def _twin_minhash_bands(spark):
+    import duckdb
+    import pandas as pd
+
+    from stock_data_warehouse_spark.operators.minhash import (
+        _SQL_BANDS, _SQL_MH, _portable_bands,
+    )
+    from stock_data_warehouse_spark.operators.text import (
+        SQL_SHINGLES, SQL_TOKENS,
+    )
+
+    texts = ["The quick brown fox jumps over the lazy dog",
+             "the QUICK brown fox jumps over the lazy dog!",
+             "a b", "", "Lorem ipsum dolor sit amet, consectetur 42",
+             "one two three four five six seven eight nine ten"]
+    rows = list(enumerate(texts))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(tuple(r) for r in _portable_bands(df).collect())
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows,
+                                           columns=["doc_id", "text"]))
+    want = con.execute(f"""
+        WITH toks AS (SELECT doc_id, {SQL_TOKENS} AS t FROM documents),
+        sh AS (SELECT doc_id, {SQL_SHINGLES} AS s FROM toks),
+        shingled AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
+        mh AS ({_SQL_MH}),
+        bands AS ({_SQL_BANDS})
+        SELECT doc_id, band_idx, band_hash FROM bands ORDER BY ALL
+        """).fetchall()
+    assert len(want) == 4 * 4  # four docs with shingles, four bands each
+    return got, [tuple(r) for r in want]
+
+
+_TWINS = {"dot": _twin_dot, "l2sq": _twin_l2sq,
+          "hash_rank": _twin_hash_rank, "minhash_bands": _twin_minhash_bands}
+
+
+@pytest.mark.parametrize("kernel", sorted(_TWINS))
+def test_operator_kernel_matches_duckdb_twin(spark, kernel):
+    """The Column form of each moved vector/MinHash kernel in
+    operators/ returns exactly what its DuckDB twin returns on the same
+    rows: the sequential dot and L2² folds bit for bit, the hash-rank
+    sample as the same ordered ids, and the portable MinHash bands as
+    the same (doc_id, band_idx, band_hash) rows."""
+    got, want = _TWINS[kernel](spark)
+    assert got == want

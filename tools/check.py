@@ -66,6 +66,27 @@ def canon_rows(df) -> list[tuple]:
     return rows
 
 
+def jvm_alive(spark) -> bool:
+    """True when the session's JVM still answers and its context is
+    up: a py4j call to a dead gateway raises instead."""
+    try:
+        return not spark.sparkContext._jsc.sc().isStopped()
+    except Exception:
+        return False
+
+
+def drop_session() -> None:
+    """Forget a session whose JVM is gone, so the next builder call
+    launches a fresh gateway instead of reusing the dead one."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+    SparkContext._active_spark_context = None
+    SparkContext._gateway = None
+    SparkContext._jvm = None
+    SparkSession._instantiatedSession = None
+    SparkSession._activeSession = None
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -86,13 +107,15 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
 
-    if args.plain:
-        from pyspark.sql import SparkSession
-        spark = (SparkSession.builder.master("local[8]")
-                 .appName("check-plain").getOrCreate())
-    else:
+    def new_session():
+        if args.plain:
+            from pyspark.sql import SparkSession
+            return (SparkSession.builder.master("local[8]")
+                    .appName("check-plain").getOrCreate())
         from stock_data_warehouse_spark.session import get_spark
-        spark = get_spark("check")
+        return get_spark("check")
+
+    spark = new_session()
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
 
@@ -122,6 +145,12 @@ def main() -> int:
             print(f"  !! {name}: SPARK CRASH")
             traceback.print_exc(limit=4)
             n_fail += 1
+            if not jvm_alive(spark):
+                # the query is counted failed, not retried; the rest
+                # are graded on a fresh session
+                print(f"  !! JVM LOST at {name}: starting a new session")
+                drop_session()
+                spark = new_session()
             continue
         # Replay the DRIVER's canonicalization (raw pandas sort_values
         # over all columns): unhashable cells (lists/dicts/ndarrays)
