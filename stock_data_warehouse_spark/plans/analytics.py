@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import md5_prefix_long, sql_round_half_up
-from ..operators.text import tokens_col
+from ..operators.text import SQL_TOKENS, tokens_col
 from ..sources.tables import load_table
 from .registry import register
 
@@ -631,9 +631,7 @@ _MG_M = 64   #: summary capacity (counters per partition and merged)
     "a16_heavy_hitters",
     oracle=f"""
     WITH tok AS (
-      SELECT unnest(list_filter(
-               string_split_regex(lower(text), '[^a-z0-9]+'),
-               x -> x <> '')) AS tok
+      SELECT unnest({SQL_TOKENS}) AS tok
       FROM documents
     ),
     exact AS (SELECT tok, COUNT(*) AS c FROM tok GROUP BY tok),
@@ -754,9 +752,7 @@ _CMS_WIDTH = 1024   #: buckets per row
     "a17_count_min",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest(list_filter(
-               string_split_regex(lower(text), '[^a-z0-9]+'),
-               x -> x <> '')) AS tok
+      SELECT doc_id, unnest({SQL_TOKENS}) AS tok
       FROM documents
     ),
     exact AS (SELECT tok, COUNT(*) AS c FROM tok GROUP BY tok),

@@ -43,7 +43,8 @@ from ..operators.vectors import (K_CODES, K_COARSE, N_QUERIES, _H_CENT,
                                  _H_CODE, _H_QUERY, _as_double_vec,
                                  _cos_argmax, _dot, _hash_sample,
                                  _ordered_sum, _sql_dot, _sql_hash_sample,
-                                 _sql_l2sq, l2sq, subspaces)
+                                 _sql_l2sq, assign_cells, encode_pq, l2sq,
+                                 subspaces)
 from ..sources.tables import load_table
 from .registry import register
 
@@ -4755,7 +4756,6 @@ def x3_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                           sample_rows=pre[:8 * K_COARSE])
         cents = cent_log[0]
         cells = assign_cells(encode_df, cents)
-        sub = encode_df.select("vec_id", subspaces("e").alias("j", "sv"))
         # assign=False (r15): both trainers' own full assignments were
         # discarded here — the encode set is assigned through
         # assign_cells/encode_pq against the frozen tables instead, so
@@ -4768,36 +4768,14 @@ def x3_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "j", "vec_id", "sv",
             k=K_CODES, n_iter=3, train_sample=8 * K_CODES,
             assign=False, sample_rows=sub_rows)
-        codes = encode_pq(sub, cb)
+        codes = encode_pq(encode_df, cb)
         return cells, codes, cents, cb
-
-    def assign_cells(df, cents):
-        scored = (df.crossJoin(F.broadcast(cents))
-                    .select("vec_id", "cell",
-                            l2sq(F.col("e"), F.col("ce")).alias("d2")))
-        return (scored.groupBy("vec_id")
-                      .agg(F.min(F.struct("d2", "cell")).alias("b"))
-                      .select("vec_id", F.col("b.cell").alias("cell")))
-
-    def encode_pq(sub, cb):
-        scored = (sub.join(
-                      F.broadcast(cb.select(F.col("grp").alias("j"),
-                                            F.col("cell").alias("code"),
-                                            "ce")), "j")
-                     .select("vec_id", "j", "code",
-                             l2sq(F.col("sv"), F.col("ce"))
-                              .alias("d2")))
-        return (scored.groupBy("vec_id", "j")
-                      .agg(F.min(F.struct("d2", "code")).alias("b"))
-                      .select("vec_id", "j",
-                              F.col("b.code").alias("code")))
 
     # 1. the stored warehouse index: trained AND encoded on wh only
     wh_cells, wh_codes, cents, cb = build_index(wh, wh)
     # 2. ingest: arrivals assigned + encoded against the FROZEN index
     arr_cells = assign_cells(arr, cents)
-    arr_codes = encode_pq(
-        arr.select("vec_id", subspaces("e").alias("j", "sv")), cb)
+    arr_codes = encode_pq(arr, cb)
     m_cells = wh_cells.unionByName(arr_cells)
     m_codes = wh_codes.unionByName(arr_codes)
     # 3. the from-scratch referee: trained and encoded on everything

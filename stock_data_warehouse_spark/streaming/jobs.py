@@ -74,6 +74,7 @@ state, same oracle) once the dependency exists.
 
 from __future__ import annotations
 
+import contextlib
 import inspect
 import itertools
 import os
@@ -89,7 +90,8 @@ from ..operators.minhash import (_SQL_BANDS, _SQL_JPAIRS, _SQL_MH,
                                  _portable_bands)
 from ..operators.text import SQL_TOKENS, shingles_col, tokens_col
 from ..operators.vectors import (K_CODES, K_COARSE, _as_double_vec, _dot,
-                                 _sql_dot, l2sq, subspaces)
+                                 _sql_dot, assign_cells, encode_pq,
+                                 subspaces)
 from ..plans.registry import query_fns, register
 from ..tmpdirs import mkdtemp as _mkdtemp
 
@@ -154,18 +156,50 @@ STREAM_ADMISSION: dict[str, int] = {
     "t46_prequential_anomaly_stream": 1,
 }
 
-#: State-store partition count for the ADVANCING-FRONTIER replays
-#: (t22/t23/t24). A streaming stateful operator pays a fixed per-
-#: partition-per-batch cost (state store open/commit/snapshot ×2
-#: stores for a join), so a 5-micro-batch bounded replay at 32
-#: partitions spends most of its wall time on empty-partition state
-#: management (measured: t23 at sf0.1 is 22.1 s at 32 partitions vs
-#: 6.7 s at 8 — same results, the oracle models are partition-count
-#: independent by construction). At 100 TB this knob goes UP with
-#: arrival rate × horizon; for the staged replay it is sized to the
-#: data. Applied around the streaming run only, session value
-#: restored in a finally.
+#: Cap on the state-store partition count of every bounded stateful
+#: stream (the file-sink, memory-sink and complete-mode runs; not the
+#: foreachBatch drains). A streaming stateful operator pays a fixed
+#: per-partition-per-batch cost (state store open/commit/snapshot, ×2
+#: stores for a join), so a bounded run at the session's 32 partitions
+#: spends most of its time on empty state stores (measured: t23 at
+#: sf0.1 is 22.1 s at 32 partitions vs 6.7 s at 8; t8 dedup at sf0.01
+#: 2.4 s vs 1.0-1.2 s — same results, the oracle models are
+#: partition-count independent by construction). :func:`_stream_confs`
+#: sets ``min(session value, cap)``, so a smaller session keeps its own
+#: count, and restores the session value in a ``finally``. At 100 TB
+#: the cap goes UP with arrival rate × horizon; for the bounded replays
+#: it is sized to the data.
 STREAM_STATE_PARTITIONS = 8
+
+
+#: Scan pins of the advancing-frontier replays: each staged arrival
+#: file scans as exactly ONE input partition (``_run_advancing``).
+_ONE_SPLIT_PER_FILE = {"spark.sql.files.maxPartitionBytes": str(8 * 1024 ** 3),
+                       "spark.sql.files.minPartitionNum": "1"}
+
+
+@contextlib.contextmanager
+def _stream_confs(spark: SparkSession, pins: dict[str, str]):
+    """Run a bounded stateful stream under the state-partition cap:
+    ``spark.sql.shuffle.partitions`` = ``min(session value,``
+    :data:`STREAM_STATE_PARTITIONS` ``)``, plus the caller's ``pins``;
+    every value is restored (or unset) in a ``finally``. A stream reads
+    the partition count when it starts and keeps it in its checkpoint,
+    so the conf must be in place at ``start()``."""
+    cap = min(int(spark.conf.get("spark.sql.shuffle.partitions")),
+              STREAM_STATE_PARTITIONS)
+    confs = {"spark.sql.shuffle.partitions": str(cap), **pins}
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def events_stream(spark: SparkSession, sf_dir: str,
@@ -247,13 +281,14 @@ def _run_to_table(stream_df: DataFrame, mode: str,
     an oracle hash mismatch downstream — this turns it into a loud,
     named failure at the query that violated it instead."""
     name = f"stream_result_{next(_seq)}"
-    q = (stream_df.writeStream
-         .format("memory")
-         .queryName(name)
-         .outputMode(mode)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    with _stream_confs(stream_df.sparkSession, {}):
+        q = (stream_df.writeStream
+             .format("memory")
+             .queryName(name)
+             .outputMode(mode)
+             .trigger(availableNow=True)
+             .start())
+        q.awaitTermination()
     if require_single_batch:
         data_batches = [p for p in q.recentProgress
                         if p["numInputRows"] > 0]
@@ -276,11 +311,9 @@ def _run_advancing(stream_df: DataFrame, n_staged: int,
     Owns the three contracts every advancing query needs, in one place
     so they cannot drift (ADVICE r6 item 4):
 
-    - **state-partition pinning**: ``spark.sql.shuffle.partitions`` is
-      set to :data:`STREAM_STATE_PARTITIONS` around the run (fixed
-      per-partition-per-batch state-store cost; results are
-      partition-count independent by construction) and restored in a
-      ``finally``;
+    - **the state-partition cap**: the run starts under
+      :func:`_stream_confs` (fixed per-partition-per-batch state-store
+      cost; results are partition-count independent by construction);
     - **scan-partition pinning** (ADVICE r6 item 2): t22's drop metric
       counts post-partial-agg GROUP rows, which matches the oracle's
       DISTINCT (batch, window, type) model only while each staged
@@ -299,13 +332,7 @@ def _run_advancing(stream_df: DataFrame, n_staged: int,
     """
     spark = stream_df.sparkSession
     name = f"stream_result_{next(_seq)}"
-    pinned = {"spark.sql.shuffle.partitions": str(STREAM_STATE_PARTITIONS),
-              "spark.sql.files.maxPartitionBytes": str(8 * 1024 ** 3),
-              "spark.sql.files.minPartitionNum": "1"}
-    prev = {k: spark.conf.get(k, None) for k in pinned}
-    for k, v in pinned.items():
-        spark.conf.set(k, v)
-    try:
+    with _stream_confs(spark, _ONE_SPLIT_PER_FILE):
         sq = (stream_df.writeStream
               .format("memory")
               .queryName(name)
@@ -313,12 +340,6 @@ def _run_advancing(stream_df: DataFrame, n_staged: int,
               .trigger(availableNow=True)
               .start())
         sq.awaitTermination()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     progress = sq.recentProgress
     data_batches = [pr for pr in progress if pr["numInputRows"] > 0]
     admitted = sum(pr["numInputRows"] for pr in data_batches)
@@ -411,13 +432,14 @@ def t1_microbatch_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .write.mode("overwrite")
                  .parquet(f"{out_dir}/snapshot"))
 
-    q = (hourly.writeStream
-         .foreachBatch(write_batch)
-         .outputMode("complete")
-         .option("checkpointLocation", f"{out_dir}/checkpoint")
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    with _stream_confs(spark, {}):
+        q = (hourly.writeStream
+             .foreachBatch(write_batch)
+             .outputMode("complete")
+             .option("checkpointLocation", f"{out_dir}/checkpoint")
+             .trigger(availableNow=True)
+             .start())
+        q.awaitTermination()
     return spark.read.parquet(f"{out_dir}/snapshot")
 
 
@@ -2273,18 +2295,12 @@ def _run_restartable(spark: SparkSession, hold: str, live: str,
     tranche-B rows merged in), and the WATERMARK (the frontier earned
     from tranche A must keep dropping tranche-B late rows — if
     recovery lost it, the shifted-late rows would be admitted and the
-    hash would diverge).  Pins the same scan/state confs as
-    :func:`_run_advancing`, across BOTH lifetimes."""
+    hash would diverge).  Both lifetimes run under the same
+    :func:`_stream_confs` cap and scan pins as :func:`_run_advancing`."""
     import shutil
 
-    pinned = {"spark.sql.shuffle.partitions": str(STREAM_STATE_PARTITIONS),
-              "spark.sql.files.maxPartitionBytes": str(8 * 1024 ** 3),
-              "spark.sql.files.minPartitionNum": "1"}
-    prev = {k: spark.conf.get(k, None) for k in pinned}
-    for k, v in pinned.items():
-        spark.conf.set(k, v)
     progresses = []
-    try:
+    with _stream_confs(spark, _ONE_SPLIT_PER_FILE):
         for lo, hi in ((0, split_at), (split_at, n_files)):
             for i in range(lo, hi):
                 shutil.move(f"{hold}/a{i}", f"{live}/a{i}")
@@ -2297,12 +2313,6 @@ def _run_restartable(spark: SparkSession, hold: str, live: str,
                   .start())
             sq.awaitTermination()
             progresses.append(sq.recentProgress)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     data_batches = [pr for run in progresses for pr in run
                     if pr["numInputRows"] > 0]
     admitted = sum(pr["numInputRows"] for pr in data_batches)
@@ -3817,30 +3827,9 @@ def x3_ivf_ingest_stream(spark: SparkSession,
                      for i, ev in pre[:8 * K_CODES]
                      for j in range(8)])
 
-    def assign_cells(df):
-        scored = (df.crossJoin(F.broadcast(cents))
-                    .select("vec_id", "cell",
-                            l2sq(F.col("e"), F.col("ce")).alias("d2")))
-        return (scored.groupBy("vec_id")
-                      .agg(F.min(F.struct("d2", "cell")).alias("b"))
-                      .select("vec_id", F.col("b.cell").alias("cell")))
-
-    def encode_pq(df):
-        scored = (df.select("vec_id", subspaces("e").alias("j", "sv"))
-                  .join(F.broadcast(
-                      cb.select(F.col("grp").alias("j"),
-                                F.col("cell").alias("code"), "ce")),
-                      "j")
-                  .select("vec_id", "j", "code",
-                          l2sq(F.col("sv"), F.col("ce")).alias("d2")))
-        return (scored.groupBy("vec_id", "j")
-                      .agg(F.min(F.struct("d2", "code")).alias("b"))
-                      .select("vec_id", "j",
-                              F.col("b.code").alias("code")))
-
     # --- the stored index: warehouse encoded once, landed durable
-    assign_cells(wh).write.parquet(cells_dir)
-    encode_pq(wh).write.parquet(codes_dir)
+    assign_cells(wh, cents).write.parquet(cells_dir)
+    encode_pq(wh, cb).write.parquet(codes_dir)
     wh_cells = spark.read.parquet(cells_dir)
     wh_codes = spark.read.parquet(codes_dir)
 
@@ -3860,9 +3849,9 @@ def x3_ivf_ingest_stream(spark: SparkSession,
         batch_df = _open_batch(batch_df)
         if batch_df is None:
             return
-        assign_cells(batch_df).write.mode("overwrite").parquet(
+        assign_cells(batch_df, cents).write.mode("overwrite").parquet(
             _sdir(sroot, "cellsi", batch_id))
-        encode_pq(batch_df).write.mode("overwrite").parquet(
+        encode_pq(batch_df, cb).write.mode("overwrite").parquet(
             _sdir(sroot, "codesi", batch_id))
 
     n_batches, admitted = _drain_foreach(
@@ -3878,8 +3867,8 @@ def x3_ivf_ingest_stream(spark: SparkSession,
     m_codes = spark.read.parquet(codes_dir, *[
         _sdir(sroot, "codesi", v)
         for v in _committed_versions(sroot, "codesi")])
-    b_cells = wh_cells.unionByName(assign_cells(arr))
-    b_codes = wh_codes.unionByName(encode_pq(arr))
+    b_cells = wh_cells.unionByName(assign_cells(arr, cents))
+    b_codes = wh_codes.unionByName(encode_pq(arr, cb))
     untouched = _multiset_eq(m_cells.filter(F.col("vec_id") % 7 != 0),
                              wh_cells, "c").crossJoin(
         _multiset_eq(m_codes.filter(F.col("vec_id") % 7 != 0),

@@ -49,11 +49,17 @@ SAMPLE = [
     "x2_incremental_minhash",       # best-match tiebreak
     # r6: the advancing-frontier streaming family — drop sets, pair
     # sets, null-emission and dup/late splits must not depend on the
-    # session's partitioning (the queries pin their own state-store
-    # partition count internally; staging/admission must not leak)
+    # session's partitioning (each stream caps its state store at
+    # min(session, STREAM_STATE_PARTITIONS) partitions, so these run
+    # at 4 and at 7; staging/admission must not leak)
     "t22_watermark_advance_drops",
     "t23_interval_join_advance",
     "t25_stateful_dedup_advance",
+    # the memory-sink streams under the same cap: dedup survivors,
+    # per-key pandas state, sealed tumbling windows
+    "t8_stateful_dedup_stream",
+    "t8_stateful_counters_stream",
+    "t7_watermark_tumbling_stream",
     "a16_heavy_hitters",            # MG verdicts under partitioning
     "a17_count_min",                # CMS cells under partial-agg plans
     "x7_temperature_mix",           # data-derived rate, integer coin

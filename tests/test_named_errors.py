@@ -138,7 +138,8 @@ def test_kernels_live_in_operators_and_plans_import_only_the_registry():
     ``plans.registry`` (a kernel two modules use lives in
     ``operators/``; a referee that needs a registered query gets it
     through ``registry.query_fns()``), and no function outside
-    ``operators/`` defines its own ``l2sq`` or ``subspaces``."""
+    ``operators/`` defines its own ``l2sq``, ``subspaces``,
+    ``assign_cells`` or ``encode_pq``."""
     import ast
     plans = "stock_data_warehouse_spark.plans"
     bad_imports, bad_defs = [], []
@@ -153,6 +154,7 @@ def test_kernels_live_in_operators_and_plans_import_only_the_registry():
             bad_defs += [(str(rel), n.lineno, n.name)
                          for n in ast.walk(tree)
                          if isinstance(n, ast.FunctionDef)
-                         and n.name in ("l2sq", "subspaces")]
+                         and n.name in ("l2sq", "subspaces",
+                                        "assign_cells", "encode_pq")]
     assert not bad_imports, bad_imports
     assert not bad_defs, bad_defs

@@ -19,7 +19,11 @@ and compiles of an immediate second run. A second run that still
 compiles most of what the first did means the codegen cache is too
 small for the query (session.py, ``spark.sql.codegen.cache.maxEntries``).
 Beside them it gives the milliseconds the JVM's JIT compilers spent on
-each run (``session.jit_compile_ms``; session.py, "JIT").
+each run (``session.jit_compile_ms``; session.py, "JIT"), each run's
+task count (``numTasks`` summed over the stages of its jobs that ran;
+a stage skipped because its shuffle output already existed is not
+counted) and its process-tree CPU seconds (this process, the JVM and
+the Python workers; ``perfbench/run.py`` ``tree_cpu_s``).
 """
 
 from __future__ import annotations
@@ -39,6 +43,7 @@ def main() -> int:
                                                    get_spark,
                                                    jit_compile_ms)
     import __spark_entry__ as entry_mod
+    from perfbench.run import tree_cpu_s
 
     spark = get_spark("job-count")
     sc = spark.sparkContext
@@ -48,22 +53,31 @@ def main() -> int:
         sc.range(1).count()
         return max(sc.statusTracker().getJobIdsForGroup(None))
 
-    def run(name: str) -> tuple[int, int, int]:
+    def tasks(lo: int, hi: int) -> int:
+        tracker = sc.statusTracker()
+        stages = {s for j in range(lo + 1, hi)
+                  if (info := tracker.getJobInfo(j)) is not None
+                  for s in info.stageIds}
+        return sum(si.numTasks for s in stages
+                   if (si := tracker.getStageInfo(s)) is not None
+                   and si.numCompletedTasks + si.numFailedTasks > 0)
+
+    def run(name: str) -> str:
         lo, c0 = marker_id(), codegen_compiles(spark)
-        j0 = jit_compile_ms(spark)
+        j0, cpu0 = jit_compile_ms(spark), tree_cpu_s(os.getpid())
         df = qs[name](spark, SF_DIR)
         df.write.format("noop").mode("overwrite").save()
         c1 = codegen_compiles(spark)  # before the marker's own codegen
-        j1 = jit_compile_ms(spark)
-        return marker_id() - lo - 1, c1 - c0, j1 - j0
+        j1, cpu1 = jit_compile_ms(spark), tree_cpu_s(os.getpid())
+        hi = marker_id()
+        return (f"{hi - lo - 1} jobs, {tasks(lo, hi)} tasks, "
+                f"{cpu1 - cpu0:.2f} s CPU, {c1 - c0} compiles, "
+                f"{j1 - j0} ms JIT")
 
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()  # warm
     for name in names:
-        jobs, compiles, jit = run(name)
-        jobs2, compiles2, jit2 = run(name)
-        print(f"{name}: {jobs} jobs, {compiles} compiles, {jit} ms JIT "
-              f"(second run: {jobs2} jobs, {compiles2} compiles, "
-              f"{jit2} ms JIT)")
+        first = run(name)
+        print(f"{name}: {first} (second run: {run(name)})")
     spark.stop()
     return 0
 
