@@ -8,7 +8,7 @@ sequential IEEE-754 fold, so the results are bit-exact).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -52,6 +52,41 @@ def subspaces(vec: str | F.Column) -> F.Column:
     per (subspace index, subvector)."""
     return F.posexplode(F.array(*[F.slice(vec, 8 * j + 1, 8)
                                   for j in range(8)]))
+
+
+def sign_pack(e: str | F.Column) -> tuple[F.Column, F.Column]:
+    """The 1-bit sketch of a 64-dim vector: bit ``x >= 0`` of each
+    dimension, packed most significant first into two 32-bit words
+    ``hi`` (dims 1–32) and ``lo`` (33–64). Two words, not one: a 64-bit
+    fold would overflow the sign bit, which Java wraps and DuckDB
+    rejects."""
+    def pack(lo_idx: int) -> F.Column:
+        bits = F.transform(
+            F.slice(e, lo_idx, 32),
+            lambda x: F.when(x >= 0, F.lit(1).cast("long"))
+                       .otherwise(F.lit(0).cast("long")))
+        return F.aggregate(bits, F.lit(0).cast("long"),
+                           lambda a, b: a * 2 + b)
+
+    return pack(1).alias("hi"), pack(33).alias("lo")
+
+
+#: DuckDB twin of :func:`sign_pack`: ``(vec_id, hi, lo)`` of a relation
+#: ``v`` (``vec_id``, ``e``).
+_SQL_PACKED = """
+      SELECT vec_id,
+             list_reduce(list_prepend(CAST(0 AS BIGINT),
+               list_transform(e[1:32],
+                 x -> CASE WHEN x >= 0 THEN CAST(1 AS BIGINT)
+                      ELSE CAST(0 AS BIGINT) END)),
+               (a, b) -> a * 2 + b) AS hi,
+             list_reduce(list_prepend(CAST(0 AS BIGINT),
+               list_transform(e[33:64],
+                 x -> CASE WHEN x >= 0 THEN CAST(1 AS BIGINT)
+                      ELSE CAST(0 AS BIGINT) END)),
+               (a, b) -> a * 2 + b) AS lo
+      FROM v
+"""
 
 
 def _ordered_sum(key: str, val: str) -> F.Column:
@@ -175,3 +210,96 @@ def _sql_hrank(mi: tuple[int, int]) -> str:
 def _sql_hash_sample(mi: tuple[int, int], k: int) -> str:
     """ORDER BY/LIMIT tail of the oracle twin of :func:`_hash_sample`."""
     return f"ORDER BY {_sql_hrank(mi)}, vec_id LIMIT {k}"
+
+
+# ---------------------------------------------------------------------------
+# The IVF-PQ index kit: the trainer sample, the ADC top-k, the exact-L2
+# truth and the mean recall every IVF-PQ query and stream shares.
+# ---------------------------------------------------------------------------
+
+def ivf_train_rows(df: DataFrame) -> tuple[list, list]:
+    """One hash-order ``TakeOrdered`` collect of the ``(vec_id, e)``
+    rows of ``df`` serves both trainers of an IVF-PQ build: returns
+    the coarse sample (the first 8·K_COARSE ``(id, e)`` rows) and the
+    PQ sample as ``(j, id, subvector)`` rows of the first 8·K_CODES
+    ids — the driver-side twin of :func:`subspaces` (positional
+    slicing, so the same doubles ``F.slice`` yields)."""
+    pre = [(r["vec_id"], r["e"]) for r in
+           df.select("vec_id", "e")
+             .orderBy(F.md5(F.col("vec_id").cast("string")),
+                      F.col("vec_id"))
+             .limit(8 * max(K_COARSE, K_CODES)).collect()]
+    return (pre[:8 * K_COARSE],
+            [(j, i, list(e[8 * j:8 * j + 8]))
+             for i, e in pre[:8 * K_CODES] for j in range(8)])
+
+
+def adc_topk(codes: DataFrame, cb: DataFrame, qsub: DataFrame,
+             k: int) -> DataFrame:
+    """IVF-PQ asymmetric-distance top-``k``: each query subvector of
+    ``qsub`` (``query_id``, ``qcell``, ``j``, ``qv``) scores every
+    entry of the per-subspace codebook ``cb`` (``grp``, ``cell``,
+    ``ce``) into a broadcast lookup table, every ``codes`` row
+    (``vec_id``, ``j``, ``code``, ``cell``) in the query's cell picks
+    its entry on (cell, j, code), the 8 entries sum in j-order
+    (:func:`_ordered_sum`), and the first ``k`` per query by
+    ``(total_d2, vec_id)`` over ``query_id != vec_id`` are kept.
+    Returns ``(query_id, neighbor_id, total_d2)``."""
+    # distinct column names: codes and the LUT may descend from the
+    # same relation, so qualified references would be ambiguous
+    lut = (qsub.join(
+               F.broadcast(cb.select(F.col("grp").alias("j"),
+                                     F.col("cell").alias("lcode"),
+                                     "ce")), "j")
+               .select("query_id",
+                       F.col("qcell").alias("lcell"),
+                       F.col("j").alias("lj"),
+                       "lcode",
+                       l2sq(F.col("qv"), F.col("ce")).alias("d2")))
+    scored = (codes.join(
+                  F.broadcast(lut),
+                  (F.col("j") == F.col("lj"))
+                  & (F.col("code") == F.col("lcode"))
+                  & (F.col("cell") == F.col("lcell")))
+                   .groupBy("query_id", "vec_id")
+                   .agg(_ordered_sum("lj", "d2").alias("total_d2")))
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("total_d2").asc(), F.col("vec_id"))
+    return (scored.filter(F.col("query_id") != F.col("vec_id"))
+                  .withColumn("rn", F.row_number().over(w))
+                  .filter(F.col("rn") <= k)
+                  .select("query_id",
+                          F.col("vec_id").alias("neighbor_id"),
+                          "total_d2"))
+
+
+def l2_truth(v: DataFrame, q_ids: DataFrame, k: int) -> DataFrame:
+    """Exact-L2 ground truth: the first ``k`` vectors of ``v``
+    (``vec_id``, ``e``) by ``(L2², vec_id)`` for each query in the
+    broadcast batch ``q_ids``, the query itself excluded — a linear
+    pass over ``v`` against a constant-size query side. Returns
+    ``(query_id, neighbor_id)``."""
+    q = (v.join(F.broadcast(q_ids), "vec_id")
+          .select(F.col("vec_id").alias("query_id"),
+                  F.col("e").alias("qe")))
+    wt = Window.partitionBy("query_id").orderBy(
+        l2sq(F.col("qe"), F.col("e")).asc(), F.col("vec_id"))
+    return (v.repartition(v.sparkSession.sparkContext.defaultParallelism,
+                          "vec_id")
+             .crossJoin(F.broadcast(q))
+             .filter(F.col("vec_id") != F.col("query_id"))
+             .withColumn("rn", F.row_number().over(wt))
+             .filter(F.col("rn") <= k)
+             .select("query_id", F.col("vec_id").alias("neighbor_id")))
+
+
+def mean_recall(truth: DataFrame, approx: DataFrame) -> DataFrame:
+    """Mean over queries of recall@k: the share of each query's
+    ``truth`` (``query_id``, ``neighbor_id``) rows that ``approx``
+    also returns. One row, column ``mr``."""
+    hits = approx.select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+    j = truth.join(hits, ["query_id", "neighbor_id"], "left")
+    per_q = (j.groupBy("query_id")
+              .agg((F.sum(F.coalesce(F.col("hit"), F.lit(0)))
+                    / F.count(F.lit(1))).alias("r")))
+    return per_q.agg(F.avg("r").alias("mr"))

@@ -40,10 +40,12 @@ from ..operators.minhash import (_SQL_BANDS, _SQL_JPAIRS, _SQL_MH,
 from ..operators.text import (SQL_SHINGLES, SQL_TOKENS, shingles_col,
                               sql_ngrams, tokens_col)
 from ..operators.vectors import (K_CODES, K_COARSE, N_QUERIES, _H_CENT,
-                                 _H_CODE, _H_QUERY, _as_double_vec,
-                                 _cos_argmax, _dot, _hash_sample,
-                                 _ordered_sum, _sql_dot, _sql_hash_sample,
-                                 _sql_l2sq, assign_cells, encode_pq, l2sq,
+                                 _H_CODE, _H_QUERY, _SQL_PACKED,
+                                 _as_double_vec, _cos_argmax, _dot,
+                                 _hash_sample, _ordered_sum, _sql_dot,
+                                 _sql_hash_sample, _sql_l2sq, adc_topk,
+                                 assign_cells, encode_pq, ivf_train_rows,
+                                 l2_truth, l2sq, mean_recall, sign_pack,
                                  subspaces)
 from ..sources.tables import load_table
 from .registry import register
@@ -4135,45 +4137,28 @@ def x3_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 256-row relation once so the TakeOrdered sample and the cell
     # assignment feeding it don't replay per consumer
     cb = ckpt(sub.join(F.broadcast(cb_ids), "vec_id")
-                 .select(F.col("vec_id").alias("cid"), "j",
-                         F.col("sv").alias("cv")))
-
-    codes = (sub.join(F.broadcast(cb), "j")
-                .withColumn("d2", l2sq(F.col("sv"), F.col("cv")))
+                 .select(F.col("j").alias("grp"),
+                         F.col("vec_id").alias("cell"),
+                         F.col("sv").alias("ce")))
+    # the same projection adc_topk broadcasts (up to alias names), so
+    # the two broadcasts of the codebook are one reused exchange
+    codes = (sub.join(F.broadcast(cb.select(F.col("grp").alias("j"),
+                                            F.col("cell").alias("code"),
+                                            "ce")), "j")
+                .withColumn("d2", l2sq(F.col("sv"), F.col("ce")))
                 .groupBy("vec_id", "cell", "j")
-                .agg(F.min(F.struct("d2", "cid")).alias("b"))
+                .agg(F.min(F.struct("d2", "code")).alias("b"))
                 .select("vec_id", "cell", "j",
-                        F.col("b.cid").alias("cid")))
+                        F.col("b.code").alias("code")))
     q_ids = _hash_sample(n.select("vec_id"), N_QUERIES, _H_QUERY)
     queries = (sub.join(F.broadcast(q_ids), "vec_id")
                   .select(F.col("vec_id").alias("query_id"),
                           F.col("cell").alias("qcell"), "j",
                           F.col("sv").alias("qv")))
-    # distinct column names: codes and lut both descend from `sub`, so
-    # qualified attribute references would be ambiguous self-join refs
-    lut = (queries.join(F.broadcast(cb), "j")
-                  .select("query_id",
-                          F.col("qcell").alias("lcell"),
-                          F.col("j").alias("lj"),
-                          F.col("cid").alias("lcid"),
-                          l2sq(F.col("qv"), F.col("cv")).alias("d2")))
-    scored = (codes.join(
-                  F.broadcast(lut),
-                  (F.col("j") == F.col("lj"))
-                  & (F.col("cid") == F.col("lcid"))
-                  & (F.col("cell") == F.col("lcell")))
-                   .groupBy("query_id", "vec_id")
-                   .agg(_ordered_sum("lj", "d2")
-                       .alias("total_d2")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("total_d2").asc(), F.col("vec_id"))
-    return (scored.filter(F.col("query_id") != F.col("vec_id"))
-                  .withColumn("rn", F.row_number().over(w))
-                  .filter(F.col("rn") <= 3)
-                  .select("query_id",
-                          F.col("vec_id").alias("neighbor_id"),
-                          round_half_up(F.col("total_d2"), 6)
-                           .alias("approx_d2")))
+    return (adc_topk(codes, cb, queries, 3)
+            .select("query_id", "neighbor_id",
+                    round_half_up(F.col("total_d2"), 6)
+                     .alias("approx_d2")))
 
 
 @register(
@@ -4229,20 +4214,7 @@ def x3_ivfpq_recall_report(spark: SparkSession,
     nz = (v.withColumn("nrm", F.sqrt(_dot(F.col("e"), F.col("e"))))
            .filter(F.col("nrm") > 0))
     q_ids = _hash_sample(nz.select("vec_id"), N_QUERIES, _H_QUERY)
-    q = (v.join(F.broadcast(q_ids), "vec_id")
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("e").alias("qe")))
-
-    wt = Window.partitionBy("query_id").orderBy(
-        l2sq(F.col("qe"), F.col("e")).asc(), F.col("vec_id"))
-    truth = (v.repartition(spark.sparkContext.defaultParallelism,
-                           "vec_id")
-              .crossJoin(F.broadcast(q))
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .withColumn("rn", F.row_number().over(wt))
-              .filter(F.col("rn") <= 3)
-              .select("query_id",
-                      F.col("vec_id").alias("neighbor_id")))
+    truth = l2_truth(v, q_ids, 3)
     j = truth.join(approx, ["query_id", "neighbor_id"], "left")
     n_hit = F.sum(F.coalesce(F.col("hit"), F.lit(0)))
     return (j.groupBy("query_id")
@@ -4321,21 +4293,12 @@ def x3_ivfpq_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without re-training shorter twins.
     pq_log: list = []
     coarse_log: list = []
-    # r16 (guide §2.4): ONE TakeOrdered collect serves BOTH trainers —
-    # the grouped subspace sample is the driver-side slicing of the
-    # same hash-order prefix (identical doubles to F.slice; identical
-    # ids by the shared-id-universe property). The r15 form collected
-    # twice, the grouped one through an extra distinct+broadcast join.
-    pre = [(r["vec_id"], r["e"]) for r in
-           n.select("vec_id", "e")
-            .orderBy(F.md5(F.col("vec_id").cast("string")),
-                     F.col("vec_id"))
-            .limit(8 * max(K_COARSE, K_CODES)).collect()]
+    coarse_rows, pq_rows = ivf_train_rows(n)
     coarse = kmeans_fit_assign(n, "vec_id", "e",
                                k=K_COARSE, n_iter=3,
                                train_sample=8 * K_COARSE,
                                inertia_log=coarse_log,
-                               sample_rows=pre[:8 * K_COARSE])
+                               sample_rows=coarse_rows)
     assigned = (n.join(coarse.select(F.col("id").alias("vec_id"),
                                      "cell"), "vec_id")
                  .select("vec_id", "e", "cell"))
@@ -4348,9 +4311,7 @@ def x3_ivfpq_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc3, cb = kmeans_fit_assign_grouped(
         sub, "j", "vec_id", "sv", k=K_CODES, n_iter=3,
         train_sample=8 * K_CODES, inertia_log=pq_log,
-        sample_rows=[(j, i, list(ev[8 * j:8 * j + 8]))
-                     for i, ev in pre[:8 * K_CODES]
-                     for j in range(8)])
+        sample_rows=pq_rows)
     codes = (enc3.select(F.col("id").alias("vec_id"),
                          F.col("grp").alias("j"),
                          F.col("cell").alias("code"))
@@ -4361,57 +4322,11 @@ def x3_ivfpq_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .select(F.col("vec_id").alias("query_id"),
                           F.col("cell").alias("qcell"), "j",
                           F.col("sv").alias("qv")))
-    lut = (queries.join(
-               F.broadcast(cb.select(F.col("grp").alias("j"),
-                                     F.col("cell").alias("lcode"),
-                                     "ce")), "j")
-                  .select("query_id",
-                          F.col("qcell").alias("lcell"),
-                          F.col("j").alias("lj"),
-                          "lcode",
-                          l2sq(F.col("qv"), F.col("ce")).alias("d2")))
-    scored = (codes.join(
-                  F.broadcast(lut),
-                  (F.col("j") == F.col("lj"))
-                  & (F.col("code") == F.col("lcode"))
-                  & (F.col("cell") == F.col("lcell")))
-                   .groupBy("query_id", "vec_id")
-                   .agg(_ordered_sum("lj", "d2")
-                       .alias("total_d2")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("total_d2").asc(), F.col("vec_id"))
-    approx = (scored.filter(F.col("query_id") != F.col("vec_id"))
-                    .withColumn("rn", F.row_number().over(w))
-                    .filter(F.col("rn") <= 3)
-                    .select("query_id",
-                            F.col("vec_id").alias("neighbor_id"),
-                            F.lit(1).alias("hit")))
-
+    approx = adc_topk(codes, cb, queries, 3)
     # exact ground truth over the SAME fixed query batch (linear:
     # N_QUERIES × N, constant broadcast query side)
-    q = (v.join(F.broadcast(q_ids), "vec_id")
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("e").alias("qe")))
-    wt = Window.partitionBy("query_id").orderBy(
-        l2sq(F.col("qe"), F.col("e")).asc(), F.col("vec_id"))
-    truth = (v.repartition(spark.sparkContext.defaultParallelism,
-                           "vec_id")
-              .crossJoin(F.broadcast(q))
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .withColumn("rn", F.row_number().over(wt))
-              .filter(F.col("rn") <= 3)
-              .select("query_id",
-                      F.col("vec_id").alias("neighbor_id")))
-    medoid = (x3_ivfpq_topk(spark, sf_dir)
-              .select("query_id", "neighbor_id",
-                      F.lit(1).alias("hit")))
-
-    def mean_recall(approx_df):
-        j = truth.join(approx_df, ["query_id", "neighbor_id"], "left")
-        per_q = (j.groupBy("query_id")
-                  .agg((F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-                        / F.count(F.lit(1))).alias("r")))
-        return per_q.agg(F.avg("r").alias("mr"))
+    truth = l2_truth(v, q_ids, 3)
+    medoid = x3_ivfpq_topk(spark, sf_dir)
 
     # 1-row verdict aggregates; cross joins are bounded by contract
     n_total = n.agg(F.count(F.lit(1)).alias("n_vectors"))
@@ -4423,8 +4338,8 @@ def x3_ivfpq_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     i1 = pq_log[0].select(F.col("inertia").alias("inertia1"))
     c3 = coarse_log[-1].select(F.col("inertia").alias("cinertia3"))
     c1 = coarse_log[0].select(F.col("inertia").alias("cinertia1"))
-    rl = mean_recall(approx).withColumnRenamed("mr", "r_learned")
-    rm = mean_recall(medoid).withColumnRenamed("mr", "r_medoid")
+    rl = mean_recall(truth, approx).withColumnRenamed("mr", "r_learned")
+    rm = mean_recall(truth, medoid).withColumnRenamed("mr", "r_medoid")
     return (n_total.crossJoin(cells).crossJoin(ncodes)
             .crossJoin(i3).crossJoin(i1).crossJoin(c3).crossJoin(c1)
             .crossJoin(rl).crossJoin(rm)
@@ -4516,23 +4431,17 @@ def x3_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
           .filter(F.col("nrm") > 0))
 
     cent_log: list = []
-    # r16 (guide §2.4): one TakeOrdered collect serves the coarse
-    # trainer AND the raw-subspace PQ trainer (driver-side slicing of
-    # the same hash-order prefix — the x3_ivfpq_learned fusion); the
-    # RESIDUAL trainer keeps its own sampled collect, because its
-    # training vectors depend on the trained cells (rv = sv − cv) and
-    # its collect reads the already-checkpointed assignment, not the
-    # corpus.
-    pre = [(r["vec_id"], r["e"]) for r in
-           n.select("vec_id", "e")
-            .orderBy(F.md5(F.col("vec_id").cast("string")),
-                     F.col("vec_id"))
-            .limit(8 * max(K_COARSE, K_CODES)).collect()]
+    # one TakeOrdered collect (ivf_train_rows) serves the coarse
+    # trainer AND the raw-subspace PQ trainer; the RESIDUAL trainer
+    # keeps its own sampled collect, because its training vectors
+    # depend on the trained cells (rv = sv − cv) and its collect reads
+    # the already-checkpointed assignment, not the corpus.
+    coarse_rows, pq_rows = ivf_train_rows(n)
     coarse = kmeans_fit_assign(n, "vec_id", "e",
                                k=K_COARSE, n_iter=3,
                                train_sample=8 * K_COARSE,
                                centroids_log=cent_log,
-                               sample_rows=pre[:8 * K_COARSE])
+                               sample_rows=coarse_rows)
     centroids = cent_log[0]                      # (cell, ce) — K rows
     assigned = (n.join(coarse.select(F.col("id").alias("vec_id"),
                                      "cell", "sq_dist"), "vec_id")
@@ -4550,10 +4459,7 @@ def x3_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     enc_raw, cb_raw = kmeans_fit_assign_grouped(
         sub, "j", "vec_id", "sv", k=K_CODES, n_iter=3,
-        train_sample=8 * K_CODES,
-        sample_rows=[(j, i, list(ev[8 * j:8 * j + 8]))
-                     for i, ev in pre[:8 * K_CODES]
-                     for j in range(8)])
+        train_sample=8 * K_CODES, sample_rows=pq_rows)
     enc_res, cb_res = kmeans_fit_assign_grouped(
         rsub, "j", "vec_id", "rv", k=K_CODES, n_iter=3,
         train_sample=8 * K_CODES)
@@ -4564,39 +4470,11 @@ def x3_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q_ids = _hash_sample(n.select("vec_id"), N_QUERIES, _H_QUERY)
 
-    def topk(enc, cb, qsub):
-        """The x3_ivfpq_learned scoring plan: broadcast per-query ADC
-        LUT on (cell, j, code), explicit j-order 8-entry sum, top-3 by
-        (total_d2, vec_id)."""
-        codes = (enc.select(F.col("id").alias("vec_id"),
-                            F.col("grp").alias("j"),
-                            F.col("cell").alias("code"))
-                    .join(assigned.select("vec_id", "cell"), "vec_id"))
-        lut = (qsub.join(
-                   F.broadcast(cb.select(F.col("grp").alias("j"),
-                                         F.col("cell").alias("lcode"),
-                                         "ce")), "j")
-                   .select("query_id",
-                           F.col("qcell").alias("lcell"),
-                           F.col("j").alias("lj"),
-                           "lcode",
-                           l2sq(F.col("qv"), F.col("ce")).alias("d2")))
-        scored = (codes.join(
-                      F.broadcast(lut),
-                      (F.col("j") == F.col("lj"))
-                      & (F.col("code") == F.col("lcode"))
-                      & (F.col("cell") == F.col("lcell")))
-                       .groupBy("query_id", "vec_id")
-                       .agg(_ordered_sum("lj", "d2")
-                           .alias("total_d2")))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("total_d2").asc(), F.col("vec_id"))
-        return (scored.filter(F.col("query_id") != F.col("vec_id"))
-                      .withColumn("rn", F.row_number().over(w))
-                      .filter(F.col("rn") <= 3)
-                      .select("query_id",
-                              F.col("vec_id").alias("neighbor_id"),
-                              F.lit(1).alias("hit")))
+    def codes(enc):
+        return (enc.select(F.col("id").alias("vec_id"),
+                           F.col("grp").alias("j"),
+                           F.col("cell").alias("code"))
+                   .join(assigned.select("vec_id", "cell"), "vec_id"))
 
     qsub_raw = (sub.join(F.broadcast(q_ids), "vec_id")
                    .select(F.col("vec_id").alias("query_id"),
@@ -4606,30 +4484,10 @@ def x3_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .select(F.col("vec_id").alias("query_id"),
                             F.col("cell").alias("qcell"), "j",
                             F.col("rv").alias("qv")))
-    approx_raw = topk(enc_raw, cb_raw, qsub_raw)
-    approx_res = topk(enc_res, cb_res, qsub_res)
-
+    approx_raw = adc_topk(codes(enc_raw), cb_raw, qsub_raw, 3)
+    approx_res = adc_topk(codes(enc_res), cb_res, qsub_res, 3)
     # exact ground truth over the same fixed query batch
-    q = (v.join(F.broadcast(q_ids), "vec_id")
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("e").alias("qe")))
-    wt = Window.partitionBy("query_id").orderBy(
-        l2sq(F.col("qe"), F.col("e")).asc(), F.col("vec_id"))
-    truth = (v.repartition(spark.sparkContext.defaultParallelism,
-                           "vec_id")
-              .crossJoin(F.broadcast(q))
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .withColumn("rn", F.row_number().over(wt))
-              .filter(F.col("rn") <= 3)
-              .select("query_id",
-                      F.col("vec_id").alias("neighbor_id")))
-
-    def mean_recall(approx_df):
-        j = truth.join(approx_df, ["query_id", "neighbor_id"], "left")
-        per_q = (j.groupBy("query_id")
-                  .agg((F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-                        / F.count(F.lit(1))).alias("r")))
-        return per_q.agg(F.avg("r").alias("mr"))
+    truth = l2_truth(v, q_ids, 3)
 
     n_total = n.agg(F.count(F.lit(1)).alias("n_vectors"))
     cells = coarse.agg(
@@ -4639,8 +4497,8 @@ def x3_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
               .crossJoin(enc_res.agg(F.count(F.lit(1)).alias("n_res"))))
     res_sq = rsub.agg(F.sum(ssq(F.col("rv"))).alias("res_sq"))
     asg_sq = assigned.agg(F.sum("sq_dist").alias("asg_sq"))
-    rr = mean_recall(approx_res).withColumnRenamed("mr", "r_res")
-    rw = mean_recall(approx_raw).withColumnRenamed("mr", "r_raw")
+    rr = mean_recall(truth, approx_res).withColumnRenamed("mr", "r_res")
+    rw = mean_recall(truth, approx_raw).withColumnRenamed("mr", "r_raw")
     return (n_total.crossJoin(cells).crossJoin(ncodes)
             .crossJoin(res_sq).crossJoin(asg_sq)
             .crossJoin(rr).crossJoin(rw)
@@ -4729,45 +4587,26 @@ def x3_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ``encode_df`` (cell assignment via broadcast centroids so the
         encode set need not equal the training set). Returns
         (cells, codes, centroids, cb): cells = (vec_id, cell),
-        codes = (vec_id, j, code).
-
-        r16 (guide §2.4): ONE TakeOrdered collect of the hash-order
-        sample prefix serves BOTH trainers — the coarse sample is its
-        first 8·K_COARSE (id, e) rows verbatim, and the grouped
-        subspace sample is the driver-side slicing of its first
-        8·K_CODES ids (every id carries one subvector per subspace,
-        and ``F.slice(e, 8j+1, 8)`` is pure positional slicing, so
-        the Python slices are the identical doubles). The r15 form
-        collected twice, each a full scan + TakeOrdered over the
-        train relation (and the grouped one paid an extra
-        distinct + broadcast join)."""
-        n_pre = 8 * max(K_COARSE, K_CODES)
-        pre = [(r["vec_id"], r["e"]) for r in
-               train_df.select("vec_id", "e")
-                       .orderBy(F.md5(F.col("vec_id").cast("string")),
-                                F.col("vec_id"))
-                       .limit(n_pre).collect()]
+        codes = (vec_id, j, code)."""
+        coarse_rows, pq_rows = ivf_train_rows(train_df)
         cent_log: list = []
         kmeans_fit_assign(train_df, "vec_id", "e",
                           k=K_COARSE, n_iter=3,
                           train_sample=8 * K_COARSE,
                           centroids_log=cent_log,
                           assign=False,
-                          sample_rows=pre[:8 * K_COARSE])
+                          sample_rows=coarse_rows)
         cents = cent_log[0]
         cells = assign_cells(encode_df, cents)
         # assign=False (r15): both trainers' own full assignments were
         # discarded here — the encode set is assigned through
         # assign_cells/encode_pq against the frozen tables instead, so
         # the trainers now stop at the trained centroids/codebooks.
-        sub_rows = [(j, i, list(e[8 * j:8 * j + 8]))
-                    for i, e in pre[:8 * K_CODES]
-                    for j in range(8)]
         _enc, cb = kmeans_fit_assign_grouped(
             train_df.select("vec_id", subspaces("e").alias("j", "sv")),
             "j", "vec_id", "sv",
             k=K_CODES, n_iter=3, train_sample=8 * K_CODES,
-            assign=False, sample_rows=sub_rows)
+            assign=False, sample_rows=pq_rows)
         codes = encode_pq(encode_df, cb)
         return cells, codes, cents, cb
 
@@ -4788,71 +4627,26 @@ def x3_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("sv").alias("qv")))
 
     def topk(cells, codes, cb_used):
-        """x3_ivfpq_learned scoring shape: per-query ADC LUT over the
-        index's own codebook, candidates restricted to the query's
-        cell, explicit j-order 8-entry sum, top-3 by (d2, vec_id)."""
+        """Candidates restricted to the query's cell in ``cells``."""
         qcell = (qsub.select("query_id").distinct()
-                     .join(cells.withColumnRenamed("vec_id",
-                                                   "query_id"),
+                     .join(cells.select(F.col("vec_id").alias("query_id"),
+                                        F.col("cell").alias("qcell")),
                            "query_id"))
-        lut = (qsub.join(F.broadcast(qcell), "query_id")
-                   .join(F.broadcast(
-                       cb_used.select(F.col("grp").alias("j"),
-                                      F.col("cell").alias("lcode"),
-                                      "ce")), "j")
-                   .select("query_id",
-                           F.col("cell").alias("lcell"),
-                           F.col("j").alias("lj"), "lcode",
-                           l2sq(F.col("qv"), F.col("ce")).alias("d2")))
-        full = codes.join(cells, "vec_id")
-        scored = (full.join(
-                      F.broadcast(lut),
-                      (F.col("j") == F.col("lj"))
-                      & (F.col("code") == F.col("lcode"))
-                      & (F.col("cell") == F.col("lcell")))
-                      .groupBy("query_id", "vec_id")
-                      .agg(_ordered_sum("lj", "d2")
-                          .alias("total_d2")))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("total_d2").asc(), F.col("vec_id"))
-        return (scored.filter(F.col("query_id") != F.col("vec_id"))
-                      .withColumn("rn", F.row_number().over(w))
-                      .filter(F.col("rn") <= 3)
-                      .select("query_id",
-                              F.col("vec_id").alias("neighbor_id"),
-                              F.lit(1).alias("hit")))
+        return adc_topk(codes.join(cells, "vec_id"), cb_used,
+                        qsub.join(F.broadcast(qcell), "query_id"), 3)
 
     approx_m = topk(m_cells, m_codes, cb)
     approx_s = topk(s_cells, s_codes, s_cb)
-
-    q = (v.join(F.broadcast(q_ids), "vec_id")
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("e").alias("qe")))
-    wt = Window.partitionBy("query_id").orderBy(
-        l2sq(F.col("qe"), F.col("e")).asc(), F.col("vec_id"))
-    truth = (v.repartition(spark.sparkContext.defaultParallelism,
-                           "vec_id")
-              .crossJoin(F.broadcast(q))
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .withColumn("rn", F.row_number().over(wt))
-              .filter(F.col("rn") <= 3)
-              .select("query_id",
-                      F.col("vec_id").alias("neighbor_id")))
-
-    def mean_recall(approx_df):
-        j = truth.join(approx_df, ["query_id", "neighbor_id"], "left")
-        per_q = (j.groupBy("query_id")
-                  .agg((F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-                        / F.count(F.lit(1))).alias("r")))
-        return per_q.agg(F.avg("r").alias("mr"))
+    truth = l2_truth(v, q_ids, 3)
 
     n_total = n.agg(F.count(F.lit(1)).alias("n_vectors"))
     n_arr = arr.agg(F.count(F.lit(1)).alias("n_arrivals"))
     mc = m_cells.agg(F.count(F.lit(1)).alias("n_cells_m"),
                      F.count_distinct("vec_id").alias("n_ids_m"))
     mk = m_codes.agg(F.count(F.lit(1)).alias("n_codes_m"))
-    rm = mean_recall(approx_m).withColumnRenamed("mr", "r_merged")
-    rs = mean_recall(approx_s).withColumnRenamed("mr", "r_scratch")
+    rm = mean_recall(truth, approx_m).withColumnRenamed("mr", "r_merged")
+    rs = mean_recall(truth, approx_s).withColumnRenamed("mr",
+                                                        "r_scratch")
     return (n_total.crossJoin(n_arr).crossJoin(mc).crossJoin(mk)
             .crossJoin(rm).crossJoin(rs)
             .select(
@@ -4989,20 +4783,7 @@ def x4_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH v AS (
       SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
     ),
-    packed AS (
-      SELECT vec_id,
-             list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(e[1:32],
-                 x -> CASE WHEN x >= 0 THEN CAST(1 AS BIGINT)
-                      ELSE CAST(0 AS BIGINT) END)),
-               (a, b) -> a * 2 + b) AS hi,
-             list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(e[33:64],
-                 x -> CASE WHEN x >= 0 THEN CAST(1 AS BIGINT)
-                      ELSE CAST(0 AS BIGINT) END)),
-               (a, b) -> a * 2 + b) AS lo
-      FROM v
-    ),
+    packed AS ({_SQL_PACKED}),
     q AS (
       SELECT vec_id AS query_id, hi AS qhi, lo AS qlo FROM packed
       WHERE vec_id IN (
@@ -5054,16 +4835,7 @@ def x3_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     v = e.select("vec_id", _as_double_vec("embedding").alias("e"))
 
-    def pack(lo_idx: int) -> F.Column:
-        bits = F.transform(
-            F.slice("e", lo_idx, 32),
-            lambda x: F.when(x >= 0, F.lit(1).cast("long"))
-                       .otherwise(F.lit(0).cast("long")))
-        return F.aggregate(bits, F.lit(0).cast("long"),
-                           lambda a, b: a * 2 + b)
-
-    packed = v.select("vec_id", pack(1).alias("hi"),
-                      pack(33).alias("lo"))
+    packed = v.select("vec_id", *sign_pack("e"))
     q_ids = _hash_sample(v.select("vec_id"), N_QUERIES, _H_QUERY)
     q = (packed.join(F.broadcast(q_ids), "vec_id")
                .select(F.col("vec_id").alias("query_id"),
@@ -5096,22 +4868,6 @@ def x3_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_BAND = """((CASE WHEN j < 4 THEN hi ELSE lo END)
           // (CASE j % 4 WHEN 0 THEN 16777216 WHEN 1 THEN 65536
               WHEN 2 THEN 256 ELSE 1 END)) % 256"""
-
-_SQL_PACKED = """
-      SELECT vec_id,
-             list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(e[1:32],
-                 x -> CASE WHEN x >= 0 THEN CAST(1 AS BIGINT)
-                      ELSE CAST(0 AS BIGINT) END)),
-               (a, b) -> a * 2 + b) AS hi,
-             list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(e[33:64],
-                 x -> CASE WHEN x >= 0 THEN CAST(1 AS BIGINT)
-                      ELSE CAST(0 AS BIGINT) END)),
-               (a, b) -> a * 2 + b) AS lo
-      FROM v
-"""
-
 
 @register(
     "x3_hamming_banded",
@@ -5212,16 +4968,7 @@ def x3_hamming_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     v = e.select("vec_id", _as_double_vec("embedding").alias("e"))
 
-    def pack(lo_idx: int) -> F.Column:
-        bits = F.transform(
-            F.slice("e", lo_idx, 32),
-            lambda x: F.when(x >= 0, F.lit(1).cast("long"))
-                       .otherwise(F.lit(0).cast("long")))
-        return F.aggregate(bits, F.lit(0).cast("long"),
-                           lambda a, b: a * 2 + b)
-
-    packed = v.select("vec_id", pack(1).alias("hi"),
-                      pack(33).alias("lo"))
+    packed = v.select("vec_id", *sign_pack("e"))
     band_exprs = [F.expr(f"({w} div {d}) % 256")
                   for w in ("hi", "lo")
                   for d in (16777216, 65536, 256, 1)]
@@ -5439,16 +5186,7 @@ def x3_cascade_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     v = e.select("vec_id", _as_double_vec("embedding").alias("e"))
 
-    def pack(lo_idx: int) -> F.Column:
-        bits = F.transform(
-            F.slice("e", lo_idx, 32),
-            lambda x: F.when(x >= 0, F.lit(1).cast("long"))
-                       .otherwise(F.lit(0).cast("long")))
-        return F.aggregate(bits, F.lit(0).cast("long"),
-                           lambda a, b: a * 2 + b)
-
-    packed = v.select("vec_id", pack(1).alias("hi"),
-                      pack(33).alias("lo"))
+    packed = v.select("vec_id", *sign_pack("e"))
     band_exprs = [F.expr(f"({w} div {d}) % 256")
                   for w in ("hi", "lo")
                   for d in (16777216, 65536, 256, 1)]
@@ -5688,16 +5426,7 @@ def x3_hamming_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     v = e.select("vec_id", _as_double_vec("embedding").alias("e"))
 
-    def pack(lo_idx: int) -> F.Column:
-        bits = F.transform(
-            F.slice("e", lo_idx, 32),
-            lambda x: F.when(x >= 0, F.lit(1).cast("long"))
-                       .otherwise(F.lit(0).cast("long")))
-        return F.aggregate(bits, F.lit(0).cast("long"),
-                           lambda a, b: a * 2 + b)
-
-    packed = v.select("vec_id", pack(1).alias("hi"),
-                      pack(33).alias("lo"))
+    packed = v.select("vec_id", *sign_pack("e"))
     band_exprs = [F.expr(f"({w} div {d}) % 256")
                   for w in ("hi", "lo")
                   for d in (16777216, 65536, 256, 1)]

@@ -91,7 +91,7 @@ from ..operators.minhash import (_SQL_BANDS, _SQL_JPAIRS, _SQL_MH,
 from ..operators.text import SQL_TOKENS, shingles_col, tokens_col
 from ..operators.vectors import (K_CODES, K_COARSE, _as_double_vec, _dot,
                                  _sql_dot, assign_cells, encode_pq,
-                                 subspaces)
+                                 ivf_train_rows, subspaces)
 from ..plans.registry import query_fns, register
 from ..tmpdirs import mkdtemp as _mkdtemp
 
@@ -3805,27 +3805,17 @@ def x3_ivf_ingest_stream(spark: SparkSession,
     # here — arrivals and warehouse are assigned through the frozen
     # assign_cells/encode_pq plans below; the trained (and already
     # checkpointed) centroid/codebook tables are all this path needs.
-    # r16 (guide §2.4): one TakeOrdered collect serves both trainers
-    # (the x3_ivf_ingest fusion — the grouped subspace sample is the
-    # driver-side slicing of the same hash-order prefix)
-    pre = [(r["vec_id"], r["e"]) for r in
-           wh.select("vec_id", "e")
-             .orderBy(F.md5(F.col("vec_id").cast("string")),
-                      F.col("vec_id"))
-             .limit(8 * max(K_COARSE, K_CODES)).collect()]
+    coarse_rows, pq_rows = ivf_train_rows(wh)
     kmeans_fit_assign(wh, "vec_id", "e", k=K_COARSE, n_iter=3,
                       train_sample=8 * K_COARSE,
                       centroids_log=cent_log, assign=False,
-                      sample_rows=pre[:8 * K_COARSE])
+                      sample_rows=coarse_rows)
     cents = cent_log[0]
     _enc, cb = kmeans_fit_assign_grouped(
         wh.select("vec_id", subspaces("e").alias("j", "sv")),
         "j", "vec_id", "sv",
         k=K_CODES, n_iter=3, train_sample=8 * K_CODES,
-        assign=False,
-        sample_rows=[(j, i, list(ev[8 * j:8 * j + 8]))
-                     for i, ev in pre[:8 * K_CODES]
-                     for j in range(8)])
+        assign=False, sample_rows=pq_rows)
 
     # --- the stored index: warehouse encoded once, landed durable
     assign_cells(wh, cents).write.parquet(cells_dir)
@@ -4463,57 +4453,81 @@ def x2_band_compaction_stream(spark: SparkSession,
 # distribution).
 # ---------------------------------------------------------------------------
 
-def _t40_make_batch(spark: SparkSession, out_dir: str):
-    """t40's foreachBatch callback, durable-state form (r12; retention
-    r13; tiered compaction r14): state family ``bands`` (the merged
-    (count, min, max) band monoid — latest-only, vacuumed to the last
-    ``_MONOID_KEEP`` versions, ordinal riding in-state as ``_ord``),
-    results family ``res``, and the banded value store as per-batch
-    plain-overwrite trees (family ``store``) PARTITIONED BY THE BAND
-    GROUP ``_qbg`` (``_qb`` is a sorted data column inside each group
-    file — dir pruning is by group, in-group pruning is parquet
-    row-group stats; per-band dirs were the r13 small-files
-    pathology) and consolidated by the two-tier trigger compaction
-    (runs family ``storer``, snapshots family ``storec``). A
-    re-delivered batch overwrites exactly its own tree (file-source
-    replay is byte-identical); the quantile read resolves through
-    ``_store_live_trees`` (≤ ``_STORE_LIVE_BOUND`` relations
-    regardless of stream lifetime). Module-level for the durability
-    drills."""
-    from ..functions.scalars import round_half_up
-    from ..operators.staircase import (double_value_bucket,
-                                       state_exact_quantiles)
-    sroot = f"{out_dir}/state"
-    # events.value ∈ [0, ~500): fixed-width bands at scale 2.0 →
-    # ≤ ~1000 bands, each 0.5 wide — bounded by the value domain
-    bucket = double_value_bucket(F.col("value"), 2.0)
+def _quantile_monitor(run_threshold, snap_threshold):
+    """The exact-quantile monitor's foreachBatch callback factory
+    (t40, and t47 with lowered compaction thresholds), durable-state
+    form: state family ``bands`` (the merged (count, min, max) band
+    monoid — latest-only, vacuumed to the last ``_MONOID_KEEP``
+    versions, ordinal riding in-state as ``_ord``), results family
+    ``res``, and the banded value store as per-batch plain-overwrite
+    trees (family ``store``) PARTITIONED BY THE BAND GROUP ``_qbg``
+    (``_qb`` is a sorted data column inside each group file — dir
+    pruning is by group, in-group pruning is parquet row-group stats)
+    consolidated by the two-tier trigger compaction (runs family
+    ``storer``, snapshots family ``storec``) at ``run_threshold`` /
+    ``snap_threshold`` (``None``: the module constants, read at call
+    time so drills can lower them). A re-delivered batch overwrites
+    exactly its own tree (file-source replay is byte-identical); the
+    quantile read resolves through ``_store_live_trees``.
 
-    def monitor_batch(batch_df: DataFrame, batch_id: int) -> None:
-        banded = _land_band_store(spark, batch_df, bucket,
-                                  _sdir(sroot, "store", batch_id))
-        if banded is None:
-            return
-        prev, ordinal = _monoid_prev(spark, sroot, "bands", batch_id)
-        _merge_band_stats(banded, prev, ordinal,
-                          _sdir(sroot, "bands", batch_id))
-        stats = (spark.read.parquet(_sdir(sroot, "bands", batch_id))
-                      .drop("_ord"))
-        q = state_exact_quantiles(
-            stats, _band_store_reader(spark, sroot, batch_id, True),
-            "value", [0.5, 0.95])
-        (q.select(F.lit(ordinal).cast("long").alias("batch_id"),
-                  F.col("n").alias("n_events"),
-                  round_half_up(F.col("q0"), 6).alias("p50_value"),
-                  round_half_up(F.col("q1"), 6).alias("p95_value"))
-          .write.mode("overwrite").parquet(
-              _sdir(sroot, "res", batch_id)))
-        # retention LAST (after every read/write of this batch): a
-        # crash here leaves only superseded dirs behind, harmless
-        _maybe_compact_store(spark, sroot, "store", "storec",
-                             batch_id)
-        _vacuum_superseded(sroot, "bands", batch_id)
+    Compaction runs BEFORE the answer, and each ``res`` row carries
+    the post-maintenance facts ``fired_run`` / ``fired_snapshot``
+    (from the batch's own committed run/snapshot version, so a
+    re-delivered batch whose first attempt fired reads the same TRUE
+    through the compaction short-circuit) and ``live_trees`` (the
+    read fan-in); the answer is the same in either order — a
+    snapshot at this version plus the batch's own increment is
+    exactly the inclusive prefix."""
+    def make_batch(spark: SparkSession, out_dir: str):
+        from ..functions.scalars import round_half_up
+        from ..operators.staircase import (double_value_bucket,
+                                           state_exact_quantiles)
+        sroot = f"{out_dir}/state"
+        # events.value ∈ [0, ~500): fixed-width bands at scale 2.0 →
+        # ≤ ~1000 bands, each 0.5 wide — bounded by the value domain
+        bucket = double_value_bucket(F.col("value"), 2.0)
 
-    return monitor_batch
+        def monitor_batch(batch_df: DataFrame, batch_id: int) -> None:
+            banded = _land_band_store(spark, batch_df, bucket,
+                                      _sdir(sroot, "store", batch_id))
+            if banded is None:
+                return
+            prev, ordinal = _monoid_prev(spark, sroot, "bands", batch_id)
+            _merge_band_stats(banded, prev, ordinal,
+                              _sdir(sroot, "bands", batch_id))
+            _maybe_compact_store(spark, sroot, "store", "storec",
+                                 batch_id, run_threshold=run_threshold,
+                                 snap_threshold=snap_threshold)
+            fired_run = _is_committed(_sdir(sroot, "storer", batch_id))
+            fired_snap = _is_committed(_sdir(sroot, "storec", batch_id))
+            live = len(_store_live_trees(sroot, "store", "storec",
+                                         batch_id, inclusive=True))
+            stats = (spark.read.parquet(_sdir(sroot, "bands", batch_id))
+                          .drop("_ord"))
+            q = state_exact_quantiles(
+                stats, _band_store_reader(spark, sroot, batch_id, True),
+                "value", [0.5, 0.95])
+            (q.select(F.lit(ordinal).cast("long").alias("batch_id"),
+                      F.col("n").alias("n_events"),
+                      round_half_up(F.col("q0"), 6).alias("p50_value"),
+                      round_half_up(F.col("q1"), 6).alias("p95_value"),
+                      F.lit(bool(fired_run)).alias("fired_run"),
+                      F.lit(bool(fired_snap)).alias("fired_snapshot"),
+                      F.lit(int(live)).cast("long").alias("live_trees"))
+              .write.mode("overwrite").parquet(
+                  _sdir(sroot, "res", batch_id)))
+            # vacuum LAST (after every read/write of this batch): a
+            # crash here leaves only superseded dirs behind, harmless
+            _vacuum_superseded(sroot, "bands", batch_id)
+
+        return monitor_batch
+
+    return make_batch
+
+
+#: t40's callback (module-level for the durability drills): the
+#: production compaction thresholds.
+_t40_make_batch = _quantile_monitor(None, None)
 
 
 @register(
@@ -4978,60 +4992,9 @@ def x2_triggered_compaction_stream(spark: SparkSession,
 _T47_RUN_T, _T47_SNAP_T = 3, 2
 
 
-def _t47_make_batch(spark: SparkSession, out_dir: str):
-    """t47's foreachBatch callback: t40's exact-quantile monitor body
-    on the same durable-state kit, with the two-tier compaction
-    thresholds lowered to ``(_T47_RUN_T, _T47_SNAP_T)`` (the kit
-    takes them per call) and the maintenance facts graded — each
-    ``res`` row carries ``fired_run`` / ``fired_snapshot`` (derived
-    from the batch's own committed run/snapshot version, so a
-    re-delivered batch whose first attempt fired reads the same TRUE
-    through the compaction short-circuit) and ``live_trees`` (the
-    post-retention read fan-in, straight from
-    ``_store_live_trees``). Retention runs BEFORE the quantile
-    answer here (t40 defers it) because the graded columns are the
-    post-maintenance facts; the answer is unchanged either way — a
-    snapshot at this version plus the batch's own increment is
-    exactly the inclusive prefix. Module-level for the durability
-    drills."""
-    from ..functions.scalars import round_half_up
-    from ..operators.staircase import (double_value_bucket,
-                                       state_exact_quantiles)
-    sroot = f"{out_dir}/state"
-    bucket = double_value_bucket(F.col("value"), 2.0)
-
-    def tiered_batch(batch_df: DataFrame, batch_id: int) -> None:
-        banded = _land_band_store(spark, batch_df, bucket,
-                                  _sdir(sroot, "store", batch_id))
-        if banded is None:
-            return
-        prev, ordinal = _monoid_prev(spark, sroot, "bands", batch_id)
-        _merge_band_stats(banded, prev, ordinal,
-                          _sdir(sroot, "bands", batch_id))
-        _maybe_compact_store(spark, sroot, "store", "storec",
-                             batch_id, run_threshold=_T47_RUN_T,
-                             snap_threshold=_T47_SNAP_T)
-        fired_run = _is_committed(_sdir(sroot, "storer", batch_id))
-        fired_snap = _is_committed(_sdir(sroot, "storec", batch_id))
-        live = len(_store_live_trees(sroot, "store", "storec",
-                                     batch_id, inclusive=True))
-        stats = (spark.read.parquet(_sdir(sroot, "bands", batch_id))
-                      .drop("_ord"))
-        q = state_exact_quantiles(
-            stats, _band_store_reader(spark, sroot, batch_id, True),
-            "value", [0.5, 0.95])
-        (q.select(F.lit(ordinal).cast("long").alias("batch_id"),
-                  F.col("n").alias("n_events"),
-                  round_half_up(F.col("q0"), 6).alias("p50_value"),
-                  round_half_up(F.col("q1"), 6).alias("p95_value"),
-                  F.lit(bool(fired_run)).alias("fired_run"),
-                  F.lit(bool(fired_snap)).alias("fired_snapshot"),
-                  F.lit(int(live)).cast("long").alias("live_trees"))
-          .write.mode("overwrite").parquet(
-              _sdir(sroot, "res", batch_id)))
-        _vacuum_superseded(sroot, "bands", batch_id)
-
-    return tiered_batch
+#: t47's callback: t40's monitor with the thresholds lowered, the
+#: maintenance facts graded (module-level for the durability drills).
+_t47_make_batch = _quantile_monitor(_T47_RUN_T, _T47_SNAP_T)
 
 
 @register(

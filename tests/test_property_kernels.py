@@ -604,8 +604,35 @@ def _twin_minhash_bands(spark):
     return got, [tuple(r) for r in want]
 
 
+def _twin_sign_pack(spark):
+    import random
+
+    import duckdb
+    import pandas as pd
+
+    from stock_data_warehouse_spark.operators.vectors import (
+        _SQL_PACKED, sign_pack,
+    )
+
+    rng = random.Random(20261020)
+    pool = [0.0, -0.0, 1e-300, -1e-300, 1.0, -1.0]
+    rows = [(i, [rng.choice(pool) if rng.random() < 0.3
+                 else rng.uniform(-1.0, 1.0) for _ in range(64)])
+            for i in range(40)]
+    rows += [(40, [0.0] * 64), (41, [-1.0] * 64), (42, [1.0] * 64)]
+    df = spark.createDataFrame(rows, "vec_id long, e array<double>")
+    got = sorted(tuple(r) for r in
+                 df.select("vec_id", *sign_pack("e")).collect())
+    con = duckdb.connect()
+    con.register("v", pd.DataFrame(rows, columns=["vec_id", "e"]))
+    want = con.execute(
+        f"SELECT * FROM ({_SQL_PACKED}) ORDER BY vec_id").fetchall()
+    return got, [tuple(r) for r in want]
+
+
 _TWINS = {"dot": _twin_dot, "l2sq": _twin_l2sq,
-          "hash_rank": _twin_hash_rank, "minhash_bands": _twin_minhash_bands}
+          "hash_rank": _twin_hash_rank, "minhash_bands": _twin_minhash_bands,
+          "sign_pack": _twin_sign_pack}
 
 
 @pytest.mark.parametrize("kernel", sorted(_TWINS))
@@ -613,7 +640,8 @@ def test_operator_kernel_matches_duckdb_twin(spark, kernel):
     """The Column form of each moved vector/MinHash kernel in
     operators/ returns exactly what its DuckDB twin returns on the same
     rows: the sequential dot and L2² folds bit for bit, the hash-rank
-    sample as the same ordered ids, and the portable MinHash bands as
-    the same (doc_id, band_idx, band_hash) rows."""
+    sample as the same ordered ids, the portable MinHash bands as the
+    same (doc_id, band_idx, band_hash) rows, and the sign packer as
+    the same (vec_id, hi, lo) words."""
     got, want = _TWINS[kernel](spark)
     assert got == want

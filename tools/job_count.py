@@ -23,7 +23,9 @@ each run (``session.jit_compile_ms``; session.py, "JIT"), each run's
 task count (``numTasks`` summed over the stages of its jobs that ran;
 a stage skipped because its shuffle output already existed is not
 counted) and its process-tree CPU seconds (this process, the JVM and
-the Python workers; ``perfbench/run.py`` ``tree_cpu_s``).
+the Python workers; ``perfbench/run.py`` ``tree_cpu_s``). A run whose
+tree CPU fell (a process left the tree without being reaped, taking its
+CPU out of the sum) prints ``cpu ?`` and the fall in place of a number.
 """
 
 from __future__ import annotations
@@ -70,9 +72,13 @@ def main() -> int:
         c1 = codegen_compiles(spark)  # before the marker's own codegen
         j1, cpu1 = jit_compile_ms(spark), tree_cpu_s(os.getpid())
         hi = marker_id()
-        return (f"{hi - lo - 1} jobs, {tasks(lo, hi)} tasks, "
-                f"{cpu1 - cpu0:.2f} s CPU, {c1 - c0} compiles, "
-                f"{j1 - j0} ms JIT")
+        # the tree sum loses the CPU of a process that leaves the tree
+        # unreaped (an orphaned Python worker), so it can fall
+        cpu = (f"{cpu1 - cpu0:.2f} s CPU" if cpu1 >= cpu0 else
+               f"cpu ? (tree CPU delta {cpu1 - cpu0:.2f} s: a process "
+               f"left the tree unreaped)")
+        return (f"{hi - lo - 1} jobs, {tasks(lo, hi)} tasks, {cpu}, "
+                f"{c1 - c0} compiles, {j1 - j0} ms JIT")
 
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()  # warm
     for name in names:
