@@ -146,6 +146,46 @@ def sql_round_half_up(expr: str, scale: int = 2) -> str:
             f" / {p} + 0.0)")
 
 
+def half_up_cents(c: Column) -> Column:
+    """Dollars → BIGINT cents by the class-A half-up kernel:
+    ``sign(x) * floor(|x|*100 + 0.5)`` with no divide, so the money
+    stays an exact integer through every later SUM. SQL twin:
+    :func:`sql_half_up_cents`; numpy twins: :func:`cents_half_up`,
+    :func:`cents_half_up_vec`. Same domain as :func:`round_half_up`."""
+    n = F.floor(F.abs(c) * 100.0 + F.lit(0.5))
+    return F.when(c < 0, -n).otherwise(n).cast("long")
+
+
+def sql_half_up_cents(expr: str) -> str:
+    """DuckDB twin of :func:`half_up_cents`. ``expr`` is evaluated
+    twice and is not parenthesised; callers pass a column reference
+    (``value``, ``o.o_totalprice``)."""
+    n = f"FLOOR(ABS({expr}) * 100.0 + 0.5)"
+    return f"CAST(CASE WHEN {expr} < 0 THEN -{n} ELSE {n} END AS BIGINT)"
+
+
+def cents_half_up(values) -> int:
+    """Dollars → total integer cents via the class-A half-up kernel
+    in IEEE float64 — numpy twin of :func:`half_up_cents`, so a pandas
+    state path and the DuckDB oracle agree even on a true sub-cent
+    tie (0.005 → 1 cent both sides). numpy's ``.round()`` is
+    half-EVEN (0.005 → 0 cents), which matched the oracle only while
+    every events.value was 2-dp; the 2-dp property itself and this
+    kernel's tie behaviour are pinned in
+    tests/test_property_kernels.py."""
+    return int(cents_half_up_vec(values).sum())
+
+
+def cents_half_up_vec(values):
+    """Per-row int64 cents via the same class-A half-up kernel (the
+    t27 sessionizer needs per-row values to split islands before
+    summing)."""
+    import numpy as np
+    v = np.asarray(values, dtype="float64")
+    mag = np.floor(np.abs(v) * 100.0 + 0.5)
+    return np.where(v < 0, -mag, mag).astype("int64")
+
+
 def round_money(c: Column, scale: int = 2) -> Column:
     """Tie-stable rounding for oracle parity (SURVEY.md §7 hard-part 1).
 

@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalars import md5_prefix_long, sql_round_half_up
+from ..functions.scalars import (half_up_cents, md5_prefix_long,
+                                 sql_half_up_cents, sql_round_half_up)
 from ..operators.text import SQL_TOKENS, tokens_col
 from ..sources.tables import load_table
 from .registry import register
@@ -534,10 +535,7 @@ _PROFILE_COLS = [
     ("c_nationkey", "lpad(CAST(c_nationkey AS VARCHAR), 4, '0')"),
     ("c_mktsegment", "c_mktsegment"),
     ("c_acctbal_cents",
-     "lpad(CAST(CAST(CASE WHEN c_acctbal < 0"
-     " THEN -FLOOR(ABS(c_acctbal) * 100.0 + 0.5)"
-     " ELSE FLOOR(ABS(c_acctbal) * 100.0 + 0.5) END AS BIGINT)"
-     " AS VARCHAR), 12, '0')"),
+     f"lpad(CAST({sql_half_up_cents('c_acctbal')} AS VARCHAR), 12, '0')"),
 ]
 
 
@@ -589,16 +587,13 @@ def a15_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     window partitions on the 4-entry column dim — bounded by the
     SCHEMA, not the data."""
     c = _t(spark, sf_dir, "customer")
-    cents_sql = ("CAST(CASE WHEN c_acctbal < 0"
-                 " THEN -FLOOR(ABS(c_acctbal) * 100.0 + 0.5)"
-                 " ELSE FLOOR(ABS(c_acctbal) * 100.0 + 0.5) END"
-                 " AS BIGINT)")
     long = c.select(F.expr(
         "stack(4, "
         "'c_custkey', lpad(CAST(c_custkey AS STRING), 10, '0'), "
         "'c_nationkey', lpad(CAST(c_nationkey AS STRING), 4, '0'), "
         "'c_mktsegment', c_mktsegment, "
-        f"'c_acctbal_cents', lpad(CAST({cents_sql} AS STRING), 12, '0')"
+        f"'c_acctbal_cents', lpad(CAST({sql_half_up_cents('c_acctbal')}"
+        " AS STRING), 12, '0')"
         ") AS (col, val)"))
     vc = (long.filter(F.col("val").isNotNull())
               .groupBy("col", "val").agg(F.count(F.lit(1)).alias("n")))
@@ -883,10 +878,7 @@ _QR_K = 32  # max samples kept per (event_type, day) summary
     oracle=f"""
     WITH e AS (
       SELECT event_id, event_type, CAST(ts AS DATE) AS day,
-             CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-             AS BIGINT) AS cents
+             {sql_half_up_cents('value')} AS cents
       FROM events
     ),
     dc AS (
@@ -1038,12 +1030,7 @@ def a18_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (_t(spark, sf_dir, "events")
           .select("event_id", "event_type",
                   F.to_date("ts").alias("day"),
-                  F.when(F.col("value") < 0,
-                         -F.floor(F.abs(F.col("value")) * 100.0
-                                  + F.lit(0.5)))
-                   .otherwise(F.floor(F.abs(F.col("value")) * 100.0
-                                      + F.lit(0.5)))
-                   .cast("long").alias("cents")))
+                  half_up_cents(F.col("value")).alias("cents")))
     dc = (ev.groupBy("event_type", "day")
             .agg(F.count(F.lit(1)).alias("n_d"))
             .withColumn("s_d", F.expr(f"(n_d + {_QR_K - 1}) div {_QR_K}")))
@@ -1140,10 +1127,7 @@ def a18_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH e AS (
       SELECT event_id, event_type, CAST(ts AS DATE) AS day,
              (EXTRACT(DAY FROM CAST(ts AS DATE)) - 1) // 7 AS wk,
-             CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-             AS BIGINT) AS cents
+             {sql_half_up_cents('value')} AS cents
       FROM events
     ),
     dc AS (
@@ -1299,12 +1283,7 @@ def a19_quantile_compaction(spark: SparkSession,
     ev = (_t(spark, sf_dir, "events")
           .select("event_id", "event_type",
                   F.to_date("ts").alias("day"),
-                  F.when(F.col("value") < 0,
-                         -F.floor(F.abs(F.col("value")) * 100.0
-                                  + F.lit(0.5)))
-                   .otherwise(F.floor(F.abs(F.col("value")) * 100.0
-                                      + F.lit(0.5)))
-                   .cast("long").alias("cents"))
+                  half_up_cents(F.col("value")).alias("cents"))
           .withColumn("wk", ((F.dayofmonth("day") - 1)
                              / 7).cast("long")))
     dc = (ev.groupBy("event_type", "day")
@@ -1790,11 +1769,6 @@ def a22_cumulative_distinct(spark: SparkSession,
 # F3 — first/last-touch revenue attribution
 # ---------------------------------------------------------------------------
 
-_F3_CENTS_SQL = """SUM(CAST(CASE WHEN {v} < 0
-      THEN -FLOOR(ABS({v}) * 100.0 + 0.5)
-      ELSE FLOOR(ABS({v}) * 100.0 + 0.5) END AS BIGINT))"""
-
-
 @register(
     "f3_attribution",
     oracle=f"""
@@ -1807,10 +1781,7 @@ _F3_CENTS_SQL = """SUM(CAST(CASE WHEN {v} < 0
     ),
     purch AS (
       SELECT event_id AS pid, user_id, ts AS pts,
-             CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                  AS BIGINT) AS cents
+             {sql_half_up_cents('value')} AS cents
       FROM events WHERE event_type = 'purchase'
     ),
     cand AS (
@@ -1876,12 +1847,7 @@ def f3_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                .select("user_id", F.col("ts").alias("tts"),
                        F.col("event_id").alias("tid"),
                        channel.alias("channel")))
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     purch = (ev.filter(F.col("event_type") == "purchase")
                .select(F.col("event_id").alias("pid"), "user_id",
                        F.col("ts").alias("pts"), cents.alias("cents")))
@@ -2017,15 +1983,12 @@ def a23_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a24_rfm_segments",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT c.c_mktsegment AS mktsegment, c.c_custkey AS ck,
              MAX(o.o_orderdate) AS last_d,
              COUNT(*) AS n_orders,
-             SUM(CAST(CASE WHEN o.o_totalprice < 0
-                  THEN -FLOOR(ABS(o.o_totalprice) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(o.o_totalprice) * 100.0 + 0.5) END
-                 AS BIGINT)) AS cents
+             SUM({sql_half_up_cents('o.o_totalprice')}) AS cents
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       GROUP BY c.c_mktsegment, c.c_custkey
     ),
@@ -2076,12 +2039,7 @@ def a24_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the bounded (segment x 5^3) matrix."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     base = (o.join(c, o.o_custkey == c.c_custkey)
              .groupBy(F.col("c_mktsegment").alias("mktsegment"),
                       F.col("c_custkey").alias("ck"))
@@ -2138,10 +2096,7 @@ _BENFORD_SQL = "VALUES " + ", ".join(
     "a25_benford_audit",
     oracle=f"""
     WITH cents AS (
-      SELECT CAST(CASE WHEN o_totalprice < 0
-               THEN -FLOOR(ABS(o_totalprice) * 100.0 + 0.5)
-               ELSE FLOOR(ABS(o_totalprice) * 100.0 + 0.5) END
-             AS BIGINT) AS c
+      SELECT {sql_half_up_cents('o_totalprice')} AS c
       FROM orders
     ),
     obs AS (
@@ -2195,12 +2150,7 @@ def a25_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     every window runs over the 9-row digit table."""
     o = _t(spark, sf_dir, "orders")
     from ..sources.tables import values_df
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     obs = (o.select(cents.alias("c"))
             .filter(F.col("c") > 0)
             .groupBy(F.substring(F.col("c").cast("string"), 1, 1)
@@ -2309,7 +2259,7 @@ def a26_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a27_ab_conversion_ztest",
-    oracle="""
+    oracle=f"""
     WITH per_user AS (
       SELECT user_id,
              CASE WHEN substr(md5('ab' || ':'
@@ -2347,14 +2297,8 @@ def a26_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM wide
     )
     SELECT na AS n_a, ca AS conv_a, nb AS n_b, cb AS conv_b,
-           (CASE WHEN (ca * 1.0 / na) < 0
-                 THEN -FLOOR(ABS(ca * 1.0 / na) * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(ca * 1.0 / na) * 1000000.0 + 0.5)
-            END / 1000000.0 + 0.0) AS rate_a,
-           (CASE WHEN (cb * 1.0 / nb) < 0
-                 THEN -FLOOR(ABS(cb * 1.0 / nb) * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(cb * 1.0 / nb) * 1000000.0 + 0.5)
-            END / 1000000.0 + 0.0) AS rate_b,
+           {sql_round_half_up('ca * 1.0 / na', 6)} AS rate_a,
+           {sql_round_half_up('cb * 1.0 / nb', 6)} AS rate_b,
            CAST(ROUND(CAST(z_raw AS DECIMAL(38,10)), 4) AS DOUBLE)
              AS z_score,
            COALESCE(ABS(z_raw) > 1.96, FALSE) AS significant
@@ -2524,13 +2468,10 @@ def f4_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a28_gini_concentration",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT c.c_mktsegment AS mktsegment, c.c_custkey AS ck,
-             SUM(CAST(CASE WHEN o.o_totalprice < 0
-                  THEN -FLOOR(ABS(o.o_totalprice) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(o.o_totalprice) * 100.0 + 0.5) END
-                 AS BIGINT)) AS cents
+             SUM({sql_half_up_cents('o.o_totalprice')}) AS cents
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       GROUP BY c.c_mktsegment, c.c_custkey
     ),
@@ -2581,12 +2522,7 @@ def a28_gini_concentration(spark: SparkSession,
     back broadcast as prefix offsets; one bounded final agg."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     base = (o.join(c, o.o_custkey == c.c_custkey)
              .groupBy(F.col("c_mktsegment").alias("mktsegment"),
                       F.col("c_custkey").alias("ck"))
@@ -2619,13 +2555,10 @@ def a28_gini_concentration(spark: SparkSession,
 
 @register(
     "a29_weekday_anomaly",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type, ts::DATE AS day,
-             CAST(SUM(CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                 AS BIGINT)) AS BIGINT) AS cents
+             CAST(SUM({sql_half_up_cents('value')}) AS BIGINT) AS cents
       FROM events GROUP BY event_type, ts::DATE
     ),
     wd AS (
@@ -2670,12 +2603,7 @@ def a29_weekday_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     weekdays × types) + a bounded join; raw events touch only the
     first agg."""
     ev = _t(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     daily = (ev.groupBy("event_type", F.to_date("ts").alias("day"))
                .agg(F.sum(cents).alias("cents")))
     wd = daily.withColumn("weekday", F.weekday("day").cast("int"))
@@ -2703,7 +2631,7 @@ def a29_weekday_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a30_cohort_ltv",
-    oracle="""
+    oracle=f"""
     WITH first_seen AS (
       SELECT user_id, MIN(ts::DATE) AS first_day FROM events
       GROUP BY user_id
@@ -2714,10 +2642,7 @@ def a29_weekday_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
                   AS INTEGER) AS age_week,
              CAST(FLOOR(date_part('day', f.first_day) / 7)
                   AS INTEGER) AS cohort,
-             CAST(CASE WHEN e.value < 0
-                  THEN -FLOOR(ABS(e.value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(e.value) * 100.0 + 0.5) END
-                  AS BIGINT) AS cents
+             {sql_half_up_cents('e.value')} AS cents
       FROM events e JOIN first_seen f ON e.user_id = f.user_id
       WHERE e.event_type = 'purchase'
     ),
@@ -2765,12 +2690,7 @@ def a30_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     first_seen = (ev.groupBy("user_id")
                     .agg(F.min(F.to_date("ts")).alias("first_day")))
     cohort = F.floor(F.dayofmonth("first_day") / 7).cast("int")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     flows = (ev.filter(F.col("event_type") == "purchase")
                .join(first_seen, "user_id")
                .select(cohort.alias("cohort"),
@@ -2799,7 +2719,7 @@ def a30_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a31_market_basket",
-    oracle="""
+    oracle=f"""
     WITH ot AS (
       SELECT DISTINCT l.l_orderkey AS ok, p.p_type AS item
       FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
@@ -2813,33 +2733,11 @@ def a30_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT p.item_a, p.item_b, p.n_ab,
            sa.n_item AS n_a, sb.n_item AS n_b,
-           (CASE WHEN (p.n_ab * 1.0 / n.n_baskets) < 0
-                 THEN -FLOOR(ABS(p.n_ab * 1.0 / n.n_baskets)
-                             * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(p.n_ab * 1.0 / n.n_baskets)
-                            * 1000000.0 + 0.5)
-            END / 1000000.0 + 0.0) AS support,
-           (CASE WHEN (p.n_ab * 1.0 / sa.n_item) < 0
-                 THEN -FLOOR(ABS(p.n_ab * 1.0 / sa.n_item)
-                             * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(p.n_ab * 1.0 / sa.n_item)
-                            * 1000000.0 + 0.5)
-            END / 1000000.0 + 0.0) AS conf_a_to_b,
-           (CASE WHEN (p.n_ab * 1.0 / sb.n_item) < 0
-                 THEN -FLOOR(ABS(p.n_ab * 1.0 / sb.n_item)
-                             * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(p.n_ab * 1.0 / sb.n_item)
-                            * 1000000.0 + 0.5)
-            END / 1000000.0 + 0.0) AS conf_b_to_a,
-           (CASE WHEN (p.n_ab * 1.0 * n.n_baskets
-                       / (sa.n_item * sb.n_item)) < 0
-                 THEN -FLOOR(ABS(p.n_ab * 1.0 * n.n_baskets
-                                 / (sa.n_item * sb.n_item))
-                             * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(p.n_ab * 1.0 * n.n_baskets
-                                / (sa.n_item * sb.n_item))
-                            * 1000000.0 + 0.5)
-            END / 1000000.0 + 0.0) AS lift
+           {sql_round_half_up('p.n_ab * 1.0 / n.n_baskets', 6)} AS support,
+           {sql_round_half_up('p.n_ab * 1.0 / sa.n_item', 6)} AS conf_a_to_b,
+           {sql_round_half_up('p.n_ab * 1.0 / sb.n_item', 6)} AS conf_b_to_a,
+           {sql_round_half_up('p.n_ab * 1.0 * n.n_baskets'
+                              ' / (sa.n_item * sb.n_item)', 6)} AS lift
     FROM pairs p
     JOIN sup sa ON p.item_a = sa.item
     JOIN sup sb ON p.item_b = sb.item
@@ -2982,7 +2880,7 @@ def a32_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a33_kaplan_meier",
-    oracle="""
+    oracle=f"""
     WITH per_user AS (
       SELECT user_id,
              MIN(ts::DATE) AS t0,
@@ -3028,10 +2926,7 @@ def a32_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM ev_times
     )
     SELECT t AS day_t, n AS n_at_risk, d AS n_events,
-           (CASE WHEN (d * 1.0 / n) < 0
-                 THEN -FLOOR(ABS(d * 1.0 / n) * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(d * 1.0 / n) * 1000000.0 + 0.5)
-            END / 1000000.0 + 0.0) AS hazard,
+           {sql_round_half_up('d * 1.0 / n', 6)} AS hazard,
            CASE WHEN absorbed = 1 THEN 0.0 ELSE
              CAST(ROUND(CAST(exp(CAST(lnsum AS DOUBLE))
                   AS DECIMAL(38,10)), 6) AS DOUBLE) END AS survival
@@ -3107,13 +3002,10 @@ def a33_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a34_abc_classification",
-    oracle="""
+    oracle=f"""
     WITH rev AS (
       SELECT p.p_partkey AS pk,
-             SUM(CAST(CASE WHEN l.l_extendedprice < 0
-                  THEN -FLOOR(ABS(l.l_extendedprice) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(l.l_extendedprice) * 100.0 + 0.5) END
-                 AS BIGINT)) AS cents
+             SUM({sql_half_up_cents('l.l_extendedprice')}) AS cents
       FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
       GROUP BY p.p_partkey
     ),
@@ -3134,15 +3026,9 @@ def a33_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT abc, COUNT(*) AS n_parts,
            CAST(SUM(cents) AS BIGINT) AS class_cents,
-           (CASE WHEN (SUM(cents) * 1.0
-                       / (SELECT SUM(cents) FROM rev)) < 0
-                 THEN -FLOOR(ABS(SUM(cents) * 1.0
-                       / (SELECT SUM(cents) FROM rev))
-                             * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(SUM(cents) * 1.0
-                       / (SELECT SUM(cents) FROM rev))
-                            * 1000000.0 + 0.5)
-            END / 1000000.0 + 0.0) AS revenue_share
+           {sql_round_half_up('SUM(cents) * 1.0'
+                              ' / (SELECT SUM(cents) FROM rev)', 6)}
+             AS revenue_share
     FROM classed GROUP BY abc
     """,
 )
@@ -3170,13 +3056,7 @@ def a34_abc_classification(spark: SparkSession,
     class agg."""
     li = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part")
-    cents = F.when(
-        F.col("l_extendedprice") < 0,
-        -F.floor(F.abs(F.col("l_extendedprice")) * 100.0
-                 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("l_extendedprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("l_extendedprice"))
     rev = (li.join(F.broadcast(p.select("p_partkey")),
                    li.l_partkey == p.p_partkey)
              .groupBy(F.col("p_partkey").alias("pk"))
@@ -3298,13 +3178,10 @@ def a35_reorder_intervals(spark: SparkSession,
 
 @register(
     "a36_hhi_concentration",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT c.c_mktsegment AS mktsegment, c.c_custkey AS ck,
-             SUM(CAST(CASE WHEN o.o_totalprice < 0
-                  THEN -FLOOR(ABS(o.o_totalprice) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(o.o_totalprice) * 100.0 + 0.5) END
-                 AS BIGINT)) AS cents
+             SUM({sql_half_up_cents('o.o_totalprice')}) AS cents
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       GROUP BY 1, 2
     ),
@@ -3344,12 +3221,7 @@ def a36_hhi_concentration(spark: SparkSession,
     5-row agg; no window anywhere."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     base = (o.join(c, o.o_custkey == c.c_custkey)
              .groupBy(F.col("c_mktsegment").alias("mktsegment"),
                       F.col("c_custkey").alias("ck"))
@@ -3376,13 +3248,10 @@ def a36_hhi_concentration(spark: SparkSession,
 
 @register(
     "a39_top_decile_share",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT c.c_mktsegment AS mktsegment, c.c_custkey AS ck,
-             SUM(CAST(CASE WHEN o.o_totalprice < 0
-                  THEN -FLOOR(ABS(o.o_totalprice) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(o.o_totalprice) * 100.0 + 0.5) END
-                 AS BIGINT)) AS cents
+             SUM({sql_half_up_cents('o.o_totalprice')}) AS cents
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       GROUP BY 1, 2
     ),
@@ -3425,12 +3294,7 @@ def a39_top_decile_share(spark: SparkSession,
     COUNT(*) OVER form is the semantic spec, not the plan)."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     base = (o.join(c, o.o_custkey == c.c_custkey)
              .groupBy(F.col("c_mktsegment").alias("mktsegment"),
                       F.col("c_custkey").alias("ck"))
@@ -3578,13 +3442,10 @@ def a38_retention_triangle(spark: SparkSession,
 
 @register(
     "a40_mad_dispersion",
-    oracle="""
+    oracle=f"""
     WITH ordc AS (
       SELECT c.c_mktsegment AS mktsegment,
-             CAST(CASE WHEN o.o_totalprice < 0
-                  THEN -FLOOR(ABS(o.o_totalprice) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(o.o_totalprice) * 100.0 + 0.5) END
-                 AS BIGINT) AS cents
+             {sql_half_up_cents('o.o_totalprice')} AS cents
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     ),
     med AS (
@@ -3625,12 +3486,7 @@ def a40_mad_dispersion(spark: SparkSession,
     anywhere."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     # customer joins plainly — an SF-scaling dim must not carry an
     # un-demotable broadcast hint (ADVICE r8); AQE broadcasts it at
     # small SFs on its own.
@@ -3677,10 +3533,8 @@ def a40_mad_dispersion(spark: SparkSession,
              COUNT(*) AS n_lines,
              CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_returns,
-             CAST(SUM(CAST(CASE WHEN l_extendedprice < 0
-                  THEN -FLOOR(ABS(l_extendedprice) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(l_extendedprice) * 100.0 + 0.5) END
-                 AS BIGINT)) AS BIGINT) AS revenue_cents
+             CAST(SUM({sql_half_up_cents('l_extendedprice')}) AS BIGINT)
+               AS revenue_cents
       FROM lineitem GROUP BY 1
     ),
     named AS (
@@ -3721,13 +3575,7 @@ def a41_supplier_scorecard(spark: SparkSession,
     li = _t(spark, sf_dir, "lineitem")
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation")
-    cents = F.when(
-        F.col("l_extendedprice") < 0,
-        -F.floor(F.abs(F.col("l_extendedprice")) * 100.0
-                 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("l_extendedprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("l_extendedprice"))
     per_s = (li.groupBy(F.col("l_suppkey").alias("sk"))
                .agg(F.count(F.lit(1)).alias("n_lines"),
                     F.sum(F.when(F.col("l_returnflag") == "R", 1)
@@ -3767,10 +3615,7 @@ def a41_supplier_scorecard(spark: SparkSession,
     oracle=f"""
     WITH daily AS (
       SELECT event_type, ts::DATE AS day,
-             CAST(SUM(CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                 AS BIGINT)) AS BIGINT) AS cents
+             CAST(SUM({sql_half_up_cents('value')}) AS BIGINT) AS cents
       FROM events GROUP BY 1, 2
     ),
     tot AS (
@@ -3826,12 +3671,7 @@ def a43_cusum_changepoint(spark: SparkSession,
     facts; the running window and the argmax run over the DAY-DIM
     aggregate (the a22 discipline), never raw events."""
     ev = _t(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     daily = (ev.groupBy("event_type", F.to_date("ts").alias("day"))
                .agg(F.sum(cents).alias("cents")))
     tot = (daily.groupBy("event_type")
@@ -3993,7 +3833,7 @@ def a45_basket_quantiles(spark: SparkSession,
 
 @register(
     "a46_abc_migration",
-    oracle="""
+    oracle=f"""
     WITH bounds AS (
       SELECT epoch_us(MIN(l_shipdate)) AS mn,
              epoch_us(MAX(l_shipdate)) AS mx
@@ -4003,10 +3843,8 @@ def a45_basket_quantiles(spark: SparkSession,
       SELECT CASE WHEN epoch_us(l_shipdate) <= (mn + mx) // 2
                   THEN 'H1' ELSE 'H2' END AS half,
              l_partkey AS pk,
-             CAST(SUM(CAST(CASE WHEN l_extendedprice < 0
-                  THEN -FLOOR(ABS(l_extendedprice) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(l_extendedprice) * 100.0 + 0.5) END
-                 AS BIGINT)) AS BIGINT) AS cents
+             CAST(SUM({sql_half_up_cents('l_extendedprice')}) AS BIGINT)
+               AS cents
       FROM lineitem, bounds
       GROUP BY 1, 2
     ),
@@ -4056,13 +3894,7 @@ def a46_abc_migration(spark: SparkSession,
     li = _t(spark, sf_dir, "lineitem")
     sd_us = F.unix_micros(F.col("l_shipdate").cast("timestamp"))
     b = li.agg(F.min(sd_us).alias("mn"), F.max(sd_us).alias("mx"))
-    cents = F.when(
-        F.col("l_extendedprice") < 0,
-        -F.floor(F.abs(F.col("l_extendedprice")) * 100.0
-                 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("l_extendedprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("l_extendedprice"))
     half = F.when(
         sd_us <= F.expr("(mn + mx) div 2"), "H1").otherwise("H2")
     rev = (li.crossJoin(F.broadcast(b))
@@ -4108,10 +3940,7 @@ def a46_abc_migration(spark: SparkSession,
     oracle=f"""
     WITH daily AS (
       SELECT event_type, ts::DATE AS day,
-             CAST(SUM(CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                 AS BIGINT)) AS BIGINT) AS cents
+             CAST(SUM({sql_half_up_cents('value')}) AS BIGINT) AS cents
       FROM events GROUP BY 1, 2
     ),
     idx AS (
@@ -4163,12 +3992,7 @@ def a47_trend_regression(spark: SparkSession,
     (type × day) agg → day-index rank over the day dim → one 5-row
     agg."""
     ev = _t(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     daily = (ev.groupBy("event_type", F.to_date("ts").alias("day"))
                .agg(F.sum(cents).alias("cents")))
     wd = Window.partitionBy("event_type").orderBy("day")
@@ -4267,14 +4091,11 @@ def a48_fulfillment_lag(spark: SparkSession,
 
 @register(
     "a49_repeat_purchase_audit",
-    oracle="""
+    oracle=f"""
     WITH j AS (
       SELECT o.o_custkey AS ck, l.l_partkey AS pk,
              o.o_orderkey AS ok, o.o_orderdate AS d,
-             CAST(CASE WHEN l.l_extendedprice < 0
-                  THEN -FLOOR(ABS(l.l_extendedprice) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(l.l_extendedprice) * 100.0 + 0.5)
-             END AS BIGINT) AS cents
+             {sql_half_up_cents('l.l_extendedprice')} AS cents
       FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
     )
     SELECT CAST(ck AS BIGINT) AS custkey,
@@ -4307,13 +4128,7 @@ def a49_repeat_purchase_audit(spark: SparkSession,
     sides)."""
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
-    cents = F.when(
-        F.col("l_extendedprice") < 0,
-        -F.floor(F.abs(F.col("l_extendedprice")) * 100.0
-                 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("l_extendedprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("l_extendedprice"))
     j = (o.join(li, o.o_orderkey == li.l_orderkey)
           .select(F.col("o_custkey").alias("ck"),
                   F.col("l_partkey").alias("pk"),
@@ -4419,10 +4234,7 @@ def a50_key_gap_audit(spark: SparkSession,
     oracle=f"""
     WITH daily AS (
       SELECT event_type, ts::DATE AS day,
-             CAST(SUM(CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                 AS BIGINT)) AS BIGINT) AS cents
+             CAST(SUM({sql_half_up_cents('value')}) AS BIGINT) AS cents
       FROM events GROUP BY 1, 2
     ),
     flagged AS (
@@ -4458,12 +4270,7 @@ def w13_record_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     w10 shape), exact cents end to end; the share is a class-A
     ratio."""
     ev = _t(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     daily = (ev.groupBy("event_type", F.to_date("ts").alias("day"))
                .agg(F.sum(cents).alias("cents")))
     w = (Window.partitionBy("event_type").orderBy("day")
@@ -4486,18 +4293,12 @@ def w13_record_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 # A51 — cohort LTV curve (r9)
 # ---------------------------------------------------------------------------
 
-_CENTS_SQL_OTP = """CAST(CASE WHEN o_totalprice < 0
-                  THEN -FLOOR(ABS(o_totalprice) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(o_totalprice) * 100.0 + 0.5) END
-                 AS BIGINT)"""
-
-
 @register(
     "a51_cohort_ltv",
     oracle=f"""
     WITH cents_o AS (
       SELECT o_custkey AS ck, o_orderdate AS d,
-             {_CENTS_SQL_OTP} AS cents
+             {sql_half_up_cents('o_totalprice')} AS cents
       FROM orders
     ),
     first_o AS (
@@ -4555,12 +4356,7 @@ def a51_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline, partitioned on the cohort-month calendar slice); LTV
     per customer is a class-A integer ratio."""
     o = _t(spark, sf_dir, "orders")
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     co = o.select(F.col("o_custkey").alias("ck"),
                   F.col("o_orderdate").alias("d"),
                   cents.alias("cents"))
@@ -4605,7 +4401,7 @@ def a51_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH spend AS (
       SELECT o_custkey AS ck,
-             CAST(SUM({_CENTS_SQL_OTP}) AS BIGINT) AS cents
+             CAST(SUM({sql_half_up_cents('o_totalprice')}) AS BIGINT) AS cents
       FROM orders GROUP BY 1
     ),
     n AS (SELECT COUNT(*) AS n_total,
@@ -4645,12 +4441,7 @@ def a52_spend_decile_profile(spark: SparkSession,
     ((rn−1)·10) div N — no float quantile anywhere; shares are
     class-A ratios of exact BIGINTs."""
     o = _t(spark, sf_dir, "orders")
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     spend = (o.groupBy(F.col("o_custkey").alias("ck"))
               .agg(F.sum(cents).cast("long").alias("cents")))
     n = spend.agg(F.count(F.lit(1)).alias("n_total"),
@@ -4693,7 +4484,7 @@ def a52_spend_decile_profile(spark: SparkSession,
     WITH m AS (
       SELECT CAST(date_part('month', o_orderdate) AS BIGINT) AS month,
              COUNT(*) AS n_orders,
-             CAST(SUM({_CENTS_SQL_OTP}) AS BIGINT) AS mcents
+             CAST(SUM({sql_half_up_cents('o_totalprice')}) AS BIGINT) AS mcents
       FROM orders GROUP BY 1
     ),
     t AS (SELECT CAST(SUM(mcents) AS BIGINT) AS total,
@@ -4720,12 +4511,7 @@ def a53_seasonality_index(spark: SparkSession,
     cross-join; cents exact BIGINT; share and index class-A integer
     ratios; the peak flag compares exact integers."""
     o = _t(spark, sf_dir, "orders")
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     m = (o.groupBy(F.month("o_orderdate").cast("long").alias("month"))
           .agg(F.count(F.lit(1)).alias("n_orders"),
                F.sum(cents).cast("long").alias("mcents")))
@@ -4829,23 +4615,17 @@ def a54_basket_affinity(spark: SparkSession,
 # A55 — balance↔spend correlation per segment (r9)
 # ---------------------------------------------------------------------------
 
-_CENTS_SQL_BAL = """CAST(CASE WHEN c_acctbal < 0
-                  THEN -FLOOR(ABS(c_acctbal) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(c_acctbal) * 100.0 + 0.5) END
-                 AS BIGINT)"""
-
-
 @register(
     "a55_balance_spend_corr",
     oracle=f"""
     WITH spend AS (
       SELECT o_custkey AS ck,
-             CAST(SUM({_CENTS_SQL_OTP}) AS BIGINT) AS y
+             CAST(SUM({sql_half_up_cents('o_totalprice')}) AS BIGINT) AS y
       FROM orders GROUP BY 1
     ),
     pts AS (
       SELECT c.c_mktsegment AS mktsegment,
-             {_CENTS_SQL_BAL} AS x, s.y
+             {sql_half_up_cents('c_acctbal')} AS x, s.y
       FROM customer c JOIN spend s ON c.c_custkey = s.ck
     ),
     m AS (
@@ -4886,18 +4666,8 @@ def a55_balance_spend_corr(spark: SparkSession,
     5-row moment agg; no window anywhere."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    ocents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
-    bcents = F.when(
-        F.col("c_acctbal") < 0,
-        -F.floor(F.abs(F.col("c_acctbal")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("c_acctbal")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    ocents = half_up_cents(F.col("o_totalprice"))
+    bcents = half_up_cents(F.col("c_acctbal"))
     spend = (o.groupBy(F.col("o_custkey").alias("ck"))
               .agg(F.sum(ocents).cast("long").alias("y")))
     pts = (c.join(spend, c.c_custkey == spend.ck)
@@ -5012,7 +4782,7 @@ def a56_priority_mix_drift(spark: SparkSession,
       SELECT CASE WHEN epoch_us(o_orderdate) <= (mn + mx) // 2
                   THEN 'H1' ELSE 'H2' END AS half,
              o_custkey AS ck,
-             CAST(SUM({_CENTS_SQL_OTP}) AS BIGINT) AS cents
+             CAST(SUM({sql_half_up_cents('o_totalprice')}) AS BIGINT) AS cents
       FROM orders, bounds
       GROUP BY 1, 2
     ),
@@ -5060,12 +4830,7 @@ def a57_decile_migration(spark: SparkSession,
     o = _t(spark, sf_dir, "orders")
     od_us = F.unix_micros(F.col("o_orderdate").cast("timestamp"))
     b = o.agg(F.min(od_us).alias("mn"), F.max(od_us).alias("mx"))
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     half = F.when(
         od_us <= F.expr("(mn + mx) div 2"), "H1").otherwise("H2")
     spend = (o.crossJoin(F.broadcast(b))

@@ -31,7 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.scalars import (md5_prefix_long, round_half_up,
+from ..functions.scalars import (cents_half_up, md5_prefix_long,
+                                 round_half_up, sql_half_up_cents,
                                  sql_round_half_up)
 from ..operators.checkpoint import ckpt
 from ..operators.minhash import (_SQL_BANDS, _SQL_JPAIRS, _SQL_MH,
@@ -135,7 +136,7 @@ def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x2_neardup_jaccard",
     oracle=f"""
     WITH {_SQL_JPAIRS}
-    SELECT doc_a, doc_b, n_common, (CASE WHEN (jac) < 0 THEN -FLOOR(ABS(jac) * 1000000.0 + 0.5) ELSE FLOOR(ABS(jac) * 1000000.0 + 0.5) END / 1000000.0 + 0.0) AS jaccard
+    SELECT doc_a, doc_b, n_common, {sql_round_half_up('jac', 6)} AS jaccard
     FROM jpairs
     """,
 )
@@ -341,7 +342,7 @@ def x2_neardup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
        AND a.doc_id < b.doc_id
     )
-    SELECT c.doc_a, c.doc_b, (CASE WHEN (j.jac) < 0 THEN -FLOOR(ABS(j.jac) * 1000000.0 + 0.5) ELSE FLOOR(ABS(j.jac) * 1000000.0 + 0.5) END / 1000000.0 + 0.0) AS jaccard
+    SELECT c.doc_a, c.doc_b, {sql_round_half_up('j.jac', 6)} AS jaccard
     FROM cand c JOIN jpairs j
       ON c.doc_a = j.doc_a AND c.doc_b = j.doc_b
     """,
@@ -719,7 +720,7 @@ def x2_band_index_compaction(spark: SparkSession,
       FROM n a JOIN n b ON a.vec_id <> b.vec_id
     )
     SELECT query_id, neighbor_id, neighbor_label,
-           (CASE WHEN (cos) < 0 THEN -FLOOR(ABS(cos) * 1000000.0 + 0.5) ELSE FLOOR(ABS(cos) * 1000000.0 + 0.5) END / 1000000.0 + 0.0) AS cos_sim
+           {sql_round_half_up('cos', 6)} AS cos_sim
     FROM (
       SELECT *, ROW_NUMBER() OVER (
         PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
@@ -803,7 +804,7 @@ _SQL_LSH_PLANES = ", ".join(
       FROM b a JOIN b c
         ON a.bucket = c.bucket AND a.vec_id <> c.vec_id
     )
-    SELECT query_id, neighbor_id, (CASE WHEN (cos) < 0 THEN -FLOOR(ABS(cos) * 1000000.0 + 0.5) ELSE FLOOR(ABS(cos) * 1000000.0 + 0.5) END / 1000000.0 + 0.0) AS cos_sim
+    SELECT query_id, neighbor_id, {sql_round_half_up('cos', 6)} AS cos_sim
     FROM (
       SELECT *, ROW_NUMBER() OVER (
         PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
@@ -959,16 +960,13 @@ def x4_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x4_lang_profile",
-    oracle="""
+    oracle=f"""
     SELECT lang,
            COUNT(*) AS n_docs,
            COUNT(DISTINCT source) AS n_sources,
            MIN(n_chars) AS min_chars,
            MAX(n_chars) AS max_chars,
-           (CASE WHEN (AVG(CAST(n_chars AS DOUBLE))) < 0
-                 THEN -FLOOR(ABS(AVG(CAST(n_chars AS DOUBLE))) * 10000.0 + 0.5)
-                 ELSE FLOOR(ABS(AVG(CAST(n_chars AS DOUBLE))) * 10000.0 + 0.5)
-            END / 10000.0 + 0.0) AS avg_chars
+           {sql_round_half_up('AVG(CAST(n_chars AS DOUBLE))', 4)} AS avg_chars
     FROM documents GROUP BY lang
     """,
 )
@@ -1576,7 +1574,7 @@ def x4_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM assigned a JOIN assigned b
         ON a.cid = b.cid AND a.vec_id <> b.vec_id
     )
-    SELECT query_id, neighbor_id, (CASE WHEN (cos) < 0 THEN -FLOOR(ABS(cos) * 1000000.0 + 0.5) ELSE FLOOR(ABS(cos) * 1000000.0 + 0.5) END / 1000000.0 + 0.0) AS cos_sim
+    SELECT query_id, neighbor_id, {sql_round_half_up('cos', 6)} AS cos_sim
     FROM (
       SELECT *, ROW_NUMBER() OVER (
         PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
@@ -2072,7 +2070,7 @@ def x2_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM probe a JOIN assigned b
         ON a.cid = b.cid AND a.vec_id <> b.vec_id
     )
-    SELECT query_id, neighbor_id, (CASE WHEN (cos) < 0 THEN -FLOOR(ABS(cos) * 1000000.0 + 0.5) ELSE FLOOR(ABS(cos) * 1000000.0 + 0.5) END / 1000000.0 + 0.0) AS cos_sim
+    SELECT query_id, neighbor_id, {sql_round_half_up('cos', 6)} AS cos_sim
     FROM (
       SELECT *, ROW_NUMBER() OVER (
         PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
@@ -2781,22 +2779,16 @@ def x6_calibrate_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cogroup_funnel(_key, clicks, purchases):
     """Cogrouped kernel: one user's click frame + purchase frame →
-    one exact-integer row. Cents via the t8 class-A half-up kernel
-    (streaming/jobs.py::cents_half_up — inlined to keep this module
-    import-light); conversion basis points via integer floor division,
-    so the Arrow cogroup path is value-checked against plain SQL."""
-    import numpy as np
+    one exact-integer row. Cents via the class-A half-up kernel
+    (functions/scalars.py::cents_half_up); conversion basis points via
+    integer floor division, so the Arrow cogroup path is value-checked
+    against plain SQL."""
     import pandas as pd
 
     uid = (clicks["user_id"].iloc[0] if len(clicks)
            else purchases["user_id"].iloc[0])
     n_c, n_p = len(clicks), len(purchases)
-    if n_p:
-        v = purchases["value"].to_numpy(dtype="float64")
-        mag = np.floor(np.abs(v) * 100.0 + 0.5)
-        cents = int(np.where(v < 0, -mag, mag).sum())
-    else:
-        cents = 0
+    cents = cents_half_up(purchases["value"].to_numpy())
     conv = (n_p * 10000) // n_c if n_c else None
     return pd.DataFrame({
         "user_id": [uid], "n_clicks": [n_c], "n_purchases": [n_p],
@@ -2805,17 +2797,15 @@ def _cogroup_funnel(_key, clicks, purchases):
 
 @register(
     "x6_cogroup_funnel",
-    oracle="""
+    oracle=f"""
     SELECT user_id,
            CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_clicks,
            CAST(SUM(CASE WHEN event_type = 'purchase'
                     THEN 1 ELSE 0 END) AS BIGINT) AS n_purchases,
            CAST(SUM(CASE WHEN event_type = 'purchase' THEN
-                 CAST(CASE WHEN value < 0
-                      THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                      ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                 AS BIGINT) ELSE 0 END) AS BIGINT) AS purchase_cents,
+                 {sql_half_up_cents('value')} ELSE 0 END) AS BIGINT)
+             AS purchase_cents,
            CAST(CASE WHEN SUM(CASE WHEN event_type = 'click'
                               THEN 1 ELSE 0 END) = 0 THEN NULL
                 ELSE (SUM(CASE WHEN event_type = 'purchase' THEN 1
@@ -5138,9 +5128,7 @@ def x3_hamming_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN truth USING (query_id, neighbor_id)
     )
     SELECT t3.query_id, t3.neighbor_id,
-           (CASE WHEN cos < 0 THEN -FLOOR(ABS(cos) * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(cos) * 1000000.0 + 0.5) END
-            / 1000000.0 + 0.0) AS cos_sim,
+           {sql_round_half_up('cos', 6)} AS cos_sim,
            nc.n_candidates,
            (SELECT n FROM hits_c) AS n_hits_cascade,
            (SELECT n FROM hits_h) AS n_hits_hamming,
@@ -5585,9 +5573,7 @@ def x3_hamming_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lex l FULL OUTER JOIN vecr r ON l.doc_id = r.doc_id
     )
     SELECT doc_id, lex_rank, vec_rank,
-           (CASE WHEN rrf < 0 THEN -FLOOR(ABS(rrf) * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(rrf) * 1000000.0 + 0.5) END
-            / 1000000.0 + 0.0) AS rrf_score
+           {sql_round_half_up('rrf', 6)} AS rrf_score
     FROM fused ORDER BY rrf DESC, doc_id LIMIT 10
     """,
 )
@@ -6532,15 +6518,9 @@ def x3_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n_grams,
            COUNT(CASE WHEN f.intro_doc = g.doc_id THEN 1 END)
              AS n_novel,
-           (CASE WHEN (COUNT(CASE WHEN f.intro_doc = g.doc_id
-                                  THEN 1 END) * 1.0 / COUNT(*)) < 0
-                 THEN -FLOOR(ABS(COUNT(CASE WHEN f.intro_doc = g.doc_id
-                                             THEN 1 END) * 1.0
-                                 / COUNT(*)) * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(COUNT(CASE WHEN f.intro_doc = g.doc_id
-                                           THEN 1 END) * 1.0
-                               / COUNT(*)) * 1000000.0 + 0.5)
-            END / 1000000.0 + 0.0) AS novelty
+           {sql_round_half_up('COUNT(CASE WHEN f.intro_doc = g.doc_id'
+                              ' THEN 1 END) * 1.0 / COUNT(*)', 6)}
+             AS novelty
     FROM grams g JOIN first_intro f ON g.gram = f.gram
     GROUP BY g.doc_id
     """,
@@ -6906,7 +6886,7 @@ def x2_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x5_video_neardup",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT doc_id, text, strlen(text) // 16 AS n_frames
       FROM documents
@@ -6937,12 +6917,8 @@ def x2_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT s.doc_a, s.doc_b, s.n_shared,
            LEAST(sa.n, sb.n) AS n_min,
-           (CASE WHEN (s.n_shared * 1.0 / LEAST(sa.n, sb.n)) < 0
-                 THEN -FLOOR(ABS(s.n_shared * 1.0 / LEAST(sa.n, sb.n))
-                             * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(s.n_shared * 1.0 / LEAST(sa.n, sb.n))
-                            * 1000000.0 + 0.5)
-            END / 1000000.0 + 0.0) AS containment
+           {sql_round_half_up('s.n_shared * 1.0 / LEAST(sa.n, sb.n)', 6)}
+             AS containment
     FROM shared s
     JOIN sizes sa ON s.doc_a = sa.doc_id
     JOIN sizes sb ON s.doc_b = sb.doc_id
@@ -7535,24 +7511,12 @@ _BLOCK_THEORY = 0.8784974492729345
     SELECT (SELECT COUNT(*) FROM jpairs) AS n_truth,
            (SELECT COUNT(*) FROM cand) AS n_candidates,
            caught.n AS n_caught,
-           (CASE WHEN (caught.n * 1.0
-                       / NULLIF((SELECT COUNT(*) FROM jpairs), 0)) < 0
-                 THEN -FLOOR(ABS(caught.n * 1.0
-                       / NULLIF((SELECT COUNT(*) FROM jpairs), 0))
-                             * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(caught.n * 1.0
-                       / NULLIF((SELECT COUNT(*) FROM jpairs), 0))
-                            * 1000000.0 + 0.5)
-            END / 1000000.0 + 0.0) AS blocking_recall,
-           (CASE WHEN (caught.n * 1.0
-                       / NULLIF((SELECT COUNT(*) FROM cand), 0)) < 0
-                 THEN -FLOOR(ABS(caught.n * 1.0
-                       / NULLIF((SELECT COUNT(*) FROM cand), 0))
-                             * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(caught.n * 1.0
-                       / NULLIF((SELECT COUNT(*) FROM cand), 0))
-                            * 1000000.0 + 0.5)
-            END / 1000000.0 + 0.0) AS candidate_precision,
+           {sql_round_half_up('caught.n * 1.0 / NULLIF((SELECT COUNT(*)'
+                              ' FROM jpairs), 0)', 6)}
+             AS blocking_recall,
+           {sql_round_half_up('caught.n * 1.0 / NULLIF((SELECT COUNT(*)'
+                              ' FROM cand), 0)', 6)}
+             AS candidate_precision,
            {_BLOCK_THEORY!r}::DOUBLE AS theory_catch_at_08
     FROM caught
     """,
@@ -7729,13 +7693,9 @@ def x6_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT pop.n_eval, pop.n_train,
            (SELECT COUNT(*) FROM hits) AS n_contaminated,
-           (CASE WHEN ((SELECT COUNT(*) FROM hits) * 1.0
-                       / NULLIF(pop.n_eval, 0)) < 0
-                 THEN -FLOOR(ABS((SELECT COUNT(*) FROM hits) * 1.0
-                       / NULLIF(pop.n_eval, 0)) * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS((SELECT COUNT(*) FROM hits) * 1.0
-                       / NULLIF(pop.n_eval, 0)) * 1000000.0 + 0.5)
-            END / 1000000.0 + 0.0) AS contamination_rate,
+           {sql_round_half_up('(SELECT COUNT(*) FROM hits) * 1.0'
+                              ' / NULLIF(pop.n_eval, 0)', 6)}
+             AS contamination_rate,
            ((SELECT COUNT(*) FROM hits) > 0) AS quarantine_needed
     FROM pop
     """,

@@ -23,10 +23,23 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 
+class DuplicateQueryError(ValueError):
+    """A second query registered under an existing ``name``: the
+    catalog would silently keep only the later one, and the earlier
+    would go on reading as graded while nothing ran it."""
+
+    def __init__(self, name: str):
+        super().__init__(f"query {name!r} is already registered")
+        self.name = name
+
+
 def register(name: str, oracle: str | None = None):
-    """Decorator: add a query (and optional DuckDB oracle) to the catalog."""
+    """Decorator: add a query (and optional DuckDB oracle) to the
+    catalog. Raises :class:`DuplicateQueryError` if ``name`` is taken."""
 
     def deco(fn: QueryFn) -> QueryFn:
+        if name in QUERIES:
+            raise DuplicateQueryError(name)
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle

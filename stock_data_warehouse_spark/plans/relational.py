@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalars import half_up_cents, sql_half_up_cents
 from ..operators.checkpoint import ckpt
 from ..sources.tables import load_table, values_df
 from .registry import register
@@ -1383,42 +1384,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q13_customer_distribution",
-    oracle="""
-    SELECT c_count, COUNT(*) AS custdist
-    FROM (
-      SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-      FROM customer c
-      LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-                         AND o.o_orderpriority <> '1-URGENT'
-      GROUP BY c.c_custkey
-    )
-    GROUP BY c_count
-    """,
-)
-def q13_customer_distribution(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape — the two-level aggregation: per-customer
-    non-urgent order counts (outer join keeps zero-order customers),
-    then the histogram of those counts. The join-side predicate lives
-    in the JOIN condition, not WHERE — filtering in WHERE would turn
-    the outer join inner and drop the zero bucket, the classic Q13
-    trap. Scale shape: level 1 shuffles on the high-cardinality
-    custkey; level 2 re-aggregates ~dozens of distinct counts — its
-    partials collapse map-side, so the second exchange moves almost
-    nothing."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    per_cust = (c.join(o, (c.c_custkey == o.o_custkey)
-                       & (F.col("o_orderpriority") != "1-URGENT"),
-                       "left")
-                 .groupBy("c_custkey")
-                 .agg(F.count("o_orderkey").alias("c_count")))
-    return (per_cust.groupBy("c_count")
-                    .agg(F.count(F.lit(1)).alias("custdist")))
-
-
-@register(
     "q4_order_priority_check",
     oracle="""
     SELECT o_orderpriority, COUNT(*) AS order_count
@@ -1526,13 +1491,11 @@ def j13_bucketed_cojoin_report(spark: SparkSession,
 
 @register(
     "j15_runtime_bloom_join",
-    oracle="""
+    oracle=f"""
     SELECT o.o_orderpriority,
            COUNT(*) AS n_items,
-           CAST(SUM(CAST(CASE WHEN l.l_extendedprice < 0
-                THEN -FLOOR(ABS(l.l_extendedprice) * 100.0 + 0.5)
-                ELSE FLOOR(ABS(l.l_extendedprice) * 100.0 + 0.5) END
-               AS BIGINT)) AS BIGINT) AS revenue_cents,
+           CAST(SUM({sql_half_up_cents('l.l_extendedprice')}) AS BIGINT)
+             AS revenue_cents,
            TRUE AS bloom_ok
     FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     WHERE o.o_orderpriority = '2-HIGH'
@@ -1583,14 +1546,7 @@ def j15_runtime_bloom_join(spark: SparkSession,
         dim = (_t(spark, sf_dir, "orders")
                .filter(F.col("o_orderpriority") == "2-HIGH")
                .select("o_orderkey", "o_orderpriority"))
-        cents = F.when(
-            F.col("l_extendedprice") < 0,
-            -F.floor(F.abs(F.col("l_extendedprice")) * 100.0
-                     + F.lit(0.5)),
-        ).otherwise(
-            F.floor(F.abs(F.col("l_extendedprice")) * 100.0
-                    + F.lit(0.5))
-        ).cast("long")
+        cents = half_up_cents(F.col("l_extendedprice"))
         agg = (li.join(dim, li.l_orderkey == dim.o_orderkey)
                  .groupBy("o_orderpriority")
                  .agg(F.count(F.lit(1)).alias("n_items"),
@@ -1631,10 +1587,8 @@ _J16_BANDS_SQL = "VALUES " + ", ".join(
     WITH ranges(range_id, lo, hi) AS ({_J16_BANDS_SQL})
     SELECT r.range_id,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(CASE WHEN o.o_totalprice < 0
-                THEN -FLOOR(ABS(o.o_totalprice) * 100.0 + 0.5)
-                ELSE FLOOR(ABS(o.o_totalprice) * 100.0 + 0.5) END
-               AS BIGINT)) AS BIGINT) AS revenue_cents,
+           CAST(SUM({sql_half_up_cents('o.o_totalprice')}) AS BIGINT)
+             AS revenue_cents,
            TRUE AS equi_ok
     FROM orders o
     JOIN ranges r ON o.o_totalprice >= r.lo AND o.o_totalprice < r.hi
@@ -1676,12 +1630,7 @@ def j16_binned_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                              F.floor((F.col("hi") - 1.0) / w))))
     o = _t(spark, sf_dir, "orders").select("o_totalprice")
     fact = o.withColumn("bin", F.floor(F.col("o_totalprice") / w))
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     agg = (
         fact.join(F.broadcast(binned_ranges), "bin")
         .filter((F.col("o_totalprice") >= F.col("lo"))
@@ -1872,13 +1821,10 @@ def j18_pit_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "o7_topk_with_ties",
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT o_orderpriority AS priority,
-             CAST(CASE WHEN o_totalprice < 0
-                  THEN -FLOOR(ABS(o_totalprice) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(o_totalprice) * 100.0 + 0.5) END
-                  AS BIGINT) // 1000000 AS value_mcents
+             {sql_half_up_cents('o_totalprice')} // 1000000 AS value_mcents
       FROM orders
     ),
     g AS (
@@ -1911,12 +1857,7 @@ def o7_topk_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the t32 discipline); banding and counts are exact integer
     arithmetic."""
     o = _t(spark, sf_dir, "orders")
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     g = (o.select(F.col("o_orderpriority").alias("priority"),
                   F.floor(cents / 1000000).cast("long")
                    .alias("value_mcents"))
@@ -1934,13 +1875,10 @@ def o7_topk_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "o9_capped_topk",
-    oracle="""
+    oracle=f"""
     WITH cents AS (
       SELECT o_orderkey, c.c_mktsegment AS mktsegment,
-             CAST(CASE WHEN o_totalprice < 0
-                  THEN -FLOOR(ABS(o_totalprice) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(o_totalprice) * 100.0 + 0.5) END
-             AS BIGINT) AS cents
+             {sql_half_up_cents('o_totalprice')} AS cents
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     ),
     seg_ranked AS (
@@ -1974,12 +1912,7 @@ def o9_capped_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     # customer joins plainly — an SF-scaling dim must not carry an
     # un-demotable broadcast hint (ADVICE r8); AQE broadcasts it at
     # small SFs on its own.

@@ -32,7 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.scalars import md5_prefix_long, sql_round_half_up
+from ..functions.scalars import (half_up_cents, md5_prefix_long,
+                                 sql_half_up_cents, sql_round_half_up)
 from ..operators.minhash import (_UNIFORM_TH, _hex_threshold, _sql_coin,
                                  hash_coin)
 from ..operators.text import SQL_TOKENS, tokens_col
@@ -580,10 +581,7 @@ def _pois_sql(u: str) -> str:
     oracle=f"""
     WITH base AS (
       SELECT o_orderkey,
-             CAST(CASE WHEN o_totalprice < 0
-                  THEN -FLOOR(ABS(o_totalprice) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(o_totalprice) * 100.0 + 0.5) END
-                  AS BIGINT) AS cents
+             {sql_half_up_cents('o_totalprice')} AS cents
       FROM orders
     ),
     reps AS (SELECT UNNEST(range({_N_REPLICAS})) AS replica),
@@ -635,12 +633,7 @@ def x7_poisson_bootstrap(spark: SparkSession,
     projection fan-out, no shuffle growth), one hash agg per
     replica."""
     o = _t(spark, sf_dir, "orders")
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     base = o.select("o_orderkey", cents.alias("cents"))
     reps = base.withColumn(
         "replica",

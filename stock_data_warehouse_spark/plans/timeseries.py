@@ -26,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalars import sql_round_half_up
+from ..functions.scalars import (half_up_cents, sql_half_up_cents,
+                                 sql_round_half_up)
 from ..sources.tables import load_table
 from .registry import register
 
@@ -481,10 +482,7 @@ _CAP_MAX_US = 12 * 3600 * 1_000_000   #: 12-hour session-duration cap
     oracle=f"""
     WITH e AS (
       SELECT user_id, event_id, epoch_us(ts) AS us,
-             CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-             AS BIGINT) AS cents
+             {sql_half_up_cents('value')} AS cents
       FROM events
     ),
     o AS (
@@ -554,12 +552,7 @@ def t31_session_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (_t(spark, sf_dir, "events")
          .select("user_id", "event_id",
                  F.unix_micros("ts").alias("us"),
-                 F.when(F.col("value") < 0,
-                        -F.floor(F.abs(F.col("value")) * 100.0
-                                 + F.lit(0.5)))
-                  .otherwise(F.floor(F.abs(F.col("value")) * 100.0
-                                     + F.lit(0.5)))
-                  .cast("long").alias("cents")))
+                 half_up_cents(F.col("value")).alias("cents")))
     wo = Window.partitionBy("user_id").orderBy("us", "event_id")
     brk = F.when(
         F.col("us") - F.lag("us").over(wo) <= _CAP_GAP_US,
@@ -661,10 +654,7 @@ _RSI_N = 5
     oracle=f"""
     WITH daily AS (
       SELECT event_type, ts::DATE AS day,
-             CAST(SUM(CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                 AS BIGINT)) AS BIGINT) AS cents
+             CAST(SUM({sql_half_up_cents('value')}) AS BIGINT) AS cents
       FROM events GROUP BY event_type, ts::DATE
     ),
     diffs AS (
@@ -693,12 +683,7 @@ _RSI_N = 5
     SELECT event_type, CAST(day AS VARCHAR) AS day, cents, g AS gains,
            l AS losses,
            CASE WHEN g + l = 0 THEN NULL ELSE
-             (CASE WHEN (100.0 * g / (g + l)) < 0
-                   THEN -FLOOR(ABS(100.0 * g / (g + l))
-                               * 10000.0 + 0.5)
-                   ELSE FLOOR(ABS(100.0 * g / (g + l))
-                              * 10000.0 + 0.5)
-              END / 10000.0 + 0.0) END AS rsi,
+             {sql_round_half_up('100.0 * g / (g + l)', 4)} END AS rsi,
            (g + l > 0 AND 100.0 * g / (g + l) > 70) AS overbought,
            (g + l > 0 AND 100.0 * g / (g + l) < 30) AS oversold
     FROM win WHERE nw = {_RSI_N}
@@ -724,12 +709,7 @@ def t34_rsi_indicator(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows) are excluded by the window row count, not by date
     arithmetic."""
     ev = _t(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     daily = (ev.groupBy("event_type", F.to_date("ts").alias("day"))
                .agg(F.sum(cents).alias("cents")))
     wo = Window.partitionBy("event_type").orderBy("day")
@@ -1216,10 +1196,7 @@ def t38_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT event_type,
              CAST((isodow(ts) - 1) * 24 + hour(ts) AS INTEGER)
                AS hour_of_week,
-             CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-             AS BIGINT) AS cents
+             {sql_half_up_cents('value')} AS cents
       FROM events
     ),
     prof AS (
@@ -1255,12 +1232,7 @@ def t39_hour_of_week_profile(spark: SparkSession,
     → bounded (type × 168) agg + a 5-row max join — map-side combine
     does everything."""
     ev = _t(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     prof = (ev.groupBy(
                 "event_type",
                 (F.weekday("ts") * 24 + F.hour("ts")).cast("int")

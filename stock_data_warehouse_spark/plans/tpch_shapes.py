@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.scalars import round_half_up
+from ..functions.scalars import round_half_up, sql_round_half_up
 from ..sources.tables import load_table
 from .registry import register
 
@@ -728,52 +728,12 @@ def q22_idle_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Q5 — local-supplier volume, expressed through the spark.sql surface
-# ---------------------------------------------------------------------------
-
-_Q5_SQL = """
-    SELECT n.n_name AS nation_name,
-           SUM(CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 10000)
-                    AS BIGINT)) / CAST(10000 AS DOUBLE) AS revenue
-    FROM customer c
-    JOIN orders o   ON o.o_custkey = c.c_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey
-                   AND s.s_nationkey = c.c_nationkey
-    JOIN nation n   ON n.n_nationkey = c.c_nationkey
-    JOIN region r   ON r.r_regionkey = n.n_regionkey
-    WHERE r.r_name = 'ASIA'
-      AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o.o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-    GROUP BY n.n_name
-"""
-
-
-@register("q5_local_supplier_volume", oracle=_Q5_SQL)
-def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape — revenue where customer and supplier share a
-    nation, per ASIA nation and order year. Served through the
-    ``spark.sql`` surface over registered views with the IDENTICAL
-    ANSI text as the DuckDB oracle (modulo nothing — one string) —
-    the EP-3 "snapshot is a queryable table" entry point (SURVEY.md
-    §3), proving the SQL API and the DataFrame API are the same
-    engine. Catalyst plans it exactly like the DataFrame form: dates
-    push to the orders scan, region/nation broadcast, and the
-    same-nation predicate rides the supplier join condition."""
-    from ..sources.tables import register_views
-    register_views(spark, sf_dir,
-                   ("customer", "orders", "lineitem", "supplier",
-                    "nation", "region"))
-    return spark.sql(_Q5_SQL)
-
-
-# ---------------------------------------------------------------------------
 # Q2 analogue — correlated-min subquery: cheapest supplier per part
 # ---------------------------------------------------------------------------
 
 @register(
     "q2_min_cost_supplier",
-    oracle="""
+    oracle=f"""
     WITH offers AS (
       SELECT l.l_partkey, l.l_suppkey,
              MIN(l.l_extendedprice / l.l_quantity) AS unit_price
@@ -786,10 +746,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM offers GROUP BY l_partkey
     )
     SELECT p.p_partkey, p.p_brand, s.s_suppkey, s.s_name,
-           (CASE WHEN (o.unit_price) < 0
-                 THEN -FLOOR(ABS(o.unit_price) * 10000.0 + 0.5)
-                 ELSE FLOOR(ABS(o.unit_price) * 10000.0 + 0.5)
-            END / 10000.0 + 0.0) AS unit_price
+           {sql_round_half_up('o.unit_price', 4)} AS unit_price
     FROM offers o
     JOIN best b ON b.l_partkey = o.l_partkey
                AND o.unit_price = b.best_price

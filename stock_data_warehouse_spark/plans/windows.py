@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalars import round_half_up
+from ..functions.scalars import (half_up_cents, round_half_up,
+                                 sql_half_up_cents, sql_round_half_up)
 from ..sources.tables import load_table
 from .registry import register
 
@@ -65,19 +66,12 @@ def w2_ranking_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w3_analytic_pack",
-    oracle="""
+    oracle=f"""
     SELECT o_orderkey, o_custkey,
            LAG(o_totalprice)  OVER w AS prev_price,
            LEAD(o_totalprice) OVER w AS next_price,
-           (CASE WHEN (o_totalprice - COALESCE(LAG(o_totalprice) OVER w,
-                                               o_totalprice)) < 0
-                 THEN -FLOOR(ABS(o_totalprice
-                       - COALESCE(LAG(o_totalprice) OVER w, o_totalprice))
-                       * 100.0 + 0.5)
-                 ELSE FLOOR(ABS(o_totalprice
-                       - COALESCE(LAG(o_totalprice) OVER w, o_totalprice))
-                       * 100.0 + 0.5)
-            END / 100.0 + 0.0) AS qoq_delta,
+           {sql_round_half_up('o_totalprice - COALESCE(LAG(o_totalprice)'
+                              ' OVER w, o_totalprice)', 2)} AS qoq_delta,
            FIRST_VALUE(o_totalprice) OVER w AS first_price
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
@@ -179,16 +173,10 @@ def w5_range_frame_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w6_distribution_ranks",
-    oracle="""
+    oracle=f"""
     SELECT c_custkey, c_mktsegment,
-           (CASE WHEN (PERCENT_RANK() OVER w) < 0
-                 THEN -FLOOR(ABS(PERCENT_RANK() OVER w) * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(PERCENT_RANK() OVER w) * 1000000.0 + 0.5)
-            END / 1000000.0 + 0.0) AS bal_pct_rank,
-           (CASE WHEN (CUME_DIST() OVER w) < 0
-                 THEN -FLOOR(ABS(CUME_DIST() OVER w) * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(CUME_DIST() OVER w) * 1000000.0 + 0.5)
-            END / 1000000.0 + 0.0) AS bal_cume_dist
+           {sql_round_half_up('PERCENT_RANK() OVER w', 6)} AS bal_pct_rank,
+           {sql_round_half_up('CUME_DIST() OVER w', 6)} AS bal_cume_dist
     FROM customer
     WINDOW w AS (PARTITION BY c_mktsegment
                  ORDER BY c_acctbal, c_custkey)
@@ -352,10 +340,7 @@ _EWMA_W_SQL = "VALUES " + ", ".join(
     oracle=f"""
     WITH daily AS (
       SELECT event_type, ts::DATE AS day,
-             CAST(SUM(CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                 AS BIGINT)) AS BIGINT) AS cents
+             CAST(SUM({sql_half_up_cents('value')}) AS BIGINT) AS cents
       FROM events GROUP BY event_type, ts::DATE
     ),
     wts(k, w) AS ({_EWMA_W_SQL}),
@@ -390,12 +375,7 @@ def w9_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     single rounding happens after the division (class-B decimal
     route), so the smoothed series is hash-exact."""
     ev = _t(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     daily = (ev.groupBy("event_type", F.to_date("ts").alias("day"))
                .agg(F.sum(cents).alias("cents")))
     from ..sources.tables import values_df
@@ -424,18 +404,12 @@ def w9_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w10_max_drawdown",
-    oracle="""
+    oracle=f"""
     WITH flows AS (
       SELECT user_id, ts, event_id,
              CAST(CASE WHEN event_type = 'purchase'
-                  THEN CAST(CASE WHEN value < 0
-                       THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                       ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                       AS BIGINT)
-                  ELSE -CAST(CASE WHEN value < 0
-                       THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                       ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                       AS BIGINT) END AS BIGINT) AS flow
+                  THEN {sql_half_up_cents('value')}
+                  ELSE -{sql_half_up_cents('value')} END AS BIGINT) AS flow
       FROM events WHERE event_type IN ('purchase', 'error')
     ),
     cum AS (
@@ -474,12 +448,7 @@ def w10_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents end to end: running sums, peaks and drawdowns are
     hash-exact with no rounding route needed."""
     ev = _t(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     flows = (ev.filter(F.col("event_type").isin("purchase", "error"))
                .select("user_id", "ts", "event_id",
                        F.when(F.col("event_type") == "purchase", cents)
@@ -505,13 +474,10 @@ def w10_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w11_rolling_median_30d",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type, ts::DATE AS day,
-             CAST(SUM(CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                 AS BIGINT)) AS BIGINT) AS cents
+             CAST(SUM({sql_half_up_cents('value')}) AS BIGINT) AS cents
       FROM events GROUP BY 1, 2
     )
     SELECT event_type, CAST(day AS VARCHAR) AS day, cents,
@@ -538,12 +504,7 @@ def w11_rolling_median_30d(spark: SparkSession,
     events; cents are exact longs so every interpolated median is an
     exact half-integer, hash-stable with no rounding route."""
     ev = _t(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     daily = (ev.groupBy("event_type", F.to_date("ts").alias("day"))
                .agg(F.sum(cents).alias("cents")))
     w = (Window.partitionBy("event_type").orderBy("day")
@@ -571,13 +532,10 @@ def w11_rolling_median_30d(spark: SparkSession,
 
 @register(
     "w12_bollinger_breakout",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type, ts::DATE AS day,
-             CAST(SUM(CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                 AS BIGINT)) AS BIGINT) AS cents
+             CAST(SUM({sql_half_up_cents('value')}) AS BIGINT) AS cents
       FROM events GROUP BY 1, 2
     ),
     framed AS (
@@ -624,12 +582,7 @@ def w12_bollinger_breakout(spark: SparkSession,
     decimal-routed. Window input is the per-day aggregate (a22
     discipline), frames bounded by spec."""
     ev = _t(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     daily = (ev.groupBy("event_type", F.to_date("ts").alias("day"))
                .agg(F.sum(cents).alias("cents")))
     w = (Window.partitionBy("event_type").orderBy("day")
@@ -659,13 +612,10 @@ def w12_bollinger_breakout(spark: SparkSession,
 
 @register(
     "w14_donchian_channel",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type, ts::DATE AS day,
-             CAST(SUM(CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                 AS BIGINT)) AS BIGINT) AS cents
+             CAST(SUM({sql_half_up_cents('value')}) AS BIGINT) AS cents
       FROM events GROUP BY 1, 2
     ),
     framed AS (
@@ -701,12 +651,7 @@ def w14_donchian_channel(spark: SparkSession,
     is the per-day aggregate (a22 discipline), frames bounded by
     spec."""
     ev = _t(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     daily = (ev.groupBy("event_type", F.to_date("ts").alias("day"))
                .agg(F.sum(cents).alias("cents")))
     w = (Window.partitionBy("event_type").orderBy("day")
@@ -732,13 +677,10 @@ def w14_donchian_channel(spark: SparkSession,
 
 @register(
     "w15_up_streaks",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type, ts::DATE AS day,
-             CAST(SUM(CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                 AS BIGINT)) AS BIGINT) AS cents
+             CAST(SUM({sql_half_up_cents('value')}) AS BIGINT) AS cents
       FROM events GROUP BY 1, 2
     ),
     flagged AS (
@@ -787,12 +729,7 @@ def w15_up_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     not-up on both engines via the strict > on NULL). Counts are
     exact integers end to end."""
     ev = _t(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     daily = (ev.groupBy("event_type", F.to_date("ts").alias("day"))
                .agg(F.sum(cents).alias("cents")))
     wd = Window.partitionBy("event_type").orderBy("day")
@@ -829,13 +766,10 @@ def w15_up_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w16_revenue_drawdown",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type, ts::DATE AS day,
-             CAST(SUM(CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                 AS BIGINT)) AS BIGINT) AS cents
+             CAST(SUM({sql_half_up_cents('value')}) AS BIGINT) AS cents
       FROM events GROUP BY 1, 2
     ),
     dd AS (
@@ -869,11 +803,7 @@ def w15_up_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
            (SELECT CAST(w.day AS VARCHAR) FROM worst w
             WHERE w.event_type = d.event_type AND w.wr = 1)
              AS trough_day,
-           (SELECT CASE WHEN (w.draw * 1.0 / w.peak) < 0
-                 THEN -FLOOR(ABS(w.draw * 1.0 / w.peak)
-                             * 1000000.0 + 0.5)
-                 ELSE FLOOR(ABS(w.draw * 1.0 / w.peak)
-                            * 1000000.0 + 0.5) END / 1000000.0 + 0.0
+           (SELECT {sql_round_half_up('w.draw * 1.0 / w.peak', 6)}
             FROM worst w
             WHERE w.event_type = d.event_type AND w.wr = 1)
              AS drawdown_frac,
@@ -908,12 +838,7 @@ def w16_revenue_drawdown(spark: SparkSession,
     discipline), and the underwater spells reuse w15's rn-difference
     islands."""
     ev = _t(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     daily = (ev.groupBy("event_type", F.to_date("ts").alias("day"))
                .agg(F.sum(cents).alias("cents")))
     wd = Window.partitionBy("event_type").orderBy("day")

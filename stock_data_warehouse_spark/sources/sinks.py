@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.scalars import half_up_cents, sql_half_up_cents
 from ..operators.checkpoint import ckpt
 from ..plans.registry import register
 from .tables import load_table
@@ -637,15 +638,13 @@ def s11_compaction_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s17_schema_evolution_scan",
-    oracle="""
+    oracle=f"""
     SELECT c_mktsegment AS segment,
            COUNT(*) AS n_rows,
            CAST(SUM(CASE WHEN c_custkey < 75 THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_v1,
-           CAST(SUM(CAST(CASE WHEN c_acctbal < 0
-                    THEN -FLOOR(ABS(c_acctbal) * 100.0 + 0.5)
-                    ELSE FLOOR(ABS(c_acctbal) * 100.0 + 0.5) END
-               AS BIGINT)) AS BIGINT) AS sum_bal_cents
+           CAST(SUM({sql_half_up_cents('c_acctbal')}) AS BIGINT)
+             AS sum_bal_cents
     FROM (
       SELECT c_custkey, c_acctbal,
              CASE WHEN c_custkey < 75 THEN NULL
@@ -692,12 +691,8 @@ def s17_schema_evolution_scan(spark: SparkSession,
             .agg(F.count(F.lit(1)).alias("n_rows"),
                  F.sum(F.when(F.col("c_custkey") < 75, 1).otherwise(0))
                   .alias("n_v1"),
-                 F.sum(F.when(
-                     F.col("c_acctbal") < 0,
-                     -F.floor(F.abs("c_acctbal") * 100.0 + F.lit(0.5)),
-                 ).otherwise(
-                     F.floor(F.abs("c_acctbal") * 100.0 + F.lit(0.5)))
-                   .cast("long")).alias("sum_bal_cents")))
+                 F.sum(half_up_cents(F.col("c_acctbal")))
+                  .alias("sum_bal_cents")))
 
 
 # ---------------------------------------------------------------------------
@@ -911,13 +906,11 @@ def s12_permissive_json_scan(spark: SparkSession,
 
 @register(
     "s19_partition_pruned_scan",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(CASE WHEN o_totalprice < 0
-                THEN -FLOOR(ABS(o_totalprice) * 100.0 + 0.5)
-                ELSE FLOOR(ABS(o_totalprice) * 100.0 + 0.5) END
-               AS BIGINT)) AS BIGINT) AS revenue_cents,
+           CAST(SUM({sql_half_up_cents('o_totalprice')}) AS BIGINT)
+             AS revenue_cents,
            TRUE AS pruned_ok
     FROM orders
     WHERE o_orderpriority = '1-URGENT'
@@ -950,12 +943,7 @@ def s19_partition_pruned_scan(spark: SparkSession,
 
     scan = (spark.read.parquet(target)
             .filter(F.col("o_orderpriority") == "1-URGENT"))
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     agg = (scan.select("o_orderpriority", cents.alias("cents"))
                .groupBy("o_orderpriority")
                .agg(F.count(F.lit(1)).alias("n_orders"),
@@ -1074,13 +1062,11 @@ def s20_retention_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "j14_dynamic_partition_pruning",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
            COUNT(*) AS n_orders,
-           CAST(SUM(CAST(CASE WHEN o_totalprice < 0
-                THEN -FLOOR(ABS(o_totalprice) * 100.0 + 0.5)
-                ELSE FLOOR(ABS(o_totalprice) * 100.0 + 0.5) END
-               AS BIGINT)) AS BIGINT) AS revenue_cents,
+           CAST(SUM({sql_half_up_cents('o_totalprice')}) AS BIGINT)
+             AS revenue_cents,
            TRUE AS dpp_ok
     FROM orders
     WHERE o_orderpriority = '2-HIGH'
@@ -1124,12 +1110,7 @@ def j14_dynamic_partition_pruning(spark: SparkSession,
     dim = (load_table(spark, sf_dir, "orders")
            .select(F.col("o_orderpriority").alias("prio")).distinct()
            .filter(F.col("prio").startswith("2")))
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
     j = (fact.join(dim, fact.o_orderpriority == F.col("prio"))
              .select("o_orderpriority", cents.alias("cents")))
     agg = (j.groupBy("o_orderpriority")
@@ -1251,13 +1232,10 @@ def s21_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s22_orc_roundtrip",
-    oracle="""
+    oracle=f"""
     SELECT s_nationkey,
            COUNT(*) AS n_suppliers,
-           CAST(SUM(CAST(CASE WHEN s_acctbal < 0
-                THEN -FLOOR(ABS(s_acctbal) * 100.0 + 0.5)
-                ELSE FLOOR(ABS(s_acctbal) * 100.0 + 0.5) END
-               AS BIGINT)) AS BIGINT) AS acct_cents,
+           CAST(SUM({sql_half_up_cents('s_acctbal')}) AS BIGINT) AS acct_cents,
            TRUE AS orc_pushdown_ok
     FROM supplier
     WHERE s_acctbal >= 0
@@ -1293,12 +1271,7 @@ def s22_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "PushedFilters" in ln and "s_acctbal" in ln
         and "[]" not in ln
         for ln in formatted.splitlines())
-    cents = F.when(
-        F.col("s_acctbal") < 0,
-        -F.floor(F.abs(F.col("s_acctbal")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("s_acctbal")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("s_acctbal"))
     return (back.groupBy("s_nationkey")
                 .agg(F.count(F.lit(1)).alias("n_suppliers"),
                      F.sum(cents).alias("acct_cents"))
@@ -1311,23 +1284,17 @@ def s22_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s23_snapshot_diff",
-    oracle="""
+    oracle=f"""
     WITH v1 AS (
       SELECT o_custkey AS ck, COUNT(*) AS n_orders,
-             SUM(CAST(CASE WHEN o_totalprice < 0
-                  THEN -FLOOR(ABS(o_totalprice) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(o_totalprice) * 100.0 + 0.5) END
-                 AS BIGINT)) AS cents
+             SUM({sql_half_up_cents('o_totalprice')}) AS cents
       FROM orders
       WHERE o_orderdate < TIMESTAMP '1996-06-01 00:00:00'
       GROUP BY o_custkey
     ),
     v2 AS (
       SELECT o_custkey AS ck, COUNT(*) AS n_orders,
-             SUM(CAST(CASE WHEN o_totalprice < 0
-                  THEN -FLOOR(ABS(o_totalprice) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(o_totalprice) * 100.0 + 0.5) END
-                 AS BIGINT)) AS cents
+             SUM({sql_half_up_cents('o_totalprice')}) AS cents
       FROM orders GROUP BY o_custkey
     ),
     d AS (
@@ -1368,12 +1335,7 @@ def s23_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     same scan lineage + ONE full-outer join on the key + a bounded
     status agg; integer cents arithmetic end to end."""
     o = load_table(spark, sf_dir, "orders")
-    cents = F.when(
-        F.col("o_totalprice") < 0,
-        -F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("o_totalprice")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("o_totalprice"))
 
     def snap(df):
         return (df.groupBy(F.col("o_custkey").alias("ck"))
@@ -1409,18 +1371,12 @@ def s23_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s24_dynamic_overwrite",
-    oracle="""
+    oracle=f"""
     WITH final AS (
       SELECT event_type, ts::DATE AS day,
              CASE WHEN ts::DATE = DATE '2024-01-10'
-                  THEN CAST(CASE WHEN value < 0
-                       THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                       ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                       AS BIGINT) * 2
-                  ELSE CAST(CASE WHEN value < 0
-                       THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                       ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                       AS BIGINT) END AS cents
+                  THEN {sql_half_up_cents('value')} * 2
+                  ELSE {sql_half_up_cents('value')} END AS cents
       FROM events
     )
     SELECT event_type,
@@ -1453,12 +1409,7 @@ def s24_dynamic_overwrite(spark: SparkSession,
     out = _mkdtemp(prefix="s24_dynover_")
     table = os.path.join(out, "events_by_day")
     ev = load_table(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     base = ev.select("event_id", "event_type",
                      F.to_date("ts").alias("day"),
                      cents.alias("cents"))
@@ -1514,13 +1465,10 @@ def s24_dynamic_overwrite(spark: SparkSession,
 
 @register(
     "s25_partition_backfill",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT ts::DATE AS day, COUNT(*) AS n_events,
-             CAST(SUM(CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                 AS BIGINT)) AS BIGINT) AS sum_cents
+             CAST(SUM({sql_half_up_cents('value')}) AS BIGINT) AS sum_cents
       FROM events GROUP BY 1
     ),
     mnd AS (SELECT MIN(day) AS mnd FROM daily)
@@ -1560,12 +1508,7 @@ def s25_partition_backfill(spark: SparkSession,
     out_dir = _mkdtemp(prefix="s25_backfill_")
     tbl = f"{out_dir}/daily"
     ev = load_table(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     daily = (ev.groupBy(F.to_date("ts").alias("day"))
                .agg(F.count(F.lit(1)).alias("n_events"),
                     F.sum(cents).cast("long").alias("sum_cents")))
@@ -1618,17 +1561,14 @@ def s25_partition_backfill(spark: SparkSession,
 
 @register(
     "s26_incremental_agg_maintenance",
-    oracle="""
+    oracle=f"""
     WITH bounds AS (
       SELECT epoch_us(MIN(ts)) AS mn, epoch_us(MAX(ts)) AS mx
       FROM events
     ),
     full_v AS (
       SELECT event_type, ts::DATE AS day, COUNT(*) AS n_events,
-             CAST(SUM(CAST(CASE WHEN value < 0
-                  THEN -FLOOR(ABS(value) * 100.0 + 0.5)
-                  ELSE FLOOR(ABS(value) * 100.0 + 0.5) END
-                 AS BIGINT)) AS BIGINT) AS sum_cents
+             CAST(SUM({sql_half_up_cents('value')}) AS BIGINT) AS sum_cents
       FROM events GROUP BY 1, 2
     ),
     delta_rows AS (
@@ -1666,12 +1606,7 @@ def s26_incremental_agg_maintenance(spark: SparkSession,
     out_dir = _mkdtemp(prefix="s26_ivm_")
     v1_dir, merged_dir = f"{out_dir}/v1", f"{out_dir}/merged"
     ev = load_table(spark, sf_dir, "events")
-    cents = F.when(
-        F.col("value") < 0,
-        -F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5)),
-    ).otherwise(
-        F.floor(F.abs(F.col("value")) * 100.0 + F.lit(0.5))
-    ).cast("long")
+    cents = half_up_cents(F.col("value"))
     b = ev.agg(F.unix_micros(F.min("ts")).alias("mn"),
                F.unix_micros(F.max("ts")).alias("mx"))
     evb = ev.crossJoin(F.broadcast(b))

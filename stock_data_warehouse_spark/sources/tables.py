@@ -94,18 +94,6 @@ def event_ts_cols(ts_dtype: str):
     return ts, F.unix_micros(ts) * 1000
 
 
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TABLES) -> None:
-    """Register the tables as temp views so ``spark.sql`` works too."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def values_df(spark: SparkSession, rows: list[tuple],
               schema: str) -> DataFrame:
     """Tiny literal dimension as a SQL VALUES relation.

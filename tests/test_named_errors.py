@@ -1,6 +1,8 @@
 """Conventions that are enforced as named errors, one trigger each
 (ROADMAP aim 3: fail loudly and early)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -69,6 +71,18 @@ def test_catalog_import_failure_is_named(monkeypatch):
         registry._load_all()
     assert err.value.name.endswith(".no_such_module")
     assert isinstance(err.value.__cause__, ModuleNotFoundError)
+
+
+def test_second_registration_of_a_name_is_rejected():
+    """Registering a name the catalog already holds raises instead of
+    silently replacing the first query."""
+    fns = registry.query_fns()
+    assert len(fns) == 360
+    with pytest.raises(registry.DuplicateQueryError) as err:
+        registry.register("q1_pricing_summary")(lambda spark, sf_dir: None)
+    assert err.value.name == "q1_pricing_summary"
+    assert registry.query_fns()["q1_pricing_summary"] is fns[
+        "q1_pricing_summary"]
 
 
 def test_state_dir_with_two_ordinal_markers_is_rejected(spark,
@@ -162,3 +176,58 @@ def test_kernels_live_in_operators_and_plans_import_only_the_registry():
                                         "adc_topk", "ivf_train_rows")]
     assert not bad_imports, bad_imports
     assert not bad_defs, bad_defs
+
+
+
+def _matching_paren(text, i):
+    """Index just past the ``)`` closing the ``(`` at ``text[i - 1]``,
+    or None if it never closes."""
+    depth = 1
+    for k in range(i, len(text)):
+        depth += {"(": 1, ")": -1}.get(text[k], 0)
+        if depth == 0:
+            return k + 1
+    return None
+
+
+_ABS_FLOOR = re.compile(r"F\.floor\(\s*F\.abs\(|FLOOR\(ABS\("
+                        r"|np\.floor\(\s*np\.abs\(")
+_TIMES_100 = re.compile(r"\s*\*\s*100\.0\s*\+")
+_END = re.compile(r"\bEND\b")
+_END_SCALED = re.compile(r"END\s*/\s*10+\.0\s*\+\s*0\.0")
+
+
+def _half_up_copies(text):
+    """Offsets of hand-written half-up kernels in ``text``: a floor of
+    an ``abs`` that is scaled ``* 100.0 +`` (the cents kernel), or a
+    ``FLOOR(ABS(`` whose next ``END`` reads ``END / 10^s.0 + 0.0`` (an
+    expanded ``sql_round_half_up``)."""
+    for m in _ABS_FLOOR.finditer(text):
+        k = _matching_paren(text, m.end())
+        if k is None:
+            continue
+        end = _END.search(text, k)
+        if (_TIMES_100.match(text, k)
+                or end and _END_SCALED.match(text, end.start())):
+            yield m.start()
+
+
+def test_half_up_kernels_are_written_once():
+    """Outside ``functions/scalars.py`` no package source spells the
+    half-up kernel by hand: the cents form is ``half_up_cents`` /
+    ``sql_half_up_cents`` / ``cents_half_up(_vec)``, and a rounded
+    oracle column calls ``sql_round_half_up``. a32's scale-0 rounding
+    (``FLOOR(ABS(x) + 0.5)``, cast to BIGINT) is neither form."""
+    import pathlib
+
+    import stock_data_warehouse_spark as pkg
+    root = pathlib.Path(pkg.__file__).parent
+    copies = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "functions" / "scalars.py":
+            continue
+        text = path.read_text()
+        copies += [(str(path.relative_to(root.parent)),
+                    text.count("\n", 0, at) + 1)
+                   for at in _half_up_copies(text)]
+    assert not copies, copies

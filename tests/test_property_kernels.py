@@ -630,18 +630,43 @@ def _twin_sign_pack(spark):
     return got, [tuple(r) for r in want]
 
 
+def _twin_half_up_cents(spark):
+    import duckdb
+    import pandas as pd
+
+    from stock_data_warehouse_spark.functions.scalars import (
+        half_up_cents, sql_half_up_cents,
+    )
+
+    # half-cent ties (exact or one ulp off after ×100), signed zeros,
+    # and 2-dp / 3-dp money
+    vals = [0.005, -0.005, 2.675, -2.675, 1e6 + 0.005, -(1e6 + 0.005),
+            0.0, -0.0, 1.23, -4.56, 999.99, -0.01, 0.015, -0.125,
+            123.455, 7.001, -7.999, 72091.275]
+    rows = list(enumerate(vals))
+    df = spark.createDataFrame(rows, "id long, v double")
+    got = sorted(tuple(r) for r in df.select(
+        "id", half_up_cents(F.col("v")).alias("c")).collect())
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame(rows, columns=["id", "v"]))
+    want = con.execute(
+        f"SELECT id, {sql_half_up_cents('v')} AS c FROM t ORDER BY id"
+    ).fetchall()
+    return got, [tuple(r) for r in want]
+
+
 _TWINS = {"dot": _twin_dot, "l2sq": _twin_l2sq,
           "hash_rank": _twin_hash_rank, "minhash_bands": _twin_minhash_bands,
-          "sign_pack": _twin_sign_pack}
+          "sign_pack": _twin_sign_pack, "half_up_cents": _twin_half_up_cents}
 
 
 @pytest.mark.parametrize("kernel", sorted(_TWINS))
 def test_operator_kernel_matches_duckdb_twin(spark, kernel):
-    """The Column form of each moved vector/MinHash kernel in
-    operators/ returns exactly what its DuckDB twin returns on the same
-    rows: the sequential dot and L2² folds bit for bit, the hash-rank
-    sample as the same ordered ids, the portable MinHash bands as the
-    same (doc_id, band_idx, band_hash) rows, and the sign packer as
-    the same (vec_id, hi, lo) words."""
+    """The Column form of each shared kernel returns exactly what its
+    DuckDB twin returns on the same rows: the sequential dot and L2²
+    folds bit for bit, the hash-rank sample as the same ordered ids,
+    the portable MinHash bands as the same (doc_id, band_idx,
+    band_hash) rows, the sign packer as the same (vec_id, hi, lo)
+    words, and the half-up cents kernel as the same BIGINT cents."""
     got, want = _TWINS[kernel](spark)
     assert got == want
