@@ -168,9 +168,8 @@ def cents_half_up(values) -> int:
     """Dollars → total integer cents via the class-A half-up kernel
     in IEEE float64 — numpy twin of :func:`half_up_cents`, so a pandas
     state path and the DuckDB oracle agree even on a true sub-cent
-    tie (0.005 → 1 cent both sides). numpy's ``.round()`` is
-    half-EVEN (0.005 → 0 cents), which matched the oracle only while
-    every events.value was 2-dp; the 2-dp property itself and this
+    tie (0.005 → 1 cent both sides), where numpy's half-EVEN
+    ``.round()`` gives 0. The 2-dp property of events.value and this
     kernel's tie behaviour are pinned in
     tests/test_property_kernels.py."""
     return int(cents_half_up_vec(values).sum())

@@ -1,1 +1,1 @@
-from .tables import TABLES, load_table  # noqa: F401
+from .tables import load_table  # noqa: F401

@@ -11,12 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-# The driver's star schema + stream + LLM-pipeline tables (TESTDATA.md).
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
 # Dimension tables small enough to broadcast at any scale factor: the
 # TPC-H dims region/nation are fixed-size; supplier/part grow with SF
 # but stay far below fact-table scale. At 100 TB only region/nation are
