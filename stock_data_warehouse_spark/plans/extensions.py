@@ -1601,16 +1601,11 @@ def x3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = (_hash_sample(n, K_COARSE, _H_CENT)
              .select(F.col("vec_id").alias("cid"),
                      F.col("e").alias("ce"), F.col("nrm").alias("cnrm")))
-    scored = (n.repartition(spark.sparkContext.defaultParallelism,
-                            "vec_id")
-               .crossJoin(F.broadcast(cent)))
     cos_c = (_dot(F.col("e"), F.col("ce"))
              / (F.col("nrm") * F.col("cnrm")))
-    wassign = Window.partitionBy("vec_id").orderBy(
-        cos_c.desc(), F.col("cid"))
-    assigned = (scored.withColumn("rc", F.row_number().over(wassign))
-                      .filter(F.col("rc") == 1)
-                      .select("vec_id", "e", "nrm", "cid"))
+    assigned = (_cos_argmax(n, cent, "vec_id", cos_c, "nc", "cid", "nrm",
+                            "e")
+                .select("vec_id", "b.e", "b.nrm", "b.cid"))
     a, b = assigned.alias("a"), assigned.alias("b")
     cos = (_dot(F.col("a.e"), F.col("b.e"))
            / (F.col("a.nrm") * F.col("b.nrm")))
@@ -2480,16 +2475,11 @@ def x2_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = (_hash_sample(n, K_COARSE, _H_CENT)
              .select(F.col("vec_id").alias("cid"),
                      F.col("e").alias("ce"), F.col("nrm").alias("cnrm")))
-    scored = (n.repartition(spark.sparkContext.defaultParallelism,
-                            "vec_id")
-               .crossJoin(F.broadcast(cent)))
     cos_c = (_dot(F.col("e"), F.col("ce"))
              / (F.col("nrm") * F.col("cnrm")))
-    wassign = Window.partitionBy("vec_id").orderBy(
-        cos_c.desc(), F.col("cid"))
-    assigned = (scored.withColumn("rc", F.row_number().over(wassign))
-                      .filter(F.col("rc") == 1)
-                      .select("vec_id", "e", "nrm", "cid"))
+    assigned = (_cos_argmax(n, cent, "vec_id", cos_c, "nc", "cid", "nrm",
+                            "e")
+                .select("vec_id", "b.e", "b.nrm", "b.cid"))
     a, b = assigned.alias("a"), assigned.alias("b")
     cos = (_dot(F.col("a.e"), F.col("b.e"))
            / (F.col("a.nrm") * F.col("b.nrm")))

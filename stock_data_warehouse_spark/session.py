@@ -85,20 +85,83 @@ JIT
   ``local[N]`` the driver also runs the tasks, which is why the posture
   was chosen at sf0.1 as well as at sf0.01.
 - **Cost.** ``setup_s`` rose from 12.8 to 14.1 s over the same 10
-  corpus pairs (flat on ``warehouse_queries``); it has not been split
-  by phase yet.
+  corpus pairs (flat on ``warehouse_queries``). Split by phase over
+  further corpus pairs, JVM start was flat (``session.start_s`` median
+  8.51 s with the flags, 8.39 s without) and the first lineitem scan
+  read 5.80 against 5.24 s: what rise there is sits in that scan's
+  code generation and reader classes, not in JVM start.
+
+Class-data sharing
+------------------
+
+- **What it saves.** A cold driver JVM spends most of its start
+  loading, parsing and verifying Spark's classes. A JDK 17 dynamic
+  AppCDS archive keeps them parsed and verified in a file the JVM maps
+  at start, which roughly halves ``session.start_s`` (CHANGES.md has
+  the measured pairs). Only a driver JVM that ``get_spark`` launches
+  gets it; executors, a running session and a caller's
+  ``spark.driver.extraJavaOptions`` (still appended last) are
+  untouched, and no plan changes.
+- **Where it lives.** ``$XDG_CACHE_HOME/stock_data_warehouse_spark/cds``
+  (``~/.cache`` when that is unset), never in the checkout. An archive
+  is named by its key, a hash of the JDK build ``spark-class`` runs
+  (the JDK's ``release`` file) and of the ``$SPARK_HOME/jars``
+  listing, so a JDK or Spark upgrade starts a new one. Old archives
+  are not pruned: clear the cache with ``rm -rf`` on that directory.
+- **First use.** With no ``<key>.jsa`` the JVM dumps its loaded classes
+  at exit (``-XX:ArchiveClassesAtExit``) to ``<key>.<pid>.part``. An
+  exit hook in the Python process closes the gateway's stdin if the
+  JVM still runs, waits up to ``_DUMP_WAIT_S`` for it, and renames the
+  part onto ``<key>.jsa`` only if the JVM exited with 0; otherwise it
+  removes the part. A later start removes parts whose writer is dead.
+  JDK 17 dies of SIGBUS mapping a truncated archive, even under the
+  default ``-Xshare:auto``, so no JVM is given a file that did not
+  arrive by that rename. That first process pays once per machine and
+  JDK/Spark install: its JVM takes ~10–15 s longer to exit, and its own
+  start is no faster than without an archive. Whichever JVM builds the
+  archive serves later starts: one dumped by a bare start and stop
+  gave ``warehouse_queries`` a ``setup_s`` near 4.7 s, one dumped by a
+  full benchmark run 3.6–4.5 s, against ~8.2 s without. So nothing
+  ever rebuilds an archive that exists.
+- **Later starts** map it with ``-XX:SharedArchiveFile``. Every CDS
+  start also passes ``-Xlog:cds=off``: a dump otherwise prints over a
+  thousand ``[warning][cds]`` lines (pre-JDK-6 and signed-jar classes
+  it skips) to the JVM's stdout.
+- **Why ``SPARK_CONF_DIR`` moves.** JDK 17 refuses an archive when a
+  non-empty directory is on the classpath, and the launcher puts the
+  conf dir there. When ``SPARK_CONF_DIR`` is unset and
+  ``$SPARK_HOME/conf`` holds only ``*.template`` files (which Spark
+  never reads), it is pointed at the cache's empty ``conf`` directory.
+  The archive records that path, so it must be the same at every
+  start; a child process that inherits it keeps it. A conf dir with
+  real files in it, or a cache that cannot be created or written,
+  starts the JVM exactly as without this section.
+- **JDK 19 and later** do all of this in the JVM:
+  ``-XX:+AutoCreateSharedArchive -XX:SharedArchiveFile=<key>.jsa``.
+  ``_add_cds_flags`` collapses to that flag on upgrade.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
 import os
+import shutil
+import subprocess
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 #: The driver JVM's JIT posture (module docstring, "JIT").
 JIT_FLAGS = ("-XX:Tier4InvocationThreshold=50000",
              "-XX:Tier4MinInvocationThreshold=6000",
              "-XX:Tier4CompileThreshold=150000")
+
+#: Seconds the exit hook waits for an archive-dumping JVM to exit
+#: (module docstring, "Class-data sharing").
+_DUMP_WAIT_S = 120
 
 _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -166,11 +229,126 @@ def get_spark(app_name: str = "stock-data-warehouse-spark",
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)
+    part = None
+    if (SparkContext._gateway is None
+            and "PYSPARK_GATEWAY_PORT" not in os.environ):
+        part = _add_cds_flags(conf)  # only for a JVM this call launches
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if part is not None:
+        atexit.register(_publish_archive, SparkContext._gateway.proc,
+                        part, os.getpid())
     _quiet_windowexec_warning(spark)
     return spark
+
+
+def _cds_cache_dir() -> str:
+    """Where archives are kept: ``$XDG_CACHE_HOME`` (when absolute),
+    else ``~/.cache``, under ``stock_data_warehouse_spark/cds``."""
+    base = os.environ.get("XDG_CACHE_HOME", "")
+    if not os.path.isabs(base):
+        base = os.path.join(os.path.expanduser("~"), ".cache")
+    return os.path.join(base, "stock_data_warehouse_spark", "cds")
+
+
+def _cds_key(spark_home: str) -> str:
+    """The archive's key: the JDK build ``spark-class`` will run (its
+    ``release`` file) and the ``$SPARK_HOME/jars`` listing."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = (os.path.join(java_home, "bin", "java") if java_home
+            else shutil.which("java"))
+    if java is None:
+        raise FileNotFoundError("java")
+    java = os.path.realpath(java)
+    with open(os.path.join(os.path.dirname(os.path.dirname(java)),
+                           "release"), "rb") as fh:
+        release = fh.read()
+    jars = sorted((e.name, e.stat().st_size)
+                  for e in os.scandir(os.path.join(spark_home, "jars")))
+    digest = hashlib.sha256(java.encode() + b"\0" + release
+                            + repr(jars).encode())
+    return digest.hexdigest()[:20]
+
+
+def _add_cds_flags(conf: dict[str, str]) -> str | None:
+    """Append the class-data-sharing flags to the driver JVM's
+    ``defaultJavaOptions`` in ``conf`` (module docstring, "Class-data
+    sharing"), for a JVM this process is about to launch.
+
+    Maps ``<key>.jsa`` when it exists; otherwise the JVM dumps one to
+    ``<key>.<pid>.part`` at exit, and the part's path is returned for
+    ``_publish_archive``. Adds nothing, and changes no environment,
+    when the conf dir would put a non-empty directory on the classpath
+    or the cache cannot be created or written. On JDK 19 or later all
+    of this collapses to ``-XX:+AutoCreateSharedArchive
+    -XX:SharedArchiveFile=<key>.jsa``."""
+    try:
+        spark_home = _find_spark_home()
+        cache = _cds_cache_dir()
+        empty = os.path.join(cache, "conf")
+        conf_dir = os.environ.get("SPARK_CONF_DIR")
+        if conf_dir is None:
+            default = os.path.join(spark_home, "conf")
+            names = os.listdir(default) if os.path.isdir(default) else []
+            if not all(n.endswith(".template") for n in names):
+                return None
+        elif conf_dir != empty:  # the caller's, not an earlier start's
+            return None
+        os.makedirs(empty, exist_ok=True)
+        if os.listdir(empty) or not os.access(cache, os.W_OK):
+            return None
+        key = _cds_key(spark_home)
+        _sweep_parts(cache)
+    except OSError:
+        return None
+    os.environ["SPARK_CONF_DIR"] = empty
+    jsa = os.path.join(cache, f"{key}.jsa")
+    if os.path.isfile(jsa):
+        flag, part = f"-XX:SharedArchiveFile={jsa}", None
+    else:
+        part = os.path.join(cache, f"{key}.{os.getpid()}.part")
+        flag = f"-XX:ArchiveClassesAtExit={part}"
+    opts = "spark.driver.defaultJavaOptions"
+    conf[opts] = " ".join(o for o in (conf.get(opts), flag, "-Xlog:cds=off")
+                          if o)
+    return part
+
+
+def _sweep_parts(cache: str) -> None:
+    """Remove the part files whose writer process is gone: it died
+    before it could publish or unlink them."""
+    for name in os.listdir(cache):
+        pid = name.rsplit(".", 2)[-2] if name.endswith(".part") else ""
+        if not pid.isdigit():
+            continue
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            with contextlib.suppress(OSError):
+                os.unlink(os.path.join(cache, name))
+        except OSError:  # alive, but another user's
+            pass
+
+
+def _publish_archive(proc: subprocess.Popen, part: str, owner: int) -> None:
+    """Exit hook of the process whose JVM dumps ``part``: end the JVM
+    if it is still running, then rename the part onto ``<key>.jsa`` if
+    the JVM exited with 0, else remove it. A JVM is only ever pointed
+    at a file that reached its name by this rename: JDK 17 dies of
+    SIGBUS mapping a truncated archive."""
+    if os.getpid() != owner:  # a forked child inherited the hook
+        return
+    if proc.poll() is None:
+        with contextlib.suppress(OSError):
+            proc.stdin.close()
+        with contextlib.suppress(subprocess.TimeoutExpired):
+            proc.wait(timeout=_DUMP_WAIT_S)
+    with contextlib.suppress(OSError):
+        if proc.returncode == 0:
+            os.replace(part, part.rsplit(".", 2)[0] + ".jsa")
+        else:
+            os.unlink(part)
 
 
 def codegen_compiles(spark: SparkSession) -> int:

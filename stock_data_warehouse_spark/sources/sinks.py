@@ -1405,7 +1405,6 @@ def s24_dynamic_overwrite(spark: SparkSession,
     untouched hashes equal AND the target's hash changed. Values:
     the final table must equal the plain batch expectation with the
     one day doubled — oracle-exact end to end."""
-    from ..operators.checkpoint import ckpt as _ckpt
     out = _mkdtemp(prefix="s24_dynover_")
     table = os.path.join(out, "events_by_day")
     ev = load_table(spark, sf_dir, "events")
